@@ -516,8 +516,8 @@ def generate_page_adversarial(doc_id: int, text: str, noisy: bool = False,
                 # 70%-overlap merge swallows rail words into the headline
                 # and scrambles the derivable truth)
                 avail = RAIL_X - GUTTER - x0s[1]
-                h_tcw = min(p["title_size"] * 3 // 5,
-                            avail // max(len(w) for w in headline2))
+                h_tcw = max(min(p["title_size"] * 3 // 5,
+                                avail // max(len(w) for w in headline2)), 1)
                 h_lines = _wrap_words(headline2, max(avail // h_tcw, 4),
                                       doc_id, allow_hyphen=False)
                 t2 = em.block(h_lines, x0s[1], y, p["title_size"], h_tcw,
@@ -549,8 +549,8 @@ def generate_page_adversarial(doc_id: int, text: str, noisy: bool = False,
             # narrow ragged) column into the rail, else the fix path merges
             # rail boilerplate into it and words vanish from the truth
             avail_c = RAIL_X - GUTTER - x0
-            ccw = min(cs * 3 // 5,
-                      avail_c // max(len(w) for w in caption_words))
+            ccw = max(min(cs * 3 // 5,
+                          avail_c // max(len(w) for w in caption_words)), 1)
             c_lines = _wrap_words(caption_words, max(avail_c // ccw, 4),
                                   doc_id, allow_hyphen=False)
             cb = em.block(c_lines, x0, last_col_bottom + img_h + s // 2,

@@ -28,16 +28,21 @@ from .analyzer import analyze_text
 from .classify import boilerplate_mask, categorize_blocks
 from .doc import Document
 from .emit import article_to_txt, assemble_article, document_text
+from .fix import clean_doc
 from .hocr import parse_hocr
 from .order import graph_isolate_articles, sort_topologic_order, topologic_order_context
 
 __all__ = ["extract_document", "extract_html"]
 
 
-def extract_document(doc: Document, conf: int = 10) -> dict:
-    """Run stages 2–6 over a parsed document.  Returns a plain dict (arrow
-    friendly): url, text (normalized), raw_text (byte-parity artifact),
-    reading order, spans, per-article rows, and layout stats."""
+def extract_document(doc: Document, conf: int = 10, clean: bool = False) -> dict:
+    """Run stages 2–6 over a parsed document, after the §2.9 fix suite
+    (``kernels.fix.clean_doc`` — the reference's ``clean_ocr`` order) when
+    ``clean``.  Returns a plain dict (arrow friendly): url, text
+    (normalized), raw_text (byte-parity artifact), reading order, spans,
+    per-article rows, and layout stats."""
+    if clean:
+        doc = clean_doc(doc, conf=conf)
     analysis = categorize_blocks(doc, conf=conf)
     bp = boilerplate_mask(doc)
     main_idx = [i for i in range(doc.n_blocks()) if not bp[i]]
@@ -127,11 +132,5 @@ def extract_document(doc: Document, conf: int = 10) -> dict:
 
 
 def extract_html(url: str, html: bytes, conf: int = 10, clean: bool = False) -> dict:
-    """Stage 1 + 2–6: parse, optionally run the §2.9 fix suite
-    (``kernels.fix.clean_doc`` — the reference's ``clean_ocr`` order), then
-    extract."""
-    doc = parse_hocr(html, url=url)
-    if clean:
-        from .fix import clean_doc
-        doc = clean_doc(doc, conf=conf)
-    return extract_document(doc, conf=conf)
+    """Stage 1 + 2–6: parse, then :func:`extract_document`."""
+    return extract_document(parse_hocr(html, url=url), conf, clean)

@@ -22,7 +22,6 @@ Everything is deterministic float64 numpy.
 
 from __future__ import annotations
 
-import os
 from functools import lru_cache
 from math import comb
 
@@ -83,36 +82,6 @@ def _cholesky_band(n: int, lmbda: float, order: int) -> tuple:
     return tuple(map(tuple, lband))
 
 
-def _factor_cache_dir() -> str | None:
-    """Shared on-disk home for dense inverses — the single-box stand-in for
-    broadcasting precomputed smoother factors to executors (on a cluster
-    these ~6 MB arrays would ship once as a broadcast variable; here every
-    fresh Python worker process would otherwise pay the same O(n³)
-    inversions).  Purely a cache of a deterministic pure function of
-    (n, λ, d) — loads are bit-identical to recomputation.
-
-    The default path is per-user (uid suffix) and created 0o700, and an
-    existing directory must be owned by us and non-world/group-writable —
-    otherwise another local user could pre-create the dir and plant arrays
-    under predictable keys (CWE-379).  Loaded arrays are shape-checked at
-    the load site as a second line of defense."""
-    import tempfile
-    d = os.environ.get("OSDOCR_FACTOR_CACHE")
-    if d == "off":
-        return None
-    if d is None:
-        uid = os.getuid() if hasattr(os, "getuid") else "na"
-        d = os.path.join(tempfile.gettempdir(), f"osdocr_whittaker_v1_{uid}")
-    try:
-        os.makedirs(d, mode=0o700, exist_ok=True)
-        st = os.stat(d)
-        if hasattr(os, "getuid") and (st.st_uid != os.getuid() or st.st_mode & 0o022):
-            return None
-        return d
-    except OSError:
-        return None
-
-
 @lru_cache(maxsize=24)
 def _dense_inverse(n: int, lmbda: float, order: int) -> np.ndarray:
     """Dense (I + λDᵀD)⁻¹ for histogram-sized systems: one cached O(n³)
@@ -121,16 +90,6 @@ def _dense_inverse(n: int, lmbda: float, order: int) -> np.ndarray:
     cache hit rate is ~100% after warmup.  The system matrix is assembled
     from its analytic band (O(n·d)) — building it via ``DᵀD`` matmul costs
     3× the inversion itself at n≈1000."""
-    cache_dir = _factor_cache_dir()
-    fname = None
-    if cache_dir is not None:
-        fname = os.path.join(cache_dir, f"inv_{n}_{lmbda!r}_{order}.npy")
-        try:
-            inv = np.load(fname)
-            if inv.shape == (n, n) and inv.dtype == np.float64:
-                return inv
-        except (OSError, ValueError):
-            pass
     band = _system_band(n, lmbda, order)
     A = np.zeros((n, n), dtype=np.float64)
     idx = np.arange(n)
@@ -139,15 +98,7 @@ def _dense_inverse(n: int, lmbda: float, order: int) -> np.ndarray:
         i = idx[: n - k]
         A[i, i + k] = band[k, : n - k]
         A[i + k, i] = band[k, : n - k]
-    inv = np.linalg.inv(A)
-    if fname is not None:
-        try:
-            tmp = f"{fname}.{os.getpid()}.tmp"
-            np.save(tmp, inv)
-            os.replace(tmp, fname)  # atomic: concurrent workers race safely
-        except OSError:
-            pass
-    return inv
+    return np.linalg.inv(A)
 
 
 _DENSE_MAX_N = 2048

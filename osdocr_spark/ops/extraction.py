@@ -21,11 +21,18 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from pyspark.sql import functions as _F
+from pyspark.sql import types as T
 
 from ._bounds import MAX_DOC_TOKENS
+from ..kernels.classify import boilerplate_mask, categorize_blocks
+from ..kernels.hocr import parse_hocr, to_hocr
+from ..kernels.info_extract import journal_template_sections
+from ..kernels.order import sort_topologic_order, topologic_order_context
+from ..kernels.order_naive import reading_order_naive, reading_order_naive_context
+from ..kernels.pipeline import extract_document
 from ..spark.jobs import load_pages
 from ..spark.stages import (URL_DOMAINS, articles_from_pages, blocks_from_pages,
-                            extract_pages)
+                            extract_docs, extract_pages, map_docs)
 
 __all__ = ["QUERIES", "ORACLES"]
 
@@ -82,27 +89,12 @@ def extract_text_hocr_roundtrip(spark, sf_dir):
     artifact, ``ocr_tree.py:307-382``), re-parse the WRITTEN bytes and
     extract.  Byte-identical text through the write→read cycle promotes the
     sink's fidelity from a pytest roundtrip to a driver-oracled row."""
-    from collections.abc import Iterator
 
-    import pandas as pd
-    from pyspark.sql import types as T
+    def load(url, html):
+        return parse_hocr(to_hocr(parse_hocr(bytes(html), url=url)), url=url)
 
-    pages = load_pages(spark, sf_dir)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..kernels.hocr import parse_hocr, to_hocr
-        from ..kernels.pipeline import extract_document
-        for pdf in batches:
-            rows = []
-            for url, html in zip(pdf["url"], pdf["html"]):
-                written = to_hocr(parse_hocr(bytes(html), url=url))
-                r = extract_document(parse_hocr(written, url=url))
-                rows.append((url, r["text"]))
-            yield pd.DataFrame(rows, columns=["url", "text"])
-
-    schema = T.StructType([T.StructField("url", T.StringType()),
-                           T.StructField("text", T.StringType())])
-    return pages.select("url", "html").mapInPandas(run, schema)
+    return (extract_docs(load_pages(spark, sf_dir).select("url", "html"), load)
+            .select("url", "text"))
 
 
 def extract_text_adversarial(spark, sf_dir):
@@ -161,37 +153,22 @@ def order_paths_agree(spark, sf_dir):
     naive path and the context naive path (``order_naive.py``, legacy) must
     produce identical orders on the corpus — three independent algorithms
     corroborating the reading order the byte-parity oracle depends on."""
-    from collections.abc import Iterator
 
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    pages = load_pages(spark, sf_dir)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..kernels.classify import boilerplate_mask, categorize_blocks
-        from ..kernels.hocr import parse_hocr
-        from ..kernels.order import sort_topologic_order, topologic_order_context
-        from ..kernels.order_naive import (reading_order_naive,
-                                           reading_order_naive_context)
-        for pdf in batches:
-            rows = []
-            for url, html in zip(pdf["url"], pdf["html"]):
-                doc = parse_hocr(bytes(html), url=url)
-                categorize_blocks(doc)
-                bp = boilerplate_mask(doc)
-                main = [i for i in range(doc.n_blocks()) if not bp[i]]
-                graph = topologic_order_context(doc, main)
-                go = sort_topologic_order(doc, graph, sort_weight=True) if graph else []
-                rows.append((url,
-                             reading_order_naive(doc, main) == go,
-                             reading_order_naive_context(doc, main) == go))
-            yield pd.DataFrame(rows, columns=["url", "naive_matches", "context_matches"])
+    def per_doc(url, html, pid):
+        doc = parse_hocr(bytes(html), url=url)
+        categorize_blocks(doc)
+        bp = boilerplate_mask(doc)
+        main = [i for i in range(doc.n_blocks()) if not bp[i]]
+        graph = topologic_order_context(doc, main)
+        go = sort_topologic_order(doc, graph, sort_weight=True) if graph else []
+        return [(url,
+                 reading_order_naive(doc, main) == go,
+                 reading_order_naive_context(doc, main) == go)]
 
     schema = T.StructType([T.StructField("url", T.StringType()),
                            T.StructField("naive_matches", T.BooleanType()),
                            T.StructField("context_matches", T.BooleanType())])
-    return pages.select("url", "html").mapInPandas(run, schema)
+    return map_docs(load_pages(spark, sf_dir).select("url", "html"), per_doc, schema)
 
 
 _O_ORDER_AGREE = f"""
@@ -580,30 +557,17 @@ def extract_journal_template(spark, sf_dir):
     landed in column i (the pipeline's span-attribution contract), ``footer``
     = the footer nav.  The formatted-dump variant (banners + article
     pretty-prints) is pinned by ``tests/test_info_extract.py`` goldens."""
-    from collections.abc import Iterator
 
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    pages = load_pages(spark, sf_dir)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..kernels.hocr import parse_hocr
-        from ..kernels.info_extract import journal_template_sections
-        from ..kernels.pipeline import extract_document
-        for pdf in batches:
-            rows = []
-            for url, html in zip(pdf["url"], pdf["html"]):
-                doc = parse_hocr(bytes(html), url=url)
-                r = extract_document(doc)
-                for section, text in journal_template_sections(doc, r):
-                    rows.append((url, section, text))
-            yield pd.DataFrame(rows, columns=["url", "section", "text"])
+    def per_doc(url, html, pid):
+        doc = parse_hocr(bytes(html), url=url)
+        r = extract_document(doc)
+        return [(url, section, text)
+                for section, text in journal_template_sections(doc, r)]
 
     schema = T.StructType([T.StructField("url", T.StringType()),
                            T.StructField("section", T.StringType()),
                            T.StructField("text", T.StringType())])
-    return pages.select("url", "html").mapInPandas(run, schema)
+    return map_docs(load_pages(spark, sf_dir).select("url", "html"), per_doc, schema)
 
 
 _NAV_SQL = "[" + ",".join(

@@ -1,9 +1,12 @@
 """Arrow-batched DataFrame stages of the extraction pipeline.
 
-Every stage is a ``mapInPandas`` transformation: one Python invocation per
-Arrow batch (never per row), numpy kernels inside — the execution layout the
-driver's input_hint mandates and the reference itself converges to at its
-hot spots (SURVEY.md §1.3).  Stages are *narrow* (no shuffle); the only
+Every per-document stage runs on one batch driver, :func:`map_docs`: a
+``mapInPandas`` transformation, one Python invocation per Arrow batch (never
+per row), numpy kernels inside — the execution layout the driver's
+input_hint mandates (SURVEY.md §1.3).  :func:`extract_docs` builds the
+``extracted`` row on top of it; the extraction stages differ only in the
+loader that turns an input row into a ``Document`` (html bytes, the layout
+generator, or checkpoint JSON).  Stages are *narrow* (no shuffle); the only
 shuffles in the end-to-end job are the optional salted repartition up front
 and the metrics aggregation at the end.
 
@@ -15,19 +18,23 @@ filters on ``url``/``lang`` push down into the parquet scan.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..kernels.classify import categorize_blocks
 from ..kernels.corpus import generate_page
+from ..kernels.doc import Document
 from ..kernels.hocr import parse_hocr
 from ..kernels.pipeline import extract_document, extract_html
+from ..kernels.serialize import from_json, to_json
 
 __all__ = [
     "PAGES_SCHEMA", "EXTRACTED_SCHEMA", "BLOCKS_SCHEMA", "PARSED_SCHEMA",
+    "map_docs", "extract_docs",
     "pages_from_documents", "extract_pages", "blocks_from_pages",
     "parse_pages", "extract_parsed",
     "salted_repartition", "url_for_doc",
@@ -108,6 +115,45 @@ def pages_from_documents(documents: DataFrame, noisy: bool = False,
     return documents.select("doc_id", "text", "lang").mapInPandas(gen, PAGES_SCHEMA)
 
 
+def map_docs(df: DataFrame, per_doc: Callable[..., Iterable[tuple]],
+             schema: T.StructType) -> DataFrame:
+    """The per-document batch driver every extraction stage runs on.
+
+    ``per_doc(*row, pid)`` receives one input row (the columns of ``df`` in
+    order) plus the task's partition id and returns that row's output rows
+    as tuples in ``schema`` order — zero, one or many (UDTF shape)."""
+    columns = [f.name for f in schema.fields]
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        from pyspark import TaskContext
+        tc = TaskContext.get()
+        pid = tc.partitionId() if tc is not None else -1
+        for pdf in batches:
+            rows = []
+            for row in zip(*(pdf[c] for c in pdf.columns)):
+                rows.extend(per_doc(*row, pid))
+            yield pd.DataFrame(rows, columns=columns)
+
+    return df.mapInPandas(run, schema)
+
+
+def extract_docs(df: DataFrame, load: Callable[..., Document],
+                 clean: bool = False) -> DataFrame:
+    """Rows of ``df`` → ``extracted``: ``load(*row)`` builds each row's
+    :class:`Document` and :func:`~osdocr_spark.kernels.pipeline.extract_document`
+    runs stages 2–6 over it (after the §2.9 fix suite when ``clean``).  The
+    columns before ``spans`` are the kernel result's keys of the same name."""
+    keys = [f.name for f in EXTRACTED_SCHEMA.fields[:-2]]
+
+    def per_doc(*row_pid):
+        *row, pid = row_pid
+        r = extract_document(load(*row), clean=clean)
+        spans = [{"block_id": b, "start": s, "end": e} for b, s, e in r["spans"]]
+        return [(*(r[k] for k in keys), spans, pid)]
+
+    return map_docs(df, per_doc, EXTRACTED_SCHEMA)
+
+
 def extract_pages(pages: DataFrame, clean: bool = False) -> DataFrame:
     """The flagship stage: ``pages`` → ``extracted`` (normalized text +
     byte-parity raw text + spans + layout stats + partition lineage id).
@@ -117,26 +163,8 @@ def extract_pages(pages: DataFrame, clean: bool = False) -> DataFrame:
     Column pruning: selects only ``url, html`` from the input, so Catalyst
     prunes the scan to those columns regardless of the pages schema width.
     """
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
-        tc = TaskContext.get()
-        pid = tc.partitionId() if tc is not None else -1
-        for pdf in batches:
-            rows = []
-            for url, html in zip(pdf["url"], pdf["html"]):
-                r = extract_html(url, bytes(html), clean=clean)
-                rows.append((
-                    r["url"], r["text"], r["raw_text"], r["n_blocks"],
-                    r["n_main_blocks"], r["n_articles"], r["n_words"],
-                    r["normal_text_size"], r["detected_columns"],
-                    r["reading_order"],
-                    [{"block_id": b, "start": s, "end": e} for b, s, e in r["spans"]],
-                    pid,
-                ))
-            yield pd.DataFrame(rows, columns=[f.name for f in EXTRACTED_SCHEMA.fields])
-
-    return pages.select("url", "html").mapInPandas(run, EXTRACTED_SCHEMA)
+    return extract_docs(pages.select("url", "html"),
+                        lambda url, html: parse_hocr(bytes(html), url=url), clean)
 
 
 def extract_documents_fused(documents: DataFrame) -> DataFrame:
@@ -151,26 +179,11 @@ def extract_documents_fused(documents: DataFrame) -> DataFrame:
     general-purpose stage for pre-materialized pages tables.
     """
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
-        tc = TaskContext.get()
-        pid = tc.partitionId() if tc is not None else -1
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                url = url_for_doc(int(doc_id))
-                r = extract_html(url, generate_page(int(doc_id), text))
-                rows.append((
-                    r["url"], r["text"], r["raw_text"], r["n_blocks"],
-                    r["n_main_blocks"], r["n_articles"], r["n_words"],
-                    r["normal_text_size"], r["detected_columns"],
-                    r["reading_order"],
-                    [{"block_id": b, "start": s, "end": e} for b, s, e in r["spans"]],
-                    pid,
-                ))
-            yield pd.DataFrame(rows, columns=[f.name for f in EXTRACTED_SCHEMA.fields])
+    def load(doc_id, text):
+        doc_id = int(doc_id)
+        return parse_hocr(generate_page(doc_id, text), url=url_for_doc(doc_id))
 
-    return documents.select("doc_id", "text").mapInPandas(run, EXTRACTED_SCHEMA)
+    return extract_docs(documents.select("doc_id", "text"), load)
 
 
 ARTICLES_SCHEMA = T.StructType([
@@ -186,16 +199,11 @@ def articles_from_pages(pages: DataFrame, clean: bool = False) -> DataFrame:
     joined text body), the ``articles`` output table of SURVEY.md §1.5
     (``Article`` assembly, ``article.py:45-139``)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for url, html in zip(pdf["url"], pdf["html"]):
-                r = extract_html(url, bytes(html), clean=clean)
-                for idx, title, body in r["article_rows"]:
-                    rows.append((url, idx, title, body))
-            yield pd.DataFrame(rows, columns=[f.name for f in ARTICLES_SCHEMA.fields])
+    def per_doc(url, html, pid):
+        r = extract_html(url, bytes(html), clean=clean)
+        return [(url, idx, title, body) for idx, title, body in r["article_rows"]]
 
-    return pages.select("url", "html").mapInPandas(run, ARTICLES_SCHEMA)
+    return map_docs(pages.select("url", "html"), per_doc, ARTICLES_SCHEMA)
 
 
 PARSED_SCHEMA = T.StructType([
@@ -213,79 +221,43 @@ def parse_pages(pages: DataFrame) -> DataFrame:
     a resumable ``parsed`` table so a failed downstream stage never re-pays
     the parse."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
-        from ..kernels.serialize import to_json
-        tc = TaskContext.get()
-        pid = tc.partitionId() if tc is not None else -1
-        for pdf in batches:
-            yield pd.DataFrame({
-                "url": pdf["url"],
-                "doc_json": [to_json(parse_hocr(bytes(h), url=u))
-                             for u, h in zip(pdf["url"], pdf["html"])],
-                "partition_id": pid,
-            })
+    def per_doc(url, html, pid):
+        return [(url, to_json(parse_hocr(bytes(html), url=url)), pid)]
 
-    return pages.select("url", "html").mapInPandas(run, PARSED_SCHEMA)
+    return map_docs(pages.select("url", "html"), per_doc, PARSED_SCHEMA)
 
 
 def extract_parsed(parsed: DataFrame, clean: bool = False) -> DataFrame:
     """Stages 2–6 over a checkpointed ``parsed`` table: deserialize the JSON
     wire format and run analysis → categorize → boilerplate → order →
     articles → emit.  Same output contract as :func:`extract_pages`."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
-        from ..kernels.serialize import from_json
-        tc = TaskContext.get()
-        pid = tc.partitionId() if tc is not None else -1
-        for pdf in batches:
-            rows = []
-            for url, dj in zip(pdf["url"], pdf["doc_json"]):
-                doc = from_json(dj, url=url)
-                if clean:
-                    from ..kernels.fix import clean_doc
-                    doc = clean_doc(doc)
-                r = extract_document(doc)
-                rows.append((
-                    r["url"], r["text"], r["raw_text"], r["n_blocks"],
-                    r["n_main_blocks"], r["n_articles"], r["n_words"],
-                    r["normal_text_size"], r["detected_columns"],
-                    r["reading_order"],
-                    [{"block_id": b, "start": s, "end": e} for b, s, e in r["spans"]],
-                    pid,
-                ))
-            yield pd.DataFrame(rows, columns=[f.name for f in EXTRACTED_SCHEMA.fields])
-
-    return parsed.select("url", "doc_json").mapInPandas(run, EXTRACTED_SCHEMA)
+    return extract_docs(parsed.select("url", "doc_json"),
+                        lambda url, dj: from_json(dj, url=url), clean)
 
 
 def blocks_from_pages(pages: DataFrame, categorize: bool = True) -> DataFrame:
     """UDTF-shaped parse stage: one page row → N block rows with geometry +
     density features (the ``blocks`` intermediate table of SURVEY.md §1.5)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..kernels.classify import categorize_blocks
-        for pdf in batches:
-            rows = []
-            for url, html in zip(pdf["url"], pdf["html"]):
-                doc = parse_hocr(bytes(html), url=url)
-                if categorize and doc.n_blocks():
-                    categorize_blocks(doc)
-                for bi in range(doc.n_blocks()):
-                    wi = doc.words_of(bi)
-                    keys, _, _ = doc.line_table(bi)
-                    l, r, t, b = (int(v) for v in doc.b_box[bi])
-                    rows.append((
-                        url, int(doc.b_id[bi]),
-                        str(doc.b_type[bi]) if doc.b_type[bi] is not None else None,
-                        l, r, t, b, int(len(wi)), int(len(keys)),
-                        float(doc.w_link[wi].mean()) if len(wi) else 0.0,
-                        doc.block_mean_word_height(bi),
-                    ))
-            yield pd.DataFrame(rows, columns=[f.name for f in BLOCKS_SCHEMA.fields])
+    def per_doc(url, html, pid):
+        doc = parse_hocr(bytes(html), url=url)
+        if categorize and doc.n_blocks():
+            categorize_blocks(doc)
+        rows = []
+        for bi in range(doc.n_blocks()):
+            wi = doc.words_of(bi)
+            keys, _, _ = doc.line_table(bi)
+            l, r, t, b = (int(v) for v in doc.b_box[bi])
+            rows.append((
+                url, int(doc.b_id[bi]),
+                str(doc.b_type[bi]) if doc.b_type[bi] is not None else None,
+                l, r, t, b, int(len(wi)), int(len(keys)),
+                float(doc.w_link[wi].mean()) if len(wi) else 0.0,
+                doc.block_mean_word_height(bi),
+            ))
+        return rows
 
-    return pages.select("url", "html").mapInPandas(run, BLOCKS_SCHEMA)
+    return map_docs(pages.select("url", "html"), per_doc, BLOCKS_SCHEMA)
 
 
 def salted_repartition(df: DataFrame, num_partitions: int, salt: int = 0,

@@ -32,6 +32,10 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
+#: the page layouts every document is rendered and extracted in
+VARIANTS = ("plain", "noisy", "multi", "adversarial", "crossed")
+
+
 def _norm(t: str) -> str:
     return re.sub(r"\s+", " ", t).strip()
 
@@ -54,16 +58,15 @@ def check_doc(args: tuple[int, str]) -> list[str]:
     want = _norm(text)
     fails: list[str] = []
 
-    variants = {
-        "plain": generate_page(doc_id, text),
-        "noisy": generate_page(doc_id, text, noisy=True),
-        "multi": generate_page(doc_id, text, multi_article=True),
-        "adversarial": generate_page_adversarial(doc_id, text),
+    variants = dict(zip(VARIANTS, (
+        generate_page(doc_id, text),
+        generate_page(doc_id, text, noisy=True),
+        generate_page(doc_id, text, multi_article=True),
+        generate_page_adversarial(doc_id, text),
         # round-5 crossed gauntlet: fix-suite defects + 2nd-article headline
         # injected INTO the five irregular families, all at once
-        "crossed": generate_page_adversarial(doc_id, text, noisy=True,
-                                             multi_article=True),
-    }
+        generate_page_adversarial(doc_id, text, noisy=True, multi_article=True),
+    ), strict=True))
     results = {}
     for name, html in variants.items():
         r = extract_html(url, html, clean=(name in ("noisy", "crossed")))
@@ -133,14 +136,14 @@ def main() -> int:
     with mp.Pool(procs) as pool:
         all_fails = [f for fl in pool.map(check_doc, rows, chunksize=32) for f in fl]
     dt = time.time() - t0
-    print(f"swept {len(rows)} docs x 5 variants in {dt:.1f}s "
-          f"({4 * len(rows) / dt:.0f} extractions/s, {procs} procs)")
+    print(f"swept {len(rows)} docs x {len(VARIANTS)} variants in {dt:.1f}s "
+          f"({len(VARIANTS) * len(rows) / dt:.0f} extractions/s, {procs} procs)")
     if all_fails:
         print(f"FAIL ({len(all_fails)}):")
         for f in all_fails[:40]:
             print(" ", f)
         return 1
-    print("all checks green: byte parity x5 variants, columns/size exact, "
+    print(f"all checks green: byte parity x{len(VARIANTS)} variants, columns/size exact, "
           "multi-article isolation, span tiling, 3-way order agreement")
     return 0
 

@@ -215,6 +215,37 @@ def test_job_resume_per_stage_no_reparse(spark, tmp_path):
     assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
 
 
+@pytest.mark.parametrize("clean", [False, True])
+def test_document_sources_agree_on_every_column(spark, clean):
+    """The document sources feeding the one extraction driver — html bytes
+    (``extract_pages``), the fused generator (``extract_documents_fused``)
+    and checkpoint JSON (``extract_parsed``) — must yield the same
+    ``extracted`` row per url in every column but the partition lineage id,
+    with and without the fix suite."""
+    from osdocr_spark.spark.jobs import load_pages
+    from osdocr_spark.spark.stages import (EXTRACTED_SCHEMA, extract_documents_fused,
+                                           extract_pages, extract_parsed, parse_pages)
+
+    cols = [f.name for f in EXTRACTED_SCHEMA.fields if f.name != "partition_id"]
+    pages = load_pages(spark, SF, noisy=clean)
+    sources = {
+        "pages": extract_pages(pages, clean=clean),
+        "parsed": extract_parsed(parse_pages(pages), clean=clean),
+    }
+    if not clean:
+        docs = spark.read.parquet(os.path.join(SF, "documents.parquet"))
+        sources["fused"] = extract_documents_fused(docs)
+    got = {name: {r["url"]: r for r in
+                  (r.asDict(recursive=True) for r in df.select(*cols).collect())}
+           for name, df in sources.items()}
+    want = got.pop("pages")
+    assert len(want) == 500
+    for name, rows in got.items():
+        assert rows.keys() == want.keys(), name
+        bad = [u for u in want if rows[u] != want[u]]
+        assert not bad, (name, bad[:5])
+
+
 def test_parallelism_invariance(spark, entry_mod):
     """Same results regardless of partitioning (guards the scaling run)."""
     from pyspark.sql import functions as F

@@ -514,6 +514,19 @@ def test_malformed_inputs_never_raise():
         assert r["n_words"] >= 0
 
 
+def test_adversarial_generator_survives_over_long_words():
+    """Words wider than the headline/caption span once clamped the per-char
+    width to 0 and divided by it; every family, with and without the
+    planted second headline, must render — and render deterministically."""
+    from osdocr_spark.kernels.corpus import generate_page_adversarial
+
+    text = " ".join(["y" * 600] * 80)
+    for doc_id in range(5):
+        for multi in (False, True):
+            page = generate_page_adversarial(doc_id, text, multi_article=multi)
+            assert page == generate_page_adversarial(doc_id, text, multi_article=multi)
+
+
 def test_categorize_vectorized_matches_loop():
     """Exact A/B parity of the vectorized classifier against the sequential
     reference loop (kept as _categorize_blocks_loop) — b_type and both
