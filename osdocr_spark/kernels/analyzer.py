@@ -54,12 +54,8 @@ def get_text_sizes(doc: Document, conf: int = 10,
     if nb == 0 or len(doc.w_text) == 0:
         return out
     conf_ok = doc.w_conf >= conf
-    # not empty(only_text): any confident word-char word in the block
-    nonempty = np.bincount(doc.w_block[conf_ok & doc._w_has_char],
-                           minlength=nb) > 0
-    eligible = np.zeros(nb, dtype=bool)
-    for bi in np.nonzero(nonempty)[0]:
-        eligible[bi] = not doc.block_is_vertical_text(bi, conf=conf)
+    # not empty(only_text) and not vertical text
+    eligible = doc.nonempty_mask(conf) & ~doc.vertical_mask(conf)
     wsel = np.nonzero(conf_ok & eligible[doc.w_block])[0]
     if len(wsel) == 0:
         return out

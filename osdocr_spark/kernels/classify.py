@@ -51,7 +51,7 @@ def categorize_blocks(doc: Document, conf: int = 10, override: bool = False,
 
     Vectorized (round 5, VERDICT r4 item 3): the decision tree evaluates as
     whole-document boolean masks — one metrics bincount, one neighbor
-    matrix, one single-word vertical fast path — instead of per-block
+    matrix, one vertical-text mask — instead of per-block
     Python.  The only order-dependent read in the sequential reference
     semantics is branch 4's "caption directly above" check (a caption
     assigned at j < bi is visible to bi, one at j > bi is not); that is
@@ -104,13 +104,9 @@ def categorize_blocks(doc: Document, conf: int = 10, override: bool = False,
 
     cand = todo & nonT
     b1 = cand & in_ts & ~title_range
-    # vertical-text check only where the elif chain reaches it; the
-    # Document's batch fill resolves single-word blocks (the dense-family
-    # common case) vectorized, the rest through the memoized per-block impl
+    # the elif chain reaches the vertical-text check only past branch 1
     need_v = cand & ~b1
-    vert = np.zeros(n, dtype=bool)
-    for bi in np.nonzero(need_v)[0]:
-        vert[bi] = doc.block_is_vertical_text(int(bi), conf=conf)
+    vert = doc.vertical_mask(conf)
     b2 = need_v & vert
     b3 = need_v & ~vert & (mh > normal) & title_range
     b4 = need_v & ~vert & ~b3 & (mh < normal)

@@ -24,11 +24,22 @@ from . import geometry as g
 
 _WORD_CHAR = re.compile(r"[\w\d]")
 
-# block count at which the one-pass bincount fill of the per-block word
-# metrics beats the lazy per-block slices (interleaved A/B: +8-12% on
-# 130+-block pages; always-on costs ~4% on ~12-block pages, so regular
-# pages keep the lazy path)
-_BATCH_METRICS_MIN_BLOCKS = 32
+def _overlap_vote(grp: np.ndarray, boxes: np.ndarray, size: np.ndarray,
+                  within, n_of: np.ndarray) -> np.ndarray:
+    """Per group (block): do ≥50% of its ``n_of`` members lie ``within``
+    (rng 0.1) the group's largest member, not counting that member itself?
+    The largest is the first maximum of ``size`` in index order (the
+    reference's ``np.argmax``), found by one lexsort over all members."""
+    ng = len(n_of)
+    order = np.lexsort((np.arange(len(grp)), -size, grp))
+    first = np.ones(len(grp), dtype=bool)
+    first[1:] = grp[order][1:] != grp[order][:-1]
+    top_of = np.full(ng, -1, dtype=np.int64)
+    top_of[grp[order][first]] = order[first]
+    hits = within(boxes[top_of[grp]], boxes, rng=0.1)
+    overlapped = np.bincount(grp, weights=hits, minlength=ng) - 1
+    return np.divide(overlapped, n_of, out=np.zeros(ng), where=n_of > 0) >= 0.5
+
 
 #: block type taxonomy (``ocr_tree_analyser.py:1202-1213``)
 BLOCK_TYPES = ("text", "title", "caption", "image", "delimiter", "highlight", "table", "other")
@@ -36,7 +47,17 @@ BLOCK_TYPES = ("text", "title", "caption", "image", "delimiter", "highlight", "t
 
 @dataclass
 class Document:
-    """One parsed page.  Word arrays are aligned and in pre-order."""
+    """One parsed page.  Word arrays are aligned and in pre-order.
+
+    Contract: the arrays are never reassigned after construction, and the
+    word columns and ``b_box`` are never written in place — a mutation
+    builds a new ``Document`` (``fix.clean_doc``, ``translate_doc``,
+    ``scale_doc``).  Every per-block property (``words_of``, ``line_table``,
+    the word metrics, the vertical verdict, ``block_to_text``) is one
+    whole-document pass computed on first use and memoized per ``conf``
+    (and delimiters), so the per-block accessors are index reads.  Only
+    the label columns ``b_id``/``b_type``/``b_start_text``/``b_end_text``
+    are written in place (categorize, id assignment); no memo reads them."""
 
     url: str
     #: (Nw, 4) int64 [left, right, top, bottom]
@@ -75,19 +96,14 @@ class Document:
         self._w_has_char = np.fromiter(
             (bool(_WORD_CHAR.search(t)) for t in self.w_text), dtype=bool, count=len(self.w_text)
         )
-        self._line_cache: dict = {}
-        self._words_cache: dict = {}
-        self._vt_cache: dict = {}
-        self._vt_geom_cache: dict = {}
-        self._mwh_cache: dict = {}
         self._w_len = None
-        self._text_cache: dict = {}
-        self._lines_built: set = set()
+        self._w_nonblank_arr: np.ndarray | None = None
+        self._word_order_memo = None
+        self._line_cache: dict = {}
         self._nonempty_cache: dict = {}
         self._metric_arr_cache: dict = {}
-        self._w_block_sorted: bool | None = None
-        self._vt_built: set = set()
-        self._w_nonblank_arr: np.ndarray | None = None
+        self._vvote: np.ndarray | None = None
+        self._text_cache: dict = {}
 
     def w_nonblank(self) -> np.ndarray:
         """Per-word ``bool(text.strip())`` — computed once, reused by every
@@ -102,24 +118,22 @@ class Document:
     def n_blocks(self) -> int:
         return len(self.b_id)
 
+    def _word_order(self) -> tuple[np.ndarray, np.ndarray]:
+        """``(order, starts)``: the stable argsort of ``w_block`` and the
+        per-block offsets into it — block ``bi``'s words, in pre-order, are
+        ``order[starts[bi]:starts[bi + 1]]``.  The identity on parsed pages
+        (words arrive grouped by block); computed on first use."""
+        if self._word_order_memo is None:
+            order = np.argsort(self.w_block, kind="stable")
+            starts = np.searchsorted(self.w_block[order],
+                                     np.arange(self.n_blocks() + 1))
+            self._word_order_memo = (order, starts)
+        return self._word_order_memo
+
     def words_of(self, bi: int) -> np.ndarray:
-        """Word indices of block ``bi`` in pre-order (memoized).  The parse
-        emits words grouped by block (pre-order), so the common case is a
-        binary-search slice of the sorted ``w_block`` column instead of a
-        whole-table scan per block (r5 dense-page cost); an unsorted table
-        (hand-built test docs) keeps the scan path."""
-        hit = self._words_cache.get(bi)
-        if hit is None:
-            if self._w_block_sorted is None:
-                wb = self.w_block
-                self._w_block_sorted = bool(len(wb) == 0 or (wb[1:] >= wb[:-1]).all())
-            if self._w_block_sorted:
-                s, e = np.searchsorted(self.w_block, [bi, bi + 1])
-                hit = np.arange(s, e)
-            else:
-                hit = np.nonzero(self.w_block == bi)[0]
-            self._words_cache[bi] = hit
-        return hit
+        """Word indices of block ``bi`` in pre-order."""
+        order, starts = self._word_order()
+        return order[starts[bi]:starts[bi + 1]]
 
     # ---------------------------------------------------------- block preds
     def block_is_empty(self, bi: int, conf: int = 0, only_text: bool = False) -> bool:
@@ -169,60 +183,25 @@ class Document:
     # --------------------------------------------------------------- lines
     def line_table(self, bi: int, conf: int = -1):
         """Per-line boxes of a block: returns ``(keys, line_boxes, word_counts)``
-        where keys are (par, line) in first-appearance order.
+        where keys are the block's (par, line) pairs in ascending order.
 
         Lines are the level-4 nodes of the reference tree; their boxes are
         the hulls of their words (the parse stage already guarantees this,
         matching ``text_bound_box_fix`` semantics ``ocr_tree_fix.py:211-256``).
-        Memoized per (block, conf).
-        """
-        hit = self._line_cache.get((bi, conf))
+        An index read into ``_line_hulls(conf)``."""
+        return self._line_hulls(conf)[2][bi]
+
+    def _line_hulls(self, conf: int):
+        """Every line of the page at ``conf`` in one whole-document
+        unique+bincount pass: ``(line_block, line_boxes, tables)`` with the
+        lines in (block, par, line) order and ``tables[bi]`` the block's
+        ``line_table`` slice.  Memoized per conf."""
+        hit = self._line_cache.get(conf)
         if hit is not None:
             return hit
-        if conf not in self._lines_built:
-            # first miss for this conf: build every block's table in ONE
-            # whole-document unique+bincount pass (identical per-block
-            # results; the per-block path below remains as the fallback)
-            self._lines_built.add(conf)
-            self._build_all_line_tables(conf)
-            hit = self._line_cache.get((bi, conf))
-            if hit is not None:
-                return hit
-        wi = self.words_of(bi)
-        if conf >= 0:
-            wi = wi[self.w_conf[wi] >= conf]
-        if len(wi) == 0:
-            hit = (np.empty((0, 2), np.int64), np.empty((0, 4), np.int64), np.empty(0, np.int64))
-            self._line_cache[(bi, conf)] = hit
-            return hit
-        key = self.w_par[wi] * 1_000_000 + self.w_line[wi]
-        uniq, inv = np.unique(key, return_inverse=True)
-        nb = len(uniq)
-        boxes = np.empty((nb, 4), dtype=np.int64)
-        for c, col, fn in ((g.L, 0, np.minimum), (g.R, 1, np.maximum),
-                           (g.T, 2, np.minimum), (g.B, 3, np.maximum)):
-            init = np.full(nb, np.iinfo(np.int64).max if fn is np.minimum else np.iinfo(np.int64).min)
-            fn.at(init, inv, self.w_box[wi, c])
-            boxes[:, c] = init
-        counts = np.bincount(inv, minlength=nb)
-        keys = np.stack([uniq // 1_000_000, uniq % 1_000_000], axis=1)
-        hit = (keys, boxes, counts)
-        self._line_cache[(bi, conf)] = hit
-        return hit
-
-    def _build_all_line_tables(self, conf: int) -> None:
-        """Populate ``_line_cache[(bi, conf)]`` for every block in one
-        whole-document pass (same math as the per-block path)."""
         wi = np.arange(len(self.w_text))
         if conf >= 0:
             wi = wi[self.w_conf >= conf]
-        nb = self.n_blocks()
-        empty = (np.empty((0, 2), np.int64), np.empty((0, 4), np.int64),
-                 np.empty(0, np.int64))
-        if len(wi) == 0:
-            for bi in range(nb):
-                self._line_cache[(bi, conf)] = empty
-            return
         key = (self.w_block[wi] * 1_000_000_000_000
                + self.w_par[wi] * 1_000_000 + self.w_line[wi])
         uniq, inv = np.unique(key, return_inverse=True)
@@ -238,53 +217,18 @@ class Document:
         blk = uniq // 1_000_000_000_000
         rem = uniq % 1_000_000_000_000
         keys = np.stack([rem // 1_000_000, rem % 1_000_000], axis=1)
-        starts = np.searchsorted(blk, np.arange(nb))
-        ends = np.searchsorted(blk, np.arange(nb), side="right")
-        for bi in range(nb):
-            s, e = starts[bi], ends[bi]
-            self._line_cache[(bi, conf)] = (
-                (keys[s:e], boxes[s:e], counts[s:e]) if e > s else empty)
-
-    def _fill_block_metrics(self, conf: int) -> None:
-        """Batch-fill BOTH per-block word metrics for every block at this
-        conf in one vectorized pass (round 4: the per-block slicing loop is
-        a dominant per-block Python cost on >127-block pages; interleaved
-        in-process A/B measured +8–12% dense-page throughput vs the lazy
-        path, ~7% window noise floor disclosed).  Engages only at
-        ``_BATCH_METRICS_MIN_BLOCKS`` where the up-front pass amortizes —
-        small pages keep the lazy per-block path unchanged.
-        Exactness: box coordinates and char counts are integers,
-        so ``np.bincount``'s sequential float64 sums equal the per-block
-        ``.sum()`` exactly (< 2^53) — byte parity is unaffected, only call
-        overhead changes."""
-        nw = len(self.w_text)
-        if self._w_len is None:
-            self._w_len = np.fromiter((len(t) for t in self.w_text),
-                                      np.int64, nw)
-        if conf >= 0 and nw:
-            mask = self.w_conf >= conf
-            wb, box, wl = self.w_block[mask], self.w_box[mask], self._w_len[mask]
-        else:
-            wb, box, wl = self.w_block, self.w_box, self._w_len
-        nb = self.n_blocks()
-        cnt = np.bincount(wb, minlength=nb)
-        hsum = np.bincount(wb, weights=g.height(box), minlength=nb) if len(wb) \
-            else np.zeros(nb)
-        wsum = np.bincount(wb, weights=g.width(box), minlength=nb) if len(wb) \
-            else np.zeros(nb)
-        csum = np.bincount(wb, weights=wl, minlength=nb) if len(wb) \
-            else np.zeros(nb)
-        c = self._mwh_cache
-        for bi in range(nb):
-            c[(bi, conf)] = float(hsum[bi]) / cnt[bi] if cnt[bi] else 0.0
-            c[(bi, conf, "cw")] = float(wsum[bi]) / csum[bi] if csum[bi] else 0.0
+        bounds = np.searchsorted(blk, np.arange(self.n_blocks() + 1)).tolist()
+        tables = [(keys[s:e], boxes[s:e], counts[s:e])
+                  for s, e in zip(bounds[:-1], bounds[1:])]
+        hit = self._line_cache[conf] = (blk, boxes, tables)
+        return hit
 
     def block_metric_arrays(self, conf: int = -1) -> tuple[np.ndarray, np.ndarray]:
-        """Whole-document (mean_word_height, char_mean_width) arrays — the
-        vectorized twin of the per-block accessors (same bincount math as
-        ``_fill_block_metrics``; elementwise IEEE division equals the
-        scalar ``float(hsum)/cnt`` bit-for-bit, so parity is unaffected).
-        Memoized per conf; used by the vectorized classifier."""
+        """Whole-document (mean_word_height, char_mean_width) arrays, one
+        bincount pass per conf (memoized).  Box coordinates and char counts
+        are integers, so ``np.bincount``'s float64 sums equal the
+        reference's per-block ``.sum()`` exactly (< 2^53), and elementwise
+        IEEE division equals the scalar ``float(hsum)/cnt`` bit-for-bit."""
         hit = self._metric_arr_cache.get(conf)
         if hit is not None:
             return hit
@@ -310,45 +254,12 @@ class Document:
         return hit
 
     def block_mean_word_height(self, bi: int, conf: int = -1) -> float:
-        """``calculate_mean_height(level=5)`` (``ocr_tree.py:530-539``).
-        Memoized per (block, conf) like ``block_is_vertical_text`` — classify,
-        ordering and emission all ask, and the word table is immutable for
-        this Document's lifetime (mutation rebuilds the Document).  First
-        miss for a conf batch-fills every block (``_fill_block_metrics``)."""
-        hit = self._mwh_cache.get((bi, conf))
-        if hit is not None:
-            return hit
-        if self.n_blocks() >= _BATCH_METRICS_MIN_BLOCKS:
-            self._fill_block_metrics(conf)
-            return self._mwh_cache[(bi, conf)]
-        wi = self.words_of(bi)
-        if conf >= 0:
-            wi = wi[self.w_conf[wi] >= conf]
-        if len(wi) == 0:
-            out = 0.0
-        else:
-            h = g.height(self.w_box[wi])
-            out = float(h.sum()) / len(h)
-        self._mwh_cache[(bi, conf)] = out
-        return out
+        """``calculate_mean_height(level=5)`` (``ocr_tree.py:530-539``)."""
+        return float(self.block_metric_arrays(conf)[0][bi])
 
     def block_char_mean_width(self, bi: int, conf: int = -1) -> float:
-        """``calculate_character_mean_width`` (``ocr_tree.py:550-559``).
-        Memoized per (block, conf) — immutable word table, batch-filled on
-        first miss, see ``block_mean_word_height``."""
-        hit = self._mwh_cache.get((bi, conf, "cw"))
-        if hit is not None:
-            return hit
-        if self.n_blocks() >= _BATCH_METRICS_MIN_BLOCKS:
-            self._fill_block_metrics(conf)
-            return self._mwh_cache[(bi, conf, "cw")]
-        wi = self.words_of(bi)
-        if conf >= 0:
-            wi = wi[self.w_conf[wi] >= conf]
-        nchars = sum(len(self.w_text[i]) for i in wi) if len(wi) else 0
-        out = float(g.width(self.w_box[wi]).sum()) / nchars if nchars else 0.0
-        self._mwh_cache[(bi, conf, "cw")] = out
-        return out
+        """``calculate_character_mean_width`` (``ocr_tree.py:550-559``)."""
+        return float(self.block_metric_arrays(conf)[1][bi])
 
     def block_is_text_size(self, bi: int, text_size: float, mean_height: float | None = None,
                            rng: float = 0.3, conf: int = -1) -> bool:
@@ -357,95 +268,29 @@ class Document:
         return text_size * (1 - rng) <= mh <= text_size * (1 + rng)
 
     def block_is_vertical_text(self, bi: int, conf: int = 0) -> bool:
-        """``is_vertical_text`` (``ocr_tree.py:613-657``): one line → word
-        aspect / x-overlap vote; multi-line → y-overlap vote vs tallest.
-        Memoized per (block, conf): classify and ordering both ask, and the
-        word table is immutable for this Document's lifetime (mutation
-        rebuilds the Document, see ``fix.py``)."""
-        hit = self._vt_cache.get((bi, conf))
-        if hit is not None:
-            return hit
-        if (self.n_blocks() >= _BATCH_METRICS_MIN_BLOCKS
-                and conf not in self._vt_built):
-            # first miss at this conf on a block-heavy page: resolve every
-            # single-word block (the dense-family common case) in one
-            # vectorized pass; multi-word blocks keep the per-block impl
-            self._vt_built.add(conf)
-            self._fill_vertical_cache(conf)
-            hit = self._vt_cache.get((bi, conf))
-            if hit is not None:
-                return hit
-        hit = self._vertical_text_impl(bi, conf)
-        self._vt_cache[(bi, conf)] = hit
-        return hit
+        """``is_vertical_text`` (``ocr_tree.py:613-657``) — an index read
+        into ``vertical_mask``."""
+        return bool(self.nonempty_mask(conf)[bi] and self._vertical_vote()[bi])
 
-    def _fill_vertical_cache(self, conf: int) -> None:
-        """Batch single-word vertical verdicts: a one-word block's vote
-        reduces to ``height >= 2·width`` on its only word (impl's
-        ``len(wi)==1`` arm), gated by the non-empty check — both whole-doc
-        vectorized.  Identical booleans to the per-block impl."""
-        n = self.n_blocks()
-        if len(self.w_block) == 0:
-            return
-        wcnt = np.bincount(self.w_block, minlength=n)
-        w_of = np.full(n, -1, dtype=np.int64)
-        w_of[self.w_block] = np.arange(len(self.w_block))
-        si = np.nonzero(wcnt == 1)[0]
-        if len(si) == 0:
-            return
-        wb = self.w_box[w_of[si]]
-        v = (g.height(wb) >= g.width(wb) * 2) & self.nonempty_mask(conf)[si]
-        c = self._vt_cache
-        for bi, vv in zip(si.tolist(), v.tolist()):
-            c[(bi, conf)] = vv
+    def vertical_mask(self, conf: int = 0) -> np.ndarray:
+        """Whole-document ``is_vertical_text`` (``ocr_tree.py:613-657``):
+        a non-empty block (at ``conf``) whose geometry votes vertical."""
+        return self.nonempty_mask(conf) & self._vertical_vote()
 
-    def _vertical_text_impl(self, bi: int, conf: int) -> bool:
-        if self.block_is_empty(bi, conf, only_text=True):
-            return False
-        # the geometric vote below never reads conf (line_table and words_of
-        # are unfiltered, matching the reference) — memoize it per block so
-        # a second conf re-evaluates only the emptiness gate above
-        hit = self._vt_geom_cache.get(bi)
-        if hit is None:
-            if (self.n_blocks() >= _BATCH_METRICS_MIN_BLOCKS
-                    and "all" not in self._vt_built):
-                self._vt_built.add("all")
-                self.words_of(0)  # resolve _w_block_sorted
-                if self._w_block_sorted:
-                    self._fill_vertical_geom_all()
-                    hit = self._vt_geom_cache.get(bi)
-                    if hit is not None:
-                        return hit
-            hit = self._vertical_geom(bi)
-            self._vt_geom_cache[bi] = hit
-        return hit
-
-    def _fill_vertical_geom_all(self) -> None:
-        """Batch the geometric vertical vote for EVERY block in one pass
-        (sorted word table): the unfiltered line hulls rebuild flat (same
-        ufunc.at math as ``_build_all_line_tables``), the tallest line /
-        widest word per block comes from a first-max lexsort (``np.argmax``
-        picks the first maximum — same tie-break), and the overlap votes
-        evaluate as whole-table masks + bincounts.  Identical booleans to
-        ``_vertical_geom`` (parity test in tests/test_kernels.py)."""
+    def _vertical_vote(self) -> np.ndarray:
+        """The geometric vertical vote of every block in one pass (memoized;
+        the reference reads unfiltered lines and words, so it has no conf):
+        one line → a one-word block is vertical when ``height >= 2·width``,
+        otherwise its words vote on overlapping the widest word
+        horizontally; several lines → the lines vote on overlapping the
+        tallest line vertically.  Ties go to the first maximum in word /
+        (par, line) order, so the verdict does not depend on how the word
+        table is ordered."""
+        if self._vvote is not None:
+            return self._vvote
         nb = self.n_blocks()
         wb = self.w_block
-        cache = self._vt_geom_cache
-        if len(wb) == 0:
-            for bi in range(nb):
-                cache.setdefault(bi, False)
-            return
-        key = wb * 1_000_000_000_000 + self.w_par * 1_000_000 + self.w_line
-        uniq, inv = np.unique(key, return_inverse=True)
-        nl = len(uniq)
-        lbox = np.empty((nl, 4), dtype=np.int64)
-        for c, fn in ((g.L, np.minimum), (g.R, np.maximum),
-                      (g.T, np.minimum), (g.B, np.maximum)):
-            init = np.full(nl, np.iinfo(np.int64).max if fn is np.minimum
-                           else np.iinfo(np.int64).min)
-            fn.at(init, inv, self.w_box[:, c])
-            lbox[:, c] = init
-        lblk = uniq // 1_000_000_000_000
+        lblk, lbox, _ = self._line_hulls(-1)
         nlines = np.bincount(lblk, minlength=nb)
         wcnt = np.bincount(wb, minlength=nb)
         verdict = np.zeros(nb, dtype=bool)  # nlines == 0 → False
@@ -453,7 +298,7 @@ class Document:
         # single-word blocks: aspect test on the only word
         w_of = np.full(nb, -1, dtype=np.int64)
         w_of[wb] = np.arange(len(wb))
-        sw = np.nonzero((wcnt == 1) & (nlines == 1))[0]
+        sw = np.nonzero(wcnt == 1)[0]
         if len(sw):
             wbx = self.w_box[w_of[sw]]
             verdict[sw] = g.height(wbx) >= g.width(wbx) * 2
@@ -461,152 +306,64 @@ class Document:
         # single-line multi-word blocks: x-overlap vote vs the widest word
         sl = (nlines == 1) & (wcnt > 1)
         if sl.any():
-            widths = g.width(self.w_box)
-            order = np.lexsort((np.arange(len(wb)), -widths, wb))
-            first = np.empty(len(wb), dtype=bool)
-            first[0] = True
-            np.not_equal(wb[order][1:], wb[order][:-1], out=first[1:])
-            widest_of = np.full(nb, -1, dtype=np.int64)
-            widest_of[wb[order][first]] = order[first]
-            t = self.w_box[widest_of[wb]]
-            wa = g.width(t) * 0.1
-            wbw = widths * 0.1
-            hits = (((t[:, 0] - wa <= self.w_box[:, 0])
-                     & (t[:, 1] + wa >= self.w_box[:, 1]))
-                    | ((self.w_box[:, 0] - wbw <= t[:, 0])
-                       & (self.w_box[:, 1] + wbw >= t[:, 1])))
-            overl = np.bincount(wb, weights=hits, minlength=nb) - 1
-            vote = np.divide(overl, wcnt, out=np.zeros(nb),
-                             where=wcnt > 0) >= 0.5
+            vote = _overlap_vote(wb, self.w_box, g.width(self.w_box),
+                                 g.within_horizontal, wcnt)
             verdict[sl] = vote[sl]
-
         # multi-line blocks: y-overlap vote vs the tallest line
         ml = nlines >= 2
         if ml.any():
-            lh = g.height(lbox)
-            order = np.lexsort((np.arange(nl), -lh, lblk))
-            first = np.empty(nl, dtype=bool)
-            first[0] = True
-            np.not_equal(lblk[order][1:], lblk[order][:-1], out=first[1:])
-            tallest_of = np.full(nb, -1, dtype=np.int64)
-            tallest_of[lblk[order][first]] = order[first]
-            t = lbox[tallest_of[lblk]]
-            ha = g.height(t) * 0.1
-            hb = lh * 0.1
-            hits = (((t[:, 2] - ha <= lbox[:, 2]) & (t[:, 3] + ha >= lbox[:, 3]))
-                    | ((lbox[:, 2] - hb <= t[:, 2]) & (lbox[:, 3] + hb >= t[:, 3])))
-            overl = np.bincount(lblk, weights=hits, minlength=nb) - 1
-            vote = np.divide(overl, nlines, out=np.zeros(nb),
-                             where=nlines > 0) >= 0.5
+            vote = _overlap_vote(lblk, lbox, g.height(lbox), g.within_vertical,
+                                 nlines)
             verdict[ml] = vote[ml]
-
-        for bi, vv in zip(range(nb), verdict.tolist()):
-            cache.setdefault(bi, vv)
-
-    def _vertical_geom(self, bi: int) -> bool:
-        keys, lboxes, _ = self.line_table(bi)
-        nlines = len(keys)
-        if nlines == 0:
-            return False
-        if nlines == 1:
-            wi = self.words_of(bi)
-            wboxes = self.w_box[wi]
-            if len(wi) == 1:
-                return bool(g.height(wboxes[0]) >= g.width(wboxes[0]) * 2)
-            widest = wboxes[int(np.argmax(g.width(wboxes)))]
-            hits = g.within_horizontal(widest[None, :], wboxes, rng=0.1)
-            # reference counts every word except the widest itself
-            overlapped = int(hits.sum()) - 1
-            return overlapped / len(wi) >= 0.5
-        tallest = lboxes[int(np.argmax(g.height(lboxes)))]
-        hits = g.within_vertical(tallest[None, :], lboxes, rng=0.1)
-        overlapped = int(hits.sum()) - 1
-        return overlapped / nlines >= 0.5
+        self._vvote = verdict
+        return verdict
 
     # ---------------------------------------------------------------- text
     def block_to_text(self, bi: int, conf: int = 0, text_delimiters: dict | None = None) -> str:
         """``to_text`` (``ocr_tree.py:689-713``): each word emits
         ``text + word_delim``; each line prefixes ``line_delim``; each
-        paragraph prefixes ``par_delim``.  Defaults ``{5:' ',4:'\\n',3:'\\n\\t'}``."""
+        paragraph prefixes ``par_delim``.  Defaults ``{5:' ',4:'\\n',3:'\\n\\t'}``.
+        An index read into ``_render_blocks`` (memoized per conf and
+        delimiters)."""
         wd, ld, pd = " ", "\n", "\n\t"
         if text_delimiters:
             wd = text_delimiters.get(5, " ")
             ld = text_delimiters.get(4, "\n")
             pd = text_delimiters.get(3, "\n\t")
-        # memoized per (block, conf, delimiters): classify's start/end-flag
-        # pass and the emission path ask for the same renderings; the word
-        # table is immutable for this Document's lifetime
-        key = (bi, conf, wd, ld, pd)
-        hit = self._text_cache.get(key)
-        if hit is not None:
-            return hit
-        # block-heavy pages render every block for this (conf, delims) in
-        # one vectorized pass (same ≥32 threshold as the metric batch
-        # fills); the per-block loop below stays as the parity baseline
-        # and the unsorted-word-table path
-        if self.n_blocks() >= 32:
-            self.words_of(0)  # resolve _w_block_sorted
-            if self._w_block_sorted:
-                self._fill_text_cache_all(conf, wd, ld, pd)
-                return self._text_cache[key]
-        wi = self.words_of(bi)
-        out: list[str] = []
-        last_par = None
-        last_line = None
-        for i in wi:
-            p = self.w_par[i]
-            ln = self.w_line[i]
-            if p != last_par:
-                out.append(pd)
-                last_par = p
-                last_line = None
-            if ln != last_line:
-                out.append(ld)
-                last_line = ln
-            if self.w_conf[i] >= conf:
-                out.append(self.w_text[i])
-                out.append(wd)
-        res = "".join(out)
-        self._text_cache[key] = res
-        return res
+        key = (conf, wd, ld, pd)
+        texts = self._text_cache.get(key)
+        if texts is None:
+            texts = self._text_cache[key] = self._render_blocks(conf, wd, ld, pd)
+        return texts[bi]
 
-    def _fill_text_cache_all(self, conf: int, wd: str, ld: str, pd: str) -> None:
-        """Batch ``block_to_text`` for EVERY block (sorted word table):
-        the loop's per-word state machine reduces to three change masks —
-        block start always emits par+line delims (``last_par``/``last_line``
-        reset to None), a paragraph change re-emits both, a line change
-        emits the line delim — so each word's emission is a pure function
-        of (prev word, this word) and the whole page renders as three
-        object-array concats (C-level ``PyUnicode_Concat``) plus one join
-        per block.  Byte-identical to the loop (parity test in
-        tests/test_kernels.py)."""
-        n = len(self.w_block)
-        nb = self.n_blocks()
-        cache = self._text_cache
-        if n == 0:
-            for bi in range(nb):
-                cache[(bi, conf, wd, ld, pd)] = ""
-            return
+    def _render_blocks(self, conf: int, wd: str, ld: str, pd: str) -> list[str]:
+        """Every block's ``to_text`` in one pass over the words in block
+        order.  The reference's per-word state machine reduces to three
+        change masks — a block start always emits par+line delims, a
+        paragraph change re-emits both, a line change emits the line delim
+        — so each word's emission is a pure function of (prev word, this
+        word), and the page renders as three object-array concats plus one
+        join per block."""
+        order, starts = self._word_order()
+        n = len(order)
+        wb, par, line = self.w_block[order], self.w_par[order], self.w_line[order]
         first = np.empty(n, dtype=bool)
-        first[0] = True
-        np.not_equal(self.w_block[1:], self.w_block[:-1], out=first[1:])
+        first[:1] = True
+        np.not_equal(wb[1:], wb[:-1], out=first[1:])
         parchg = first.copy()
-        parchg[1:] |= self.w_par[1:] != self.w_par[:-1]
+        parchg[1:] |= par[1:] != par[:-1]
         linechg = parchg.copy()
-        linechg[1:] |= self.w_line[1:] != self.w_line[:-1]
-        ok = self.w_conf >= conf
-        texts = np.asarray(self.w_text, dtype=object)
+        linechg[1:] |= line[1:] != line[:-1]
+        ok = self.w_conf[order] >= conf
+        texts = np.asarray(self.w_text, dtype=object)[order]
         body = np.full(n, "", dtype=object)
         if ok.any():
             body[ok] = texts[ok] + wd
         pieces = np.where(parchg, pd + ld, np.where(linechg, ld, "")).astype(object)
         pieces += body
-        starts = np.searchsorted(self.w_block, np.arange(nb))
-        ends = np.searchsorted(self.w_block, np.arange(1, nb + 1))
         plist = pieces.tolist()
-        for bi in range(nb):
-            s, e = starts[bi], ends[bi]
-            cache[(bi, conf, wd, ld, pd)] = "".join(plist[s:e]) if e > s else ""
+        bounds = starts.tolist()
+        return ["".join(plist[s:e]) for s, e in zip(bounds[:-1], bounds[1:])]
 
     def block_is_text_width(self, bi: int, text_width: float, mean_width: float | None = None,
                             rng: float = 0.3, conf: int = -1) -> bool:

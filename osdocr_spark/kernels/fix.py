@@ -827,19 +827,17 @@ def remove_blocks_inside(blocks: list[MBlock], container_id: int) -> list[MBlock
 
 def translate_doc(doc: Document, dx: int, dy: int) -> Document:
     """Recursive box translate (``update_position``, ``ocr_tree.py:1123-``),
-    vectorized over the whole document."""
+    vectorized over the whole document; returns a new ``Document``."""
     off = np.array([dx, dx, dy, dy], np.int64)
-    doc.b_box = doc.b_box + off
-    doc.w_box = doc.w_box + off
-    return doc
+    return replace(doc, b_box=doc.b_box + off, w_box=doc.w_box + off)
 
 
 def scale_doc(doc: Document, fx: float, fy: float) -> Document:
-    """``scale_dimensions`` analog: multiply and floor coordinates."""
+    """``scale_dimensions`` analog: multiply and floor coordinates; returns
+    a new ``Document``."""
     sc = np.array([fx, fx, fy, fy])
-    doc.b_box = (doc.b_box * sc).astype(np.int64)
-    doc.w_box = (doc.w_box * sc).astype(np.int64)
-    return doc
+    return replace(doc, b_box=(doc.b_box * sc).astype(np.int64),
+                   w_box=(doc.w_box * sc).astype(np.int64))
 
 
 def clean_doc(doc: Document, conf: int = 10) -> Document:

@@ -571,7 +571,8 @@ def m_wav_meta(spark, sf_dir, decoder=None):
 
 
 # PCM sample i = (ord(text[i]) - 64) * 128; header = 44 bytes; the corrupt
-# subset is sliced to 20 bytes and yields NULL features (error policy)
+# subset is sliced to 20 bytes and yields NULL features (error policy); an
+# empty text has no samples, so its row comes from the LEFT JOIN (rms 0.0)
 from ..kernels.media import (WAV_HEADER_BYTES as _WAV_HDR,  # noqa: E402
                              WAV_RATE as _WAV_RATE)
 _O_WAV = f"""
@@ -587,13 +588,14 @@ SELECT d.doc_id,
        CASE WHEN d.doc_id % {WAV_CORRUPT_MOD} = 0 THEN 20
             ELSE {_WAV_HDR} + 2 * strlen(d.text) END AS n_bytes,
        CASE WHEN d.doc_id % {WAV_CORRUPT_MOD} = 0 THEN NULL
-            ELSE CAST(a.L AS BIGINT) END AS n_samples,
+            ELSE CAST(COALESCE(a.L, 0) AS BIGINT) END AS n_samples,
        CASE WHEN d.doc_id % {WAV_CORRUPT_MOD} = 0 THEN NULL
             ELSE {_WAV_RATE} END AS sample_rate,
        CASE WHEN d.doc_id % {WAV_CORRUPT_MOD} = 0 THEN NULL
+            WHEN a.L IS NULL THEN 0.0
             ELSE sqrt(a.sq / a.L) END AS rms,
        d.doc_id % {WAV_CORRUPT_MOD} != 0 AS decode_ok
-FROM documents d JOIN agg a USING (doc_id)
+FROM documents d LEFT JOIN agg a USING (doc_id)
 """
 
 

@@ -136,6 +136,22 @@ def docs():
     ).fetchall()
 
 
+def test_translate_and_scale_build_fresh_documents(docs):
+    """Memoized block properties of the input never leak into a moved or
+    scaled page: both operators return a new Document and leave the
+    input as it was."""
+    d, t = docs[0]
+    doc = parse_hocr(generate_page(d, t), url=str(d))
+    lines = doc.line_table(0)[1].copy()
+    mh = doc.block_mean_word_height(0)
+    moved = FX.translate_doc(doc, 7, 11)
+    assert (moved.line_table(0)[1] == lines + [7, 7, 11, 11]).all()
+    assert (doc.line_table(0)[1] == lines).all()
+    scaled = FX.scale_doc(doc, 2, 2)
+    assert scaled.block_mean_word_height(0) == 2 * mh
+    assert doc.block_mean_word_height(0) == mh
+
+
 def test_noisy_pages_break_without_clean(docs):
     broken = sum(
         1 for d, t in docs[:40]

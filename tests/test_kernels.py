@@ -2,6 +2,9 @@
 solve, golden layout-analysis values in the reference's test style
 (SURVEY.md §5.1: text size within 10%, exact column count, reading order)."""
 
+import os
+import sys
+
 import numpy as np
 import pytest
 from hypothesis import given, settings
@@ -10,6 +13,9 @@ from hypothesis import strategies as st
 from osdocr_spark.kernels import geometry as g
 from osdocr_spark.kernels.emit import fix_hifenization
 from osdocr_spark.kernels.smoothing import find_peaks, whittaker_smooth
+
+sys.path.insert(0, os.path.dirname(__file__))
+import doc_reference as ref  # noqa: E402
 
 boxes = st.tuples(st.integers(0, 50), st.integers(0, 50),
                   st.integers(0, 50), st.integers(0, 50)).map(
@@ -559,66 +565,172 @@ def test_categorize_vectorized_matches_loop():
     assert checked == 480
 
 
-def test_block_to_text_batch_matches_loop():
-    """Exact A/B parity of the whole-doc batch text render against the
-    per-block loop (the loop runs whenever the word table is unsorted or
-    the page has <32 blocks) — every generator family incl. all five
-    adversarial layouts, at the flag conf (50), the emission conf with
-    body delimiters, and conf 0."""
+def _parity_pages(n_docs, families):
     import duckdb
 
-    from osdocr_spark.kernels.corpus import (generate_page,
-                                             generate_page_adversarial)
     from osdocr_spark.kernels.hocr import parse_hocr
 
-    body_delims = {3: "\n\t", 4: "\n", 5: " "}
     rows = duckdb.sql("select doc_id, text from "
                       "'/root/testdata/sf0.001/documents.parquet'").fetchall()
+    for doc_id, text in rows[:n_docs]:
+        for gen, kw in families:
+            yield (doc_id, kw), parse_hocr(gen(doc_id, text.strip(), **kw))
+
+
+def test_block_to_text_batch_matches_loop():
+    """Exact A/B parity of the whole-doc text render against the per-word
+    reference walk (``tests/doc_reference.py``) — every generator family
+    incl. all five adversarial layouts, at the flag conf (50), the
+    emission conf with body delimiters, and conf 0."""
+    from osdocr_spark.kernels.corpus import (generate_page,
+                                             generate_page_adversarial)
+
+    body_delims = {3: "\n\t", 4: "\n", 5: " "}
+    families = ((generate_page, {}), (generate_page, {"noisy": True}),
+                (generate_page_adversarial, {}),
+                (generate_page_adversarial, {"noisy": True}))
     checked = 0
-    for doc_id, text in rows[:40]:
-        for gen, kw in ((generate_page, {}), (generate_page, {"noisy": True}),
-                        (generate_page_adversarial, {}),
-                        (generate_page_adversarial, {"noisy": True})):
-            html = gen(doc_id, text.strip(), **kw)
-            d_batch = parse_hocr(html)
-            d_loop = parse_hocr(html)
-            d_loop._w_block_sorted = False  # forces the per-block loop path
-            for conf, delims in ((50, None), (10, body_delims), (0, None)):
-                for bi in range(d_batch.n_blocks()):
-                    a = d_batch.block_to_text(bi, conf=conf,
-                                              text_delimiters=delims)
-                    b = d_loop.block_to_text(bi, conf=conf,
-                                             text_delimiters=delims)
-                    assert a == b, (doc_id, kw, conf, bi)
-            checked += 1
+    for tag, doc in _parity_pages(40, families):
+        for conf, delims in ((50, None), (10, body_delims), (0, None)):
+            for bi in range(doc.n_blocks()):
+                assert doc.block_to_text(bi, conf=conf, text_delimiters=delims) \
+                    == ref.block_to_text(doc, bi, conf, delims), (tag, conf, bi)
+        checked += 1
     assert checked == 160
 
 
 def test_vertical_geom_batch_matches_impl():
-    """Exact A/B parity of the whole-doc vertical-geometry batch fill
-    against the per-block vote, over regular and all five adversarial
+    """Exact A/B parity of the whole-doc vertical-text mask against the
+    per-block reference vote, over regular and all five adversarial
     families (the vertical/dense branches live there)."""
-    import duckdb
+    from osdocr_spark.kernels.corpus import (generate_page,
+                                             generate_page_adversarial)
+
+    families = ((generate_page, {}), (generate_page_adversarial, {}),
+                (generate_page_adversarial, {"noisy": True}))
+    checked = verticals = 0
+    for tag, doc in _parity_pages(40, families):
+        for conf in (0, 10):
+            want = [ref.is_vertical_text(doc, bi, conf)
+                    for bi in range(doc.n_blocks())]
+            assert doc.vertical_mask(conf).tolist() == want, (tag, conf)
+            verticals += sum(want)
+        checked += 1
+    assert checked == 120
+    assert verticals > 0
+
+
+def _interleaved_doc():
+    """Eight blocks whose words are interleaved in the word table: a
+    two-paragraph block with a low-confidence word, a one-line block, a
+    tall one-word block, a block with no words, a multi-line block whose
+    lines stand side by side (vertical text), a one-line and a multi-line
+    block whose verdict hangs on which of two equally wide words / tall
+    lines is the first maximum, and a one-word block at exactly 2:1."""
+    from osdocr_spark.kernels.doc import Document
+
+    #        block par line text        box (l, r, t, b)          conf
+    words = [(0, 0, 0, "Alpha", (10, 60, 10, 30), 95),
+             (1, 0, 0, "one", (300, 340, 10, 28), 90),
+             (4, 0, 0, "V", (500, 512, 100, 160), 95),
+             (0, 0, 0, "beta", (70, 110, 10, 30), 5),
+             (2, 0, 0, "I", (400, 410, 100, 140), 95),
+             (1, 0, 0, "two-words", (350, 450, 10, 28), 90),
+             (0, 0, 1, "gamma.", (10, 70, 40, 60), 95),
+             (4, 0, 1, "E", (520, 532, 100, 158), 95),
+             (0, 1, 0, "Delta", (10, 60, 80, 100), 95),
+             (1, 0, 0, "!", (460, 464, 10, 28), 3),
+             (5, 0, 0, "a", (0, 100, 500, 520), 95),
+             (6, 0, 0, "p", (700, 720, 0, 100), 95),
+             (5, 0, 0, "b", (200, 300, 500, 520), 95),
+             (4, 0, 2, "R", (540, 552, 102, 160), 95),
+             (7, 0, 0, "l", (600, 610, 200, 220), 95),
+             (6, 0, 1, "q", (730, 750, 300, 400), 95),
+             (5, 0, 0, "c", (205, 295, 500, 520), 95),
+             (0, 1, 0, "eps", (70, 100, 80, 100), 95),
+             (6, 0, 2, "r", (760, 780, 305, 395), 95),
+             (5, 0, 0, "d", (210, 290, 500, 520), 95),
+             (6, 0, 3, "s", (790, 810, 310, 390), 95)]
+    b_box = [(10, 110, 10, 100), (300, 464, 10, 28), (400, 410, 100, 140),
+             (600, 700, 0, 2), (500, 552, 100, 160), (0, 300, 500, 520),
+             (700, 810, 0, 400), (600, 610, 200, 220)]
+    col = lambda k, dt: np.array([w[k] for w in words], dtype=dt)
+    return Document(
+        url="interleaved", w_box=col(4, np.int64), w_conf=col(5, np.int64),
+        w_text=col(3, object), w_block=col(0, np.int64),
+        w_par=col(1, np.int64), w_line=col(2, np.int64),
+        w_link=np.zeros(len(words), dtype=bool),
+        b_box=np.array(b_box, dtype=np.int64),
+        b_id=np.arange(len(b_box), dtype=np.int64),
+        b_type=np.full(len(b_box), None, dtype=object))
+
+
+def _assert_block_properties_match_reference(doc, tag):
+    body_delims = {3: "\n\t", 4: "\n", 5: " "}
+    for bi in range(doc.n_blocks()):
+        assert doc.words_of(bi).tolist() == ref.words_of(doc, bi).tolist(), (tag, bi)
+        for conf in (-1, 0, 10, 50):
+            for got, want in zip(doc.line_table(bi, conf),
+                                 ref.line_table(doc, bi, conf), strict=True):
+                assert got.shape == want.shape and (got == want).all(), \
+                    (tag, bi, conf)
+            assert doc.block_mean_word_height(bi, conf) \
+                == ref.mean_word_height(doc, bi, conf), (tag, bi, conf)
+            assert doc.block_char_mean_width(bi, conf) \
+                == ref.char_mean_width(doc, bi, conf), (tag, bi, conf)
+        for conf, delims in ((50, None), (10, body_delims), (0, None)):
+            assert doc.block_to_text(bi, conf, delims) \
+                == ref.block_to_text(doc, bi, conf, delims), (tag, bi, conf)
+    for conf in (0, 10):
+        want = [ref.is_vertical_text(doc, bi, conf) for bi in range(doc.n_blocks())]
+        assert doc.vertical_mask(conf).tolist() == want, (tag, conf)
+        assert [doc.block_is_vertical_text(bi, conf)
+                for bi in range(doc.n_blocks())] == want, (tag, conf)
+
+
+def test_block_properties_on_interleaved_word_table():
+    """Block properties read the same whatever the word table's block
+    order: a hand-built interleaved document, and parsed pages whose
+    blocks are randomly interleaved (each block's own word order kept),
+    both match the per-block references."""
+    import random
 
     from osdocr_spark.kernels.corpus import (generate_page,
                                              generate_page_adversarial)
-    from osdocr_spark.kernels.hocr import parse_hocr
+    from osdocr_spark.kernels.doc import Document
 
-    rows = duckdb.sql("select doc_id, text from "
-                      "'/root/testdata/sf0.001/documents.parquet'").fetchall()
+    doc = _interleaved_doc()
+    _assert_block_properties_match_reference(doc, "hand-built")
+    assert doc.words_of(0).tolist() == [0, 3, 6, 8, 17]
+    assert doc.words_of(3).tolist() == []
+    assert doc.vertical_mask(0).tolist() == [False, False, True, False,
+                                             True, False, False, True]
+    assert doc.block_to_text(0, conf=10) == "\n\t\nAlpha \ngamma. \n\t\nDelta eps "
+
+    rng = random.Random(11)
+    families = ((generate_page, {}), (generate_page, {"noisy": True}),
+                (generate_page_adversarial, {}))
     checked = 0
-    for doc_id, text in rows[:40]:
-        for gen, kw in ((generate_page, {}), (generate_page_adversarial, {}),
-                        (generate_page_adversarial, {"noisy": True})):
-            html = gen(doc_id, text.strip(), **kw)
-            d_batch = parse_hocr(html)
-            d_impl = parse_hocr(html)
-            d_batch._fill_vertical_geom_all()
-            for bi in range(d_batch.n_blocks()):
-                assert d_batch._vt_geom_cache[bi] == d_impl._vertical_geom(bi), \
-                    (doc_id, kw, bi)
-            checked += 1
-    assert checked == 120
+    for tag, page in _parity_pages(10, families):
+        # a random merge of the per-block word runs
+        runs = [list(page.words_of(bi)) for bi in range(page.n_blocks())]
+        perm = []
+        while any(runs):
+            perm.append(rng.choice([r for r in runs if r]).pop(0))
+        perm = np.array(perm, dtype=np.int64)
+        assert not (np.diff(page.w_block[perm]) >= 0).all(), tag
+        mixed = Document(
+            url=page.url, w_box=page.w_box[perm], w_conf=page.w_conf[perm],
+            w_text=page.w_text[perm], w_block=page.w_block[perm],
+            w_par=page.w_par[perm], w_line=page.w_line[perm],
+            w_link=page.w_link[perm], b_box=page.b_box, b_id=page.b_id,
+            b_type=page.b_type)
+        _assert_block_properties_match_reference(mixed, tag)
+        for bi in range(page.n_blocks()):
+            assert mixed.block_to_text(bi) == page.block_to_text(bi), (tag, bi)
+        assert (mixed.vertical_mask(0) == page.vertical_mask(0)).all(), tag
+        checked += 1
+    assert checked == 30
 
 
 def test_next_top_block_vec_matches_loop():

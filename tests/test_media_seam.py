@@ -19,6 +19,7 @@ import sys
 import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from osdocr_spark.kernels.media import (  # noqa: E402
     MediaDecodeError, StubAudioDecoder, StubFrameDecoder)
@@ -205,3 +206,29 @@ def test_wav_meta_stage_end_to_end(spark):
     assert all(r.doc_id % WAV_CORRUPT_MOD != 0 for r in good)
     assert all(r.sample_rate == 8000 and r.n_samples > 0 and r.rms > 0
                for r in good)
+
+
+def test_wav_meta_oracle_keeps_empty_text(spark, tmp_path):
+    """An empty text renders a header-only WAV (44 bytes, no samples,
+    rms 0.0); the oracle keeps that row too, so engine and oracle agree
+    on a corpus holding one empty and one non-empty text."""
+    import duckdb
+
+    from harness import compare
+    from osdocr_spark.ops.textstats import ORACLES, WAV_CORRUPT_MOD, m_wav_meta
+
+    assert 1 % WAV_CORRUPT_MOD and 2 % WAV_CORRUPT_MOD
+    duckdb.sql(
+        "COPY (SELECT * FROM (VALUES (1::BIGINT, '', 'en', 'fixture', 0::BIGINT),"
+        " (2::BIGINT, 'Hello world', 'en', 'fixture', 11::BIGINT))"
+        " t(doc_id, text, lang, source, n_chars))"
+        f" TO '{tmp_path}/documents.parquet' (FORMAT parquet)")
+    con = duckdb.connect()
+    con.execute("CREATE VIEW documents AS SELECT * FROM "
+                f"'{tmp_path}/documents.parquet'")
+    oracle = con.sql(ORACLES["m_wav_meta"]).df()
+    res = compare(m_wav_meta(spark, str(tmp_path)), oracle)
+    assert res["rows"] == 2 and all(
+        res[k] for k in ("cols_match", "count_match", "values_match")), res
+    empty = oracle[oracle.doc_id == 1].iloc[0]
+    assert (empty.n_bytes, empty.n_samples, empty.rms) == (44, 0, 0.0)
