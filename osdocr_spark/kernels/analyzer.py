@@ -7,6 +7,7 @@ Re-implements the reference's histogram → pad → Whittaker-smooth →
 - :func:`get_columns`      — left-margin projection column detection (``:122-241``)
 - :func:`get_journal_areas`— inverted top-margin projection header/body/footer
   segmentation (``:248-392``)
+- :func:`average_word_distance` — mean same-line word gap (part of ``:396-441``)
 - :func:`analyze_text`     — the combined stats dict (``:396-441``)
 
 Histograms are ``np.bincount`` (the reference grows Python lists indexed by
@@ -22,7 +23,8 @@ from . import geometry as g
 from .doc import Document
 from .smoothing import find_peaks, savgol_smooth, whittaker_smooth
 
-__all__ = ["get_text_sizes", "get_columns", "get_journal_areas", "analyze_text"]
+__all__ = ["get_text_sizes", "get_columns", "get_journal_areas",
+           "average_word_distance", "analyze_text"]
 
 
 def _smooth_clip(hist: np.ndarray, lmbda: float, order: int) -> np.ndarray:
@@ -197,28 +199,30 @@ def get_journal_areas(doc: Document) -> dict:
     return areas
 
 
+def average_word_distance(doc: Document, conf: int = 10) -> float:
+    """Mean gap between adjacent confident words of one line: per line,
+    successive lefts minus previous rights.  Words are in pre-order, so
+    consecutive same-line words are adjacent — one vectorized diff over the
+    whole confident word stream; 0.0 when no line has two such words."""
+    sel = np.nonzero(doc.w_conf >= conf)[0]
+    if len(sel) < 2:
+        return 0.0
+    key = (doc.w_block[sel].astype(np.int64) * 1_000_000_000_000
+           + doc.w_par[sel] * 1_000_000 + doc.w_line[sel])
+    same_line = key[1:] == key[:-1]
+    gaps = (doc.w_box[sel[1:], g.L] - doc.w_box[sel[:-1], g.R])[same_line]
+    return float(gaps.sum()) / len(gaps) if len(gaps) else 0.0
+
+
 def analyze_text(doc: Document, conf: int = 10,
                  method: str = "WhittakerSmoother") -> dict:
     """Combined document stats (``ocr_tree_analyser.py:396-441``):
-    text-size peaks + columns + average adjacent-word gap within lines
-    (a lag-window shape, done as a vectorized diff) + average character
-    width (Σ word width / Σ chars).  ``method`` is the text-size smoother
-    selector forwarded to :func:`get_text_sizes`."""
+    text-size peaks + columns + :func:`average_word_distance` + average
+    character width (Σ word width / Σ chars).  ``method`` is the text-size
+    smoother selector forwarded to :func:`get_text_sizes`."""
     res = dict(get_text_sizes(doc, conf=conf, method=method))
     res["columns"] = get_columns(doc)
-
-    # average word distance: per line, successive lefts minus previous rights
-    # (words are in pre-order, so consecutive same-line words are adjacent —
-    # one vectorized diff over the whole confident word stream)
-    sel = np.nonzero(doc.w_conf >= conf)[0]
-    if len(sel) >= 2:
-        key = (doc.w_block[sel].astype(np.int64) * 1_000_000_000_000
-               + doc.w_par[sel] * 1_000_000 + doc.w_line[sel])
-        same_line = key[1:] == key[:-1]
-        gaps = (doc.w_box[sel[1:], g.L] - doc.w_box[sel[:-1], g.R])[same_line]
-        res["average_word_distance"] = float(gaps.sum()) / len(gaps) if len(gaps) else 0.0
-    else:
-        res["average_word_distance"] = 0.0
+    res["average_word_distance"] = average_word_distance(doc, conf=conf)
 
     # average character width over all confident words
     sel = np.nonzero(doc.w_conf >= conf)[0]

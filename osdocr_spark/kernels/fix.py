@@ -15,8 +15,10 @@ Documented deviations (clean implementations of intended semantics):
   (``ocr_tree_fix.py:36-55``), silently skipping the element after each
   removal; we remove every qualifying block.
 - ``block_bound_box_fix``'s worklist (``:83-201``) interleaves a cursor with
-  a dict of pending boxes; we run the same pairwise rules to a fixpoint in
-  id order (same rule set, deterministic order).
+  a dict of pending boxes; we run the same pairwise rules to a fixpoint,
+  each round walking the pairs in list order (same rule set, deterministic
+  order) and finding a block's partners in one box-touch matrix per round
+  instead of testing every pair.
 - horizontal ``join_trees``'s recursive child interleave
   (``ocr_tree.py:1013-1076``) is expressed as a line-level y-slot merge with
   the same ≥70% overlap rule (the flat model has no nested children to
@@ -31,6 +33,7 @@ from dataclasses import dataclass, field, replace
 import numpy as np
 
 from . import geometry as g
+from .analyzer import average_word_distance
 from .doc import Document
 
 __all__ = [
@@ -110,14 +113,17 @@ class MBlock:
 
 
 def to_mutable(doc: Document) -> list[MBlock]:
+    """The mutable block list of ``doc``.  Each column is converted to
+    Python values once (``tolist``), so every field is a plain ``int``,
+    ``bool`` or ``str`` and every word and block owns its box list."""
+    w_box, w_conf, w_text = doc.w_box.tolist(), doc.w_conf.tolist(), doc.w_text.tolist()
+    w_par, w_line, w_link = doc.w_par.tolist(), doc.w_line.tolist(), doc.w_link.tolist()
     blocks = []
-    for bi in range(doc.n_blocks()):
-        wi = doc.words_of(bi)
-        words = [MWord(list(map(int, doc.w_box[i])), int(doc.w_conf[i]), doc.w_text[i],
-                       int(doc.w_par[i]), int(doc.w_line[i]), bool(doc.w_link[i]))
-                 for i in wi]
-        blocks.append(MBlock(int(doc.b_id[bi]), doc.b_type[bi],
-                             list(map(int, doc.b_box[bi])), words))
+    for bi, (bid, btype, bbox) in enumerate(zip(doc.b_id.tolist(), doc.b_type.tolist(),
+                                                doc.b_box.tolist())):
+        words = [MWord(w_box[i], w_conf[i], w_text[i], w_par[i], w_line[i], w_link[i])
+                 for i in doc.words_of(bi).tolist()]
+        blocks.append(MBlock(bid, btype, bbox, words))
     return blocks
 
 
@@ -260,9 +266,6 @@ def prune_children_area(b: MBlock) -> MBlock:
     return b
 
 
-_BBF_VEC_MIN_BLOCKS = 64
-
-
 def block_bound_box_fix(blocks: list[MBlock], conf: int = 10,
                         max_rounds: int = 5) -> list[MBlock]:
     """Resolve block overlaps (``block_bound_box_fix``,
@@ -270,122 +273,44 @@ def block_bound_box_fix(blocks: list[MBlock], conf: int = 10,
     non-empty boxes overlapping ≥70% of either → merge (``join_trees`` auto);
     other intersections → shrink the box with the smaller intersection ratio
     (``remove_box_area``) and clamp its words.  Runs the pairwise rules to a
-    fixpoint (see module docstring).
+    fixpoint (see module docstring): each round walks the pairs ``i < j`` in
+    list order.
 
-    Block-heavy pages dispatch to ``_block_bound_box_fix_vec`` — same
-    rules, same pair order, but the next overlapping partner is found by a
-    vectorized scan instead of a Python walk over every j (a 292-block
-    crossed page has ~100 candidate pairs out of 42k; the walk itself was
-    the cost after the r5 prescreen).  The scalar loop below is the parity
-    baseline (A/B test in tests/test_fix_suite.py)."""
-    if len(blocks) >= _BBF_VEC_MIN_BLOCKS:
-        return _block_bound_box_fix_vec(blocks, conf, max_rounds)
-    for _ in range(max_rounds):
-        changed = False
-        i = 0
-        while i < len(blocks):
-            a = blocks[i]
-            j = i + 1
-            while j < len(blocks):
-                b = blocks[j]
-                # prescreen (r5): the exact inclusive-edge intersects
-                # predicate in plain Python — when false, every rule below
-                # is a no-op (is_inside ⊆ intersects with inclusive edges,
-                # and the shrink branch is gated on intersects), and we
-                # skip the per-pair is_empty word scans that made this
-                # O(n²·words) on >255-block pages (17 s/5000 docs → ~3 s)
-                ab, bb = a.box, b.box
-                if not ((ab[0] <= bb[1] and ab[1] >= bb[0])
-                        and ((ab[2] <= bb[2] and ab[3] >= bb[2])
-                             or (bb[2] <= ab[2] and bb[3] >= ab[2]))):
-                    j += 1
-                    continue
-                na, nb_ = a.nparray(), b.nparray()
-                a_empty = a.is_empty(conf=conf)
-                b_empty = b.is_empty(conf=conf)
-                if b_empty and bool(g.is_inside(nb_, na)) and not b.aspect_delimiter(conf):
-                    blocks.pop(j)
-                    changed = True
-                    continue
-                if a_empty and bool(g.is_inside(na, nb_)) and not a.aspect_delimiter(conf):
-                    blocks.pop(i)
-                    changed = True
-                    i -= 1
-                    break
-                if bool(g.intersects(na, nb_)):
-                    inter = g.intersect_area_box(na, nb_)
-                    inter_area = max(int(g.area(inter)), 0)
-                    area_a = max(int(g.area(na)), 0)
-                    area_b = max(int(g.area(nb_)), 0)
-                    if not a_empty and not b_empty and area_a > 0 and inter_area / area_a >= 0.7:
-                        join_blocks(a, b, orientation="auto")
-                        blocks.pop(j)
-                        changed = True
-                        continue
-                    if not a_empty and not b_empty and area_b > 0 and inter_area / area_b >= 0.7:
-                        join_blocks(b, a, orientation="auto")
-                        blocks[i] = b
-                        blocks.pop(j)
-                        changed = True
-                        continue
-                    if inter_area > 0:
-                        ra = inter_area / area_a if area_a else 0
-                        rb = inter_area / area_b if area_b else 0
-                        target = a if ra < rb else b
-                        new_box = g.remove_box_area(target.nparray(), inter)
-                        if list(map(int, new_box)) != target.box:
-                            target.box = list(map(int, new_box))
-                            prune_children_area(target)
-                            changed = True
-                j += 1
-            i += 1
-        if not changed:
-            break
-    return blocks
-
-
-def _block_bound_box_fix_vec(blocks: list[MBlock], conf: int,
-                             max_rounds: int) -> list[MBlock]:
-    """Vectorized partner scan for ``block_bound_box_fix``.  The row-box
-    matrix ``M`` mirrors ``blocks``; the next candidate j for the current
-    block is the first row ≥ j satisfying the exact inclusive-edge
-    intersects predicate.  Per-pair decisions re-read live boxes, so a
-    stale candidate (the current box shrank since the scan) harmlessly
-    no-ops — identical to the scalar walk re-testing every j.  Matrix
-    maintenance mirrors list mutation: row deletes on pops, a row update
-    when a later block shrinks.  Row i itself is never re-read once the
-    outer loop passes it (scans only look at j > i), so — matching the
-    scalar path's quirk — the ``a`` binding survives a ``blocks[i] = b``
-    replacement and row i needs no update."""
+    Every rule is a no-op unless the two boxes touch (the inclusive-edge
+    ``geometry.intersects``), so each round starts from one symmetric touch
+    matrix ``P`` over the block boxes ``M`` and block ``i``'s next partner
+    is the first ``True`` in ``P[i, j:]``.  The matrix follows the list:
+    a pop deletes its row and column, and a box that grows (``join_blocks``
+    into ``a``) or shrinks gets its row and column recomputed.  The matrix
+    only picks the pairs to look at; every rule re-reads the live boxes.
+    Row ``i`` stands for the ``a`` binding: when ``b`` absorbs ``a`` it
+    takes slot ``i`` but the walk goes on comparing the stale ``a``, a
+    quirk of the reference loop kept here.  The per-pair scalar walk is the
+    parity reference in ``tests/fix_reference.py``."""
     for _ in range(max_rounds):
         changed = False
         M = np.array([b.box for b in blocks], dtype=np.int64).reshape(-1, 4)
+        P = _touch_matrix(M)
         i = 0
         while i < len(blocks):
             a = blocks[i]
             j = i + 1
             while j < len(blocks):
-                ab = a.box
-                seg = M[j:]
-                xhit = (seg[:, 0] <= ab[1]) & (seg[:, 1] >= ab[0])
-                yhit = (((ab[2] <= seg[:, 2]) & (ab[3] >= seg[:, 2]))
-                        | ((seg[:, 2] <= ab[2]) & (seg[:, 3] >= ab[2])))
-                hit = np.nonzero(xhit & yhit)[0]
-                if len(hit) == 0:
+                j += int(P[i, j:].argmax())
+                if not P[i, j]:
                     break
-                j += int(hit[0])
                 b = blocks[j]
                 na, nb_ = a.nparray(), b.nparray()
                 a_empty = a.is_empty(conf=conf)
                 b_empty = b.is_empty(conf=conf)
                 if b_empty and bool(g.is_inside(nb_, na)) and not b.aspect_delimiter(conf):
                     blocks.pop(j)
-                    M = np.delete(M, j, axis=0)
+                    P, M = _drop(P, M, j)
                     changed = True
                     continue
                 if a_empty and bool(g.is_inside(na, nb_)) and not a.aspect_delimiter(conf):
                     blocks.pop(i)
-                    M = np.delete(M, i, axis=0)
+                    P, M = _drop(P, M, i)
                     changed = True
                     i -= 1
                     break
@@ -397,32 +322,55 @@ def _block_bound_box_fix_vec(blocks: list[MBlock], conf: int,
                     if not a_empty and not b_empty and area_a > 0 and inter_area / area_a >= 0.7:
                         join_blocks(a, b, orientation="auto")
                         blocks.pop(j)
-                        M = np.delete(M, j, axis=0)
+                        P, M = _drop(P, M, j)
+                        _refresh(P, M, i, a.box)
                         changed = True
                         continue
                     if not a_empty and not b_empty and area_b > 0 and inter_area / area_b >= 0.7:
                         join_blocks(b, a, orientation="auto")
                         blocks[i] = b
                         blocks.pop(j)
-                        M = np.delete(M, j, axis=0)
+                        P, M = _drop(P, M, j)
                         changed = True
                         continue
                     if inter_area > 0:
                         ra = inter_area / area_a if area_a else 0
                         rb = inter_area / area_b if area_b else 0
-                        target = a if ra < rb else b
-                        new_box = g.remove_box_area(target.nparray(), inter)
-                        if list(map(int, new_box)) != target.box:
-                            target.box = list(map(int, new_box))
+                        target, k = (a, i) if ra < rb else (b, j)
+                        new_box = list(map(int, g.remove_box_area(target.nparray(), inter)))
+                        if new_box != target.box:
+                            target.box = new_box
                             prune_children_area(target)
-                            if target is b:
-                                M[j] = b.box
+                            _refresh(P, M, k, new_box)
                             changed = True
                 j += 1
             i += 1
         if not changed:
             break
     return blocks
+
+
+def _touch_matrix(M: np.ndarray) -> np.ndarray:
+    """``geometry.intersects`` of every box row of ``M`` with every other.
+    Both halves of the predicate are a one-sided test and its transpose
+    (``l_a <= r_b`` and ``l_b <= r_a``; ``t_b`` inside ``[t_a, b_a]`` or
+    ``t_a`` inside ``[t_b, b_b]``), so each is computed once."""
+    l, r, t, b = M.T.copy()
+    x = l[:, None] <= r
+    y = (t[:, None] <= t) & (b[:, None] >= t)
+    return x & x.T & (y | y.T)
+
+
+def _drop(P: np.ndarray, M: np.ndarray, k: int) -> tuple[np.ndarray, np.ndarray]:
+    """Delete block ``k`` from the touch matrix and the box rows."""
+    return np.delete(np.delete(P, k, 0), k, 1), np.delete(M, k, 0)
+
+
+def _refresh(P: np.ndarray, M: np.ndarray, k: int, box: list) -> None:
+    """Set block ``k``'s box to ``box`` and recompute its touch row and
+    column in place."""
+    M[k] = box
+    P[k] = P[:, k] = g.intersects(M[k], M)
 
 
 def split_block(b: MBlock, delimiter: list, orientation: str = "horizontal",
@@ -582,7 +530,7 @@ def delimiters_fix(blocks: list[MBlock], conf: int = 10) -> list[MBlock]:
             # branches below require intersects (is_inside ⊆ intersects,
             # closed edges), so a non-overlapping pair is a no-op and the
             # is_empty/is_image scans can be skipped entirely (same exact
-            # inclusive-edge predicate as block_bound_box_fix's prescreen;
+            # inclusive-edge predicate as block_bound_box_fix's touch matrix;
             # d.box is re-read each pair because the shrink branch moves it)
             db, kb = d.box, blk.box
             if not ((db[0] <= kb[1] and db[1] >= kb[0])
@@ -845,10 +793,10 @@ def clean_doc(doc: Document, conf: int = 10) -> Document:
     (``clean_ocr``, ``O/pipeline.py:708-819``): remove_nodes_conf →
     remove_empty_boxes → text_bound_box_fix → split_whitespaces →
     delimiters_fix → block_bound_box_fix.  (The image-space
-    ``bound_box_fix_image`` stage is a no-op for HTML payloads.)"""
-    from .analyzer import analyze_text
-
-    analysis = analyze_text(doc, conf=conf)
+    ``bound_box_fix_image`` stage is a no-op for HTML payloads.)  The only
+    layout statistic the suite reads is the document's average word gap
+    (``split_whitespaces``), so no full ``analyze_text`` runs here."""
+    avg_word_dist = average_word_distance(doc, conf=conf)
     blocks = to_mutable(doc)
     if doc.n_blocks():
         page_box = [int(doc.b_box[:, 0].min()), int(doc.b_box[:, 1].max()),
@@ -864,7 +812,7 @@ def clean_doc(doc: Document, conf: int = 10) -> Document:
         if b.type is None and b.aspect_delimiter(conf=conf):
             b.type = "delimiter"
     blocks = text_bound_box_fix(blocks, conf=conf)
-    blocks = split_whitespaces(blocks, analysis.get("average_word_distance", 0.0), conf=conf)
+    blocks = split_whitespaces(blocks, avg_word_dist, conf=conf)
     blocks = delimiters_fix(blocks, conf=conf)
     blocks = block_bound_box_fix(blocks, conf=conf)
     return to_document(blocks, doc.url)

@@ -284,11 +284,15 @@ def stream_simhash_dups(spark: SparkSession, pages_dir: str, out_dir: str,
     BOTH members overflowed their lowest agreeing band's bucket (neither is
     in that state, and every higher agreeing band defers to the lower band
     by the ownership rule, which cannot locally observe the lower bucket's
-    rejection).  Duplicate emission would need the same url delivered twice
-    to a bucket that could not store it the first time — i.e. a
-    non-exactly-once SOURCE during a flood; the Structured Streaming file
-    source replays a batch only after a failure, which re-emits its whole
-    output anyway.  At scale the state store shards by bucket key."""
+    rejection).  Duplicate emission needs the same url delivered twice to
+    a bucket that could not store it the first time: the bucket keeps no
+    record of refused urls, so the second arrival re-compares and re-emits
+    its pairs.  That happens when a url reappears in a later input file
+    (another micro-batch), and when a source replays a batch; the
+    Structured Streaming file source replays only after a failure, which
+    re-emits its whole output anyway.  The stream therefore assumes urls
+    are unique across input files.  At scale the state store shards by
+    bucket key."""
     import hashlib
 
     import pandas as pd

@@ -1,16 +1,25 @@
 """Unit + end-to-end tests for the §2.9 mutation/fix operators."""
 
+import copy
+import dataclasses
+import os
 import re
+import sys
 
 import duckdb
 import numpy as np
 import pytest
 
+from osdocr_spark.kernels import analyzer
 from osdocr_spark.kernels import fix as FX
-from osdocr_spark.kernels.corpus import generate_page
+from osdocr_spark.kernels import geometry as g
+from osdocr_spark.kernels.corpus import generate_page, generate_page_adversarial
 from osdocr_spark.kernels.fix import MBlock, MWord
 from osdocr_spark.kernels.hocr import parse_hocr
 from osdocr_spark.kernels.pipeline import extract_document, extract_html
+
+sys.path.insert(0, os.path.dirname(__file__))
+import fix_reference as ref  # noqa: E402
 
 SF = "/root/testdata/sf0.001"
 
@@ -174,35 +183,171 @@ def test_clean_doc_stable_on_clean_pages(docs):
         assert got == re.sub(r"\s+", " ", t).strip(), f"doc {d}"
 
 
-def test_block_bound_box_fix_vec_matches_loop():
-    """Exact A/B parity of the vectorized-partner-scan overlap fix against
-    the scalar walk (boxes AND word assignments), over adversarial and
-    crossed pages — the only layouts that reach the >=64-block dispatch."""
-    import duckdb
+FAMILIES = {
+    "noisy": lambda d, t: generate_page(d, t, noisy=True),
+    "adversarial": lambda d, t: generate_page_adversarial(d, t),
+    "adversarial+noisy": lambda d, t: generate_page_adversarial(d, t, noisy=True),
+    "crossed": lambda d, t: generate_page_adversarial(d, t, noisy=True,
+                                                      multi_article=True),
+}
 
-    from osdocr_spark.kernels import fix as F
-    from osdocr_spark.kernels.corpus import generate_page_adversarial
-    from osdocr_spark.kernels.hocr import parse_hocr
 
-    def snap(blocks):
-        return [(b.box, sorted((tuple(w.box), w.text, w.conf)
-                               for w in b.words)) for b in blocks]
+def snap(blocks):
+    """Everything the overlap fix can change: block id, type and box, and
+    each block's words in order with their box, text, conf, par, line and
+    link."""
+    return [(b.id, b.type, list(b.box),
+             [(list(w.box), w.text, w.conf, w.par, w.line, w.link) for w in b.words])
+            for b in blocks]
 
-    rows = duckdb.sql("select doc_id, text from "
-                      "'/root/testdata/sf0.001/documents.parquet'").fetchall()
-    checked = 0
-    for doc_id, text in rows[:30]:
-        for noisy in (False, True):
-            d = parse_hocr(generate_page_adversarial(doc_id, text.strip(),
-                                                     noisy=noisy))
-            b_vec, b_loop = F.to_mutable(d), F.to_mutable(d)
-            v = F._block_bound_box_fix_vec(b_vec, 10, 5)
-            old = F._BBF_VEC_MIN_BLOCKS
-            F._BBF_VEC_MIN_BLOCKS = 10 ** 9  # force the scalar walk
-            try:
-                s = F.block_bound_box_fix(b_loop, 10, 5)
-            finally:
-                F._BBF_VEC_MIN_BLOCKS = old
-            assert snap(v) == snap(s), (doc_id, noisy)
-            checked += 1
-    assert checked == 60
+
+def assert_matches_reference(blocks, max_rounds=5):
+    got = FX.block_bound_box_fix(copy.deepcopy(blocks), 10, max_rounds)
+    want = ref.block_bound_box_fix(copy.deepcopy(blocks), 10, max_rounds)
+    assert snap(got) == snap(want)
+    return got
+
+
+def _bbf_inputs(doc, monkeypatch):
+    """The two inputs ``block_bound_box_fix`` sees for ``doc``: its raw
+    block list, and the list ``clean_doc`` hands it after the earlier
+    rules."""
+    seen = []
+    real = FX.block_bound_box_fix
+
+    def spy(blocks, conf=10, max_rounds=5):
+        seen.append(copy.deepcopy(blocks))
+        return real(blocks, conf, max_rounds)
+
+    with monkeypatch.context() as m:
+        m.setattr(FX, "block_bound_box_fix", spy)
+        FX.clean_doc(doc)
+    return FX.to_mutable(doc), seen[0]
+
+
+def test_block_bound_box_fix_vec_matches_loop(docs, monkeypatch):
+    """Exact parity of the touch-matrix overlap fix with the scalar walk
+    (``tests/fix_reference.py``): ids, types, boxes and every word in
+    order with its par/line/link, on raw and ``clean_doc``-prefix inputs
+    of pages under and over 64 blocks."""
+    seen = {(prefix, big): 0 for prefix in (False, True) for big in (False, True)}
+    changed = 0
+    for gen in FAMILIES.values():
+        for d, t in docs[:20]:
+            doc = parse_hocr(gen(d, t.strip()), url=str(d))
+            for prefix, blocks in enumerate(_bbf_inputs(doc, monkeypatch)):
+                got = assert_matches_reference(blocks)
+                seen[bool(prefix), len(blocks) >= 64] += 1
+                changed += snap(got) != snap(blocks)
+    assert all(seen.values()), seen
+    assert changed > 0
+
+
+def test_touch_matrix_is_pairwise_intersects():
+    """The overlap fix's touch matrix is exactly ``geometry.intersects`` of
+    every pair, degenerate and inverted boxes included."""
+    rng = np.random.default_rng(5)
+    lo = rng.integers(0, 60, (200, 2))
+    M = np.stack([lo[:, 0], lo[:, 0] + rng.integers(-3, 20, 200),
+                  lo[:, 1], lo[:, 1] + rng.integers(-3, 20, 200)], axis=1)
+    want = [[bool(g.intersects(a, b)) for b in M] for a in M]
+    assert FX._touch_matrix(M).tolist() == want
+
+
+def test_block_bound_box_fix_partner_of_grown_block():
+    """``join_blocks(a, b)`` grows ``a`` into ``c``, which the old ``a``
+    did not touch: ``c`` must be found in the same round (then ``c``
+    absorbs ``a`` and the round-2 shrink of the merged box wins; missing
+    ``c`` lets ``c`` shrink ``d`` first and ends elsewhere)."""
+    blocks = [
+        B(0, (0, 100, 0, 100), [W("a", 10, 10)]),
+        B(1, (0, 100, 0, 130), [W("b", 10, 110)]),
+        B(2, (0, 100, 105, 135), [W("c", 10, 112)]),
+        B(3, (0, 100, 130, 200), [W("d", 10, 160)]),
+    ]
+    for rounds in (1, 2, 5):
+        out = assert_matches_reference(blocks, rounds)
+    assert [(b.id, b.box) for b in out] == [(2, [0, 100, 0, 130]), (3, [0, 100, 130, 200])]
+
+
+def test_block_bound_box_fix_keeps_stale_binding():
+    """When ``b`` absorbs ``a`` (``join_blocks(b, a)``) ``b`` takes slot
+    ``i``, but the walk goes on comparing the old ``a``: the next partner
+    ``f`` is joined into that orphan, so ``f``'s words leave the page."""
+    blocks = [
+        B(0, (0, 100, 0, 100), [W("a", 10, 10)]),
+        B(1, (0, 100, 40, 110), [W("b", 10, 80)]),
+        B(2, (0, 100, 0, 120), [W("f", 10, 50)]),
+    ]
+    for rounds in (1, 5):
+        out = assert_matches_reference(blocks, rounds)
+    assert [(b.id, b.box, [w.text for w in b.words]) for b in out] == [
+        (1, [0, 100, 0, 110], ["a", "b"])]
+
+
+def test_block_bound_box_fix_pops_empty_blocks_mid_row():
+    """An empty block inside the current one is popped mid-row and the
+    walk goes on with the block that slid into its slot; an empty block
+    inside a later one is popped from the current slot."""
+    blocks = [
+        B(0, (30, 50, 130, 150)),                       # empty, inside y
+        B(1, (0, 200, 0, 100), [W("a", 10, 10)]),
+        B(2, (20, 60, 20, 60)),                         # empty, inside a
+        B(3, (150, 300, 0, 100), [W("c", 200, 10)]),
+        B(4, (0, 300, 120, 200), [W("y", 100, 160)]),
+    ]
+    for rounds in (1, 5):
+        out = assert_matches_reference(blocks, rounds)
+    assert [(b.id, b.box) for b in out] == [
+        (1, [0, 150, 0, 100]), (3, [150, 300, 0, 100]), (4, [0, 300, 120, 200])]
+
+
+def _columns(doc):
+    return {f.name: getattr(doc, f.name) for f in dataclasses.fields(doc)}
+
+
+def _same_document(a, b):
+    ca, cb = _columns(a), _columns(b)
+    assert ca.keys() == cb.keys()
+    for k, v in ca.items():
+        if isinstance(v, np.ndarray):
+            assert v.dtype == cb[k].dtype and v.shape == cb[k].shape, k
+            assert v.tolist() == cb[k].tolist(), k
+        else:
+            assert v == cb[k], k
+
+
+def test_to_mutable_round_trip_and_python_types(docs):
+    """``to_document(to_mutable(doc))`` rebuilds every column of a parsed
+    page, and every mutable field is a plain Python value that no other
+    word or block shares."""
+    for gen in (lambda d, t: generate_page(d, t),) + tuple(FAMILIES.values()):
+        for d, t in docs[:10]:
+            doc = parse_hocr(gen(d, t.strip()), url=str(d))
+            blocks = FX.to_mutable(doc)
+            _same_document(FX.to_document(blocks, doc.url), doc)
+            boxes = set()
+            for b in blocks:
+                assert type(b.id) is int and (b.type is None or type(b.type) is str)
+                for w in b.words:
+                    assert [type(v) for v in (w.conf, w.text, w.par, w.line, w.link)] \
+                        == [int, str, int, int, bool]
+                for box in [b.box] + [w.box for w in b.words]:
+                    assert type(box) is list and all(type(v) is int for v in box)
+                    assert id(box) not in boxes
+                    boxes.add(id(box))
+
+
+def test_clean_doc_skips_layout_analysis(docs, monkeypatch):
+    """``clean_doc`` reads only the word gap: with ``analyze_text`` made
+    to raise it returns the same documents on noisy and crossed pages."""
+    pages = [parse_hocr(FAMILIES[f](d, t.strip()), url=str(d))
+             for f in ("noisy", "crossed") for d, t in docs[:10]]
+    want = [FX.clean_doc(p) for p in pages]
+
+    def boom(*args, **kwargs):
+        raise AssertionError("clean_doc ran analyze_text")
+
+    monkeypatch.setattr(analyzer, "analyze_text", boom)
+    for p, w in zip(pages, want):
+        _same_document(FX.clean_doc(p), w)
