@@ -7,7 +7,8 @@ with ``O/`` = ``OSDOCR/OSDOCR/``):
 - :mod:`.smoothing`   — Whittaker smoother + peak detection
   (replaces the external ``whittaker_eilers`` / ``scipy.signal`` deps used at
   ``O/ocr_tree_module/ocr_tree_analyser.py:11,59-68``).
-- :mod:`.geometry`    — vectorized Box predicates (``O/aux_utils/box.py``).
+- :mod:`.geometry`    — Box predicates, broadcast and one-pair forms
+  (``O/aux_utils/box.py``).
 - :mod:`.doc`         — the flat columnar document model (one numpy word
   table per document) replacing the recursive ``OCR_Tree``
   (``O/ocr_tree_module/ocr_tree.py:20-45``).

@@ -391,11 +391,13 @@ class Document:
                        orientation: str | None = None, conf: int = 0) -> list[int]:
         """Delimiter blocks, optionally restricted to an area / orientation
         (``get_delimiters``, ``ocr_tree.py:671-686``)."""
+        in_area = (None if search_area is None
+                   else g.is_inside(self.b_box, np.asarray(search_area)))
         out = []
         for bi in range(self.n_blocks()):
             if not self.block_is_delimiter(bi, conf=conf):
                 continue
-            if search_area is not None and not bool(g.is_inside(self.b_box[bi], search_area)):
+            if in_area is not None and not in_area[bi]:
                 continue
             if orientation:
                 w = int(g.width(self.b_box[bi]))

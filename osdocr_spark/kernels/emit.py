@@ -24,7 +24,7 @@ import re
 from .doc import Document
 
 __all__ = ["fix_hifenization", "assemble_article", "make_article",
-           "article_to_txt", "article_pretty_print", "document_text"]
+           "article_to_txt", "article_pretty_print", "document_text", "normalize_text"]
 
 _HYPHen_NL = r"(\w)[\r\t\f\v ]*-(\s*\n\s*-*)([a-z0-9_])"
 _HYPHen_WS = r"(\w)[\r\t\f\v ]*-[\r\t\f\v ]*([a-z0-9_])"
@@ -166,17 +166,18 @@ def article_to_md(article: dict, fix: bool = True, faithful: bool = True) -> str
 _WS = re.compile(r"\s+")
 
 
+def normalize_text(raw: str) -> str:
+    """Collapse all whitespace runs to single spaces and strip — the
+    canonical form compared against the DuckDB oracle (the raw form is the
+    byte-parity artifact asserted in the golden pytest suite)."""
+    return _WS.sub(" ", raw).strip()
+
+
 def document_text(doc: Document, articles: list[list[int]], conf: int = 0,
                   normalize: bool = False) -> str:
-    """Final per-document text: concatenated article ``to_txt`` outputs.
-
-    ``normalize=True`` collapses all whitespace runs to single spaces and
-    strips — the canonical form compared against the DuckDB oracle (the raw
-    form is the byte-parity artifact asserted in the golden pytest suite).
-    """
+    """Final per-document text: concatenated article ``to_txt`` outputs,
+    passed through :func:`normalize_text` when ``normalize``."""
     raw = "".join(
         article_to_txt(assemble_article(doc, art, conf=conf)) for art in articles
     )
-    if not normalize:
-        return raw
-    return _WS.sub(" ", raw).strip()
+    return normalize_text(raw) if normalize else raw

@@ -101,9 +101,6 @@ class MBlock:
             out.setdefault((w.par, w.line), []).append(w)
         return sorted(out.items(), key=lambda kv: kv[0])
 
-    def nparray(self) -> np.ndarray:
-        return np.array(self.box, dtype=np.int64)
-
     def hull(self, conf: int = -1):
         ws = [w for w in self.words if w.conf >= conf and w.text.strip()]
         if not ws:
@@ -208,8 +205,8 @@ def join_blocks(a: MBlock, b: MBlock, orientation: str = "vertical") -> MBlock:
     ordered left-to-right); others interleave by top.
     """
     if orientation == "auto":
-        na, nb_ = a.nparray(), b.nparray()
-        if g.intersects(na, nb_, inside=True) or g.intersects(na, nb_, extend_horizontal=True, inside=True):
+        if g.pair_intersects(a.box, b.box, inside=True) or \
+                g.pair_intersects(a.box, b.box, extend_horizontal=True, inside=True):
             orientation = "horizontal"
         else:
             orientation = "vertical"
@@ -300,25 +297,24 @@ def block_bound_box_fix(blocks: list[MBlock], conf: int = 10,
                 if not P[i, j]:
                     break
                 b = blocks[j]
-                na, nb_ = a.nparray(), b.nparray()
                 a_empty = a.is_empty(conf=conf)
                 b_empty = b.is_empty(conf=conf)
-                if b_empty and bool(g.is_inside(nb_, na)) and not b.aspect_delimiter(conf):
+                if b_empty and g.pair_is_inside(b.box, a.box) and not b.aspect_delimiter(conf):
                     blocks.pop(j)
                     P, M = _drop(P, M, j)
                     changed = True
                     continue
-                if a_empty and bool(g.is_inside(na, nb_)) and not a.aspect_delimiter(conf):
+                if a_empty and g.pair_is_inside(a.box, b.box) and not a.aspect_delimiter(conf):
                     blocks.pop(i)
                     P, M = _drop(P, M, i)
                     changed = True
                     i -= 1
                     break
-                if bool(g.intersects(na, nb_)):
-                    inter = g.intersect_area_box(na, nb_)
-                    inter_area = max(int(g.area(inter)), 0)
-                    area_a = max(int(g.area(na)), 0)
-                    area_b = max(int(g.area(nb_)), 0)
+                if g.pair_intersects(a.box, b.box):
+                    inter = g.pair_intersect_area_box(a.box, b.box)
+                    inter_area = max(_area(inter), 0)
+                    area_a = max(_area(a.box), 0)
+                    area_b = max(_area(b.box), 0)
                     if not a_empty and not b_empty and area_a > 0 and inter_area / area_a >= 0.7:
                         join_blocks(a, b, orientation="auto")
                         blocks.pop(j)
@@ -337,7 +333,7 @@ def block_bound_box_fix(blocks: list[MBlock], conf: int = 10,
                         ra = inter_area / area_a if area_a else 0
                         rb = inter_area / area_b if area_b else 0
                         target, k = (a, i) if ra < rb else (b, j)
-                        new_box = list(map(int, g.remove_box_area(target.nparray(), inter)))
+                        new_box = g.remove_box_area(target.box, inter)
                         if new_box != target.box:
                             target.box = new_box
                             prune_children_area(target)
@@ -386,21 +382,16 @@ def split_block(b: MBlock, delimiter: list, orientation: str = "horizontal",
     else:
         area1 = [b.box[0], max(delimiter[0], b.box[0] + 1), b.box[2], b.box[3]]
         area2 = [delimiter[1], b.box[1], b.box[2], b.box[3]]
-    a1 = np.array(area1, np.int64)
-    a2 = np.array(area2, np.int64)
     w1: list[MWord] = []
     w2: list[MWord] = []
     for w in b.words:
-        nw = np.array(w.box, np.int64)
-        in1 = bool(g.is_inside(nw, a1))
-        in2 = bool(g.is_inside(nw, a2))
-        if in1:
+        if g.pair_is_inside(w.box, area1):
             w1.append(w)
-        elif in2:
+        elif g.pair_is_inside(w.box, area2):
             w2.append(w)
         elif keep_all:
-            ov1 = int(g.area(g.intersect_area_box(a1, nw)))
-            ov2 = int(g.area(g.intersect_area_box(a2, nw)))
+            ov1 = g.pair_inter_area(area1, w.box)
+            ov2 = g.pair_inter_area(area2, w.box)
             (w1 if ov1 > ov2 else w2).append(w)
         # else: dropped (reference removes from both sides)
     if not w1 and not w2:
@@ -518,7 +509,6 @@ def delimiters_fix(blocks: list[MBlock], conf: int = 10) -> list[MBlock]:
     for d in delims:
         if d not in out:
             continue
-        nd = d.nparray()
         orient = d.orientation()
         j = 0
         while j < len(out):
@@ -529,23 +519,17 @@ def delimiters_fix(blocks: list[MBlock], conf: int = 10) -> list[MBlock]:
             # geometric prescreen BEFORE the per-block word scans: both
             # branches below require intersects (is_inside ⊆ intersects,
             # closed edges), so a non-overlapping pair is a no-op and the
-            # is_empty/is_image scans can be skipped entirely (same exact
-            # inclusive-edge predicate as block_bound_box_fix's touch matrix;
-            # d.box is re-read each pair because the shrink branch moves it)
-            db, kb = d.box, blk.box
-            if not ((db[0] <= kb[1] and db[1] >= kb[0])
-                    and ((db[2] <= kb[2] and db[3] >= kb[2])
-                         or (kb[2] <= db[2] and kb[3] >= db[2]))):
+            # is_empty/is_image scans can be skipped entirely (d.box is
+            # re-read each pair because the shrink branch moves it)
+            if not g.pair_intersects(d.box, blk.box):
                 j += 1
                 continue
             if blk.is_empty(conf=conf, only_text=True) and not blk.is_image(only_type=True):
                 j += 1
                 continue
-            nb_ = blk.nparray()
-            inter = g.intersect_area_box(nd, nb_)
-            inter_area = max(int(g.area(inter)), 0)
-            d_area = max(int(g.area(nd)), 1)
-            if bool(g.is_inside(nd, nb_)):
+            inter_area = max(g.pair_inter_area(d.box, blk.box), 0)
+            d_area = max(_area(d.box), 1)
+            if g.pair_is_inside(d.box, blk.box):
                 if blk.is_empty(conf=conf, only_text=True):
                     out.remove(d)
                     break
@@ -555,8 +539,7 @@ def delimiters_fix(blocks: list[MBlock], conf: int = 10) -> list[MBlock]:
                 else:
                     strip[2], strip[3] = blk.box[2], blk.box[3]
                 ratio = 0.4
-                ns = np.array(strip, np.int64)
-                side_words = [w for w in blk.words if w.conf >= conf and _ovr(ns, w) >= ratio]
+                side_words = [w for w in blk.words if w.conf >= conf and _ovr(strip, w) >= ratio]
                 o = "horizontal" if orient == "horizontal" else "vertical"
                 ws1 = [w for w in blk.words
                        if w.conf >= conf and _before(d.box, w, o)]
@@ -577,7 +560,7 @@ def delimiters_fix(blocks: list[MBlock], conf: int = 10) -> list[MBlock]:
                 else:
                     out.remove(d)
                     break
-            elif bool(g.intersects(nd, nb_)) and inter_area > 0:
+            elif inter_area > 0:
                 if inter_area / d_area >= 0.5 and blk.is_image(conf=conf):
                     out.remove(d)
                     break
@@ -587,11 +570,10 @@ def delimiters_fix(blocks: list[MBlock], conf: int = 10) -> list[MBlock]:
                 else:
                     strip[2], strip[3] = blk.box[2], blk.box[3]
                 ratio = 0.1 if orient == "vertical" else 0.4
-                ns = np.array(strip, np.int64)
-                text_in_strip = [w for w in blk.words if w.conf >= conf and _ovr(ns, w) >= ratio]
+                text_in_strip = [w for w in blk.words
+                                 if w.conf >= conf and _ovr(strip, w) >= ratio]
                 if text_in_strip:
-                    d.box = list(map(int, g.remove_box_area(nd, nb_)))
-                    nd = d.nparray()
+                    d.box = g.remove_box_area(d.box, blk.box)
                 else:
                     parts = split_block(blk, strip, orientation=orient, conf=conf, keep_all=True)
                     if len(parts) == 2:
@@ -601,17 +583,17 @@ def delimiters_fix(blocks: list[MBlock], conf: int = 10) -> list[MBlock]:
                         out[j] = parts[0]
                         out.append(parts[1])
                     else:
-                        d.box = list(map(int, g.remove_box_area(nd, nb_)))
-                        nd = d.nparray()
+                        d.box = g.remove_box_area(d.box, blk.box)
             j += 1
     return out
 
 
-def _ovr(area: np.ndarray, w: MWord) -> float:
-    nw = np.array(w.box, np.int64)
-    a = max(int(g.area(g.intersect_area_box(area, nw))), 0)
-    wa = max(int(g.area(nw)), 1)
-    return a / wa
+def _area(box: list) -> int:
+    return (box[1] - box[0]) * (box[3] - box[2])
+
+
+def _ovr(area: list, w: MWord) -> float:
+    return max(g.pair_inter_area(area, w.box), 0) / max(_area(w.box), 1)
 
 
 def _before(dbox: list, w: MWord, orientation: str) -> bool:
@@ -644,19 +626,16 @@ def unite_blocks(blocks: list[MBlock], conf: int = 10,
         else:
             same = [b for b in same if b.orientation() == target.orientation()]
         aligned = [b for b in same
-                   if bool(g.within_horizontal(target.nparray(), b.nparray(),
-                                               rng=0.1, only_self=True))]
+                   if g.pair_within_horizontal(target.box, b.box, rng=0.1, only_self=True)]
         united = False
         if len(aligned) == 1:
             cand = aligned[0]
-            hull = np.array([min(target.box[0], cand.box[0]), max(target.box[1], cand.box[1]),
-                             min(target.box[2], cand.box[2]), max(target.box[3], cand.box[3])],
-                            np.int64)
+            hull = [min(target.box[0], cand.box[0]), max(target.box[1], cand.box[1]),
+                    min(target.box[2], cand.box[2]), max(target.box[3], cand.box[3])]
             conflict = any(
                 b is not target and b is not cand
-                and int(g.area(g.intersect_area_box(hull, b.nparray()))) > 0
-                and int(g.area(g.intersect_area_box(hull, b.nparray()))) /
-                max(int(g.area(b.nparray())), 1) >= 0.1
+                and (ov := g.pair_inter_area(hull, b.box)) > 0
+                and ov / max(_area(b.box), 1) >= 0.1
                 for b in out)
             if not conflict:
                 join_blocks(target, cand)
@@ -697,7 +676,7 @@ def remove_solo_words(blocks: list[MBlock], conf: int = 10) -> list[MBlock]:
             text = " ".join(w.text for w in b.words if w.conf >= conf).strip()
             if len(text.split(" ")) == 1:
                 if any(o is not b and o.type != b.type
-                       and bool(g.is_inside(b.nparray(), o.nparray())) for o in blocks):
+                       and g.pair_is_inside(b.box, o.box) for o in blocks):
                     continue
         out.append(b)
     return out
@@ -768,9 +747,8 @@ def remove_blocks_inside(blocks: list[MBlock], container_id: int) -> list[MBlock
     cont = next((b for b in blocks if b.id == container_id), None)
     if cont is None:
         return blocks
-    nc = cont.nparray()
     return [b for b in blocks
-            if b is cont or not bool(g.is_inside(b.nparray(), nc))]
+            if b is cont or not g.pair_is_inside(b.box, cont.box)]
 
 
 def translate_doc(doc: Document, dx: int, dy: int) -> Document:

@@ -1,11 +1,23 @@
-"""Vectorized axis-aligned box operations over ``(N, 4)`` int64 arrays.
+"""Axis-aligned box algebra: the reference's ``Box`` predicates
+(``O/aux_utils/box.py:10-423``) over boxes laid out as ``[left, right, top,
+bottom]`` (width/height are derived, never stored — ``box.py:30-35``).
+Comparisons are closed intervals exactly as the reference's ``<=`` / ``>=``
+chains.
 
-Re-expresses the reference's scalar ``Box`` predicates
-(``O/aux_utils/box.py:10-423``) as numpy kernels operating on arrays of
-boxes laid out as columns ``[left, right, top, bottom]`` (width/height are
-derived, never stored — ``box.py:30-35``).  All functions broadcast:
-``a`` may be ``(4,)`` or ``(N,4)``, ``b`` likewise; comparisons are closed
-intervals exactly as the reference's ``<=`` / ``>=`` chains.
+This module owns every box predicate, each in two forms:
+
+- **broadcast** (``is_inside``, ``intersects``, ``intersect_area_box``,
+  ``within_vertical``/``within_horizontal``, ``distance_to``, ...): numpy
+  over ``(N, 4)`` int64 arrays; ``a`` and ``b`` may each be ``(4,)`` or
+  ``(N, 4)`` and the result is a mask or array.  Call it for one box
+  against a table of boxes, or a table against a table.
+- **pair** (``pair_<name>``, plus ``pair_inter_area`` and
+  ``remove_box_area``): one box against one box, each a plain-int 4-tuple or
+  list, returning a Python ``bool``/``int``/``float``.  Call it inside a
+  per-pair loop (reading-order walks, the fix suite); it does the same
+  arithmetic without a numpy call per test.
+
+No function picks its form from its input's shape.
 
 Known reference quirk deliberately not ported: ``Box.distance_to`` with
 ``border='closest'`` passes an unsupported ``range_type=`` kwarg into
@@ -16,6 +28,8 @@ modes are implemented.
 
 from __future__ import annotations
 
+import math
+
 import numpy as np
 
 L, R, T, B = 0, 1, 2, 3
@@ -23,7 +37,10 @@ L, R, T, B = 0, 1, 2, 3
 __all__ = [
     "L", "R", "T", "B", "box", "width", "height", "area", "center",
     "is_inside", "intersects", "intersect_area_box", "within_vertical",
-    "within_horizontal", "same_level", "distance_to", "remove_box_area",
+    "within_horizontal", "same_level", "distance_to",
+    "pair_is_inside", "pair_intersects", "pair_intersect_area_box", "pair_inter_area",
+    "pair_within_vertical", "pair_within_horizontal", "pair_distance_to",
+    "remove_box_area",
 ]
 
 
@@ -52,8 +69,6 @@ def center(b: np.ndarray) -> np.ndarray:
 
 def is_inside(a: np.ndarray, b: np.ndarray) -> np.ndarray:
     """``a`` fully inside ``b`` (closed; ``Box.is_inside_box``, ``box.py:166-170``)."""
-    if a.ndim == 1 and getattr(b, "ndim", 1) == 1:  # scalar fast path
-        return (a[L] >= b[L]) and (a[R] <= b[R]) and (a[T] >= b[T]) and (a[B] <= b[B])
     return (
         (a[..., L] >= b[..., L]) & (a[..., R] <= b[..., R])
         & (a[..., T] >= b[..., T]) & (a[..., B] <= b[..., B])
@@ -71,14 +86,6 @@ def intersects(a: np.ndarray, b: np.ndarray,
     ``inside=True`` additionally accepts containment either way (redundant
     with plain overlap but kept for signature parity).
     """
-    if a.ndim == 1 and getattr(b, "ndim", 1) == 1:  # scalar fast path
-        siv = extend_vertical or (
-            (a[T] <= b[T] and a[B] >= b[T]) or (b[T] <= a[T] and b[B] >= a[T]))
-        sih = extend_horizontal or (a[L] <= b[R] and a[R] >= b[L])
-        shit = siv and sih
-        if inside and not shit:
-            shit = bool(is_inside(a, b)) or bool(is_inside(b, a))
-        return shit
     iv = extend_vertical | (
         ((a[..., T] <= b[..., T]) & (a[..., B] >= b[..., T]))
         | ((b[..., T] <= a[..., T]) & (b[..., B] >= a[..., T]))
@@ -99,30 +106,12 @@ def intersect_area_box(a: np.ndarray, b: np.ndarray,
     disjoint the result has non-positive width/height and ``area() <= 0``
     — callers test the area like the reference does.
     """
-    a = np.asarray(a)
+    aa = np.array(a, dtype=np.int64)
     b = np.asarray(b)
-    if a.ndim == 1 and b.ndim == 1:  # scalar fast path (hot in ordering/fix)
-        al, ar, at, ab = (int(a[L]), int(a[R]), int(a[T]), int(a[B]))
-        bl, br, bt, bb = (int(b[L]), int(b[R]), int(b[T]), int(b[B]))
-        if extend_vertical:
-            at = min(at, bt)
-            ab = max(ab, bb)
-        if extend_horizontal:
-            al = min(al, bl)
-            ar = max(ar, br)
-        out = np.empty(4, dtype=np.int64)
-        out[L] = max(al, bl)
-        out[R] = min(ar, br)
-        out[T] = max(at, bt)
-        out[B] = min(ab, bb)
-        return out
-    aa = a.astype(np.int64, copy=True)
     if extend_vertical:
-        aa = aa.copy()
         aa[..., T] = np.minimum(aa[..., T], b[..., T])
         aa[..., B] = np.maximum(aa[..., B], b[..., B])
     if extend_horizontal:
-        aa = aa.copy()
         aa[..., L] = np.minimum(aa[..., L], b[..., L])
         aa[..., R] = np.maximum(aa[..., R], b[..., R])
     out = np.empty(np.broadcast(aa, b).shape, dtype=np.int64)
@@ -147,13 +136,6 @@ def within_vertical(a: np.ndarray, b: np.ndarray, rng: float = 0.0,
     (``Box.within_vertical_boxes``, ``box.py:130-142``): ``b`` within ``a``
     grown by ``rng·height(a)``, or (unless ``only_self``) ``a`` within ``b``
     grown by ``rng·height(b)``."""
-    if a.ndim == 1 and getattr(b, "ndim", 1) == 1:  # scalar fast path
-        ha = (a[B] - a[T]) * rng
-        hit = (a[T] - ha <= b[T]) and (a[B] + ha >= b[B])
-        if not only_self and not hit:
-            hb = (b[B] - b[T]) * rng
-            hit = (b[T] - hb <= a[T]) and (b[B] + hb >= a[B])
-        return hit
     ha = height(a) * rng
     hit = (a[..., T] - ha <= b[..., T]) & (a[..., B] + ha >= b[..., B])
     if not only_self:
@@ -165,13 +147,6 @@ def within_vertical(a: np.ndarray, b: np.ndarray, rng: float = 0.0,
 def within_horizontal(a: np.ndarray, b: np.ndarray, rng: float = 0.0,
                       only_self: bool = False) -> np.ndarray:
     """Horizontal counterpart (``box.py:145-156``)."""
-    if a.ndim == 1 and getattr(b, "ndim", 1) == 1:  # scalar fast path
-        wa = (a[R] - a[L]) * rng
-        hit = (a[L] - wa <= b[L]) and (a[R] + wa >= b[R])
-        if not only_self and not hit:
-            wb = (b[R] - b[L]) * rng
-            hit = (b[L] - wb <= a[L]) and (b[R] + wb >= a[R])
-        return hit
     wa = width(a) * rng
     hit = (a[..., L] - wa <= b[..., L]) & (a[..., R] + wa >= b[..., R])
     if not only_self:
@@ -212,27 +187,6 @@ def distance_to(a: np.ndarray, b: np.ndarray, border: str | None = None) -> np.n
     between that border's midpoint of ``a`` and the opposite border's
     midpoint of ``b`` (reference pairs e.g. ``a.left ↔ b.right``).
     """
-    if getattr(a, "ndim", 0) == 1 and getattr(b, "ndim", 0) == 1:  # scalar path
-        import math
-        def pt(bx, which):
-            cx = (bx[L] + bx[R]) / 2.0
-            cy = (bx[T] + bx[B]) / 2.0
-            if which == "left":
-                return bx[L], cy
-            if which == "right":
-                return bx[R], cy
-            if which == "top":
-                return cx, bx[T]
-            if which == "bottom":
-                return cx, bx[B]
-            return cx, cy
-        if border in _BORDER_POINTS:
-            xa, ya = pt(a, border)
-            xb, yb = pt(b, _OPPOSITE[border])
-        else:
-            xa, ya = pt(a, "center")
-            xb, yb = pt(b, "center")
-        return math.hypot(xa - xb, ya - yb)
     if border in _BORDER_POINTS:
         pa = _mid_point(np.asarray(a), border)
         pb = _mid_point(np.asarray(b), _OPPOSITE[border])
@@ -246,7 +200,6 @@ def distance_to(a: np.ndarray, b: np.ndarray, border: str | None = None) -> np.n
 def distance_to_point(b: np.ndarray, x: float, y: float) -> float:
     """Point-to-box distance, 0 inside (``Box.distance_to_point``,
     ``box.py:425-430``)."""
-    import math
     cx = (b[L] + b[R]) / 2.0
     cy = (b[T] + b[B]) / 2.0
     dx = abs(cx - x) - (b[R] - b[L]) * 0.5
@@ -268,21 +221,99 @@ def closest_edge_point(b: np.ndarray, x: float, y: float) -> tuple[float, float]
     return px, py
 
 
-def remove_box_area(b: np.ndarray, cut: np.ndarray) -> np.ndarray:
+# ---------------------------------------------------------------------------
+# Pair form (module docstring): plain-int (L, R, T, B) tuples or lists.
+
+
+def pair_is_inside(a, b) -> bool:
+    """:func:`is_inside` for one pair: ``a`` fully inside ``b``."""
+    return a[L] >= b[L] and a[R] <= b[R] and a[T] >= b[T] and a[B] <= b[B]
+
+
+def pair_intersects(a, b, extend_vertical: bool = False,
+                    extend_horizontal: bool = False, inside: bool = False) -> bool:
+    """:func:`intersects` for one pair."""
+    hit = ((extend_vertical or (a[T] <= b[T] and a[B] >= b[T])
+            or (b[T] <= a[T] and b[B] >= a[T]))
+           and (extend_horizontal or (a[L] <= b[R] and a[R] >= b[L])))
+    if inside and not hit:
+        hit = pair_is_inside(a, b) or pair_is_inside(b, a)
+    return hit
+
+
+def pair_intersect_area_box(a, b, extend_vertical: bool = False,
+                       extend_horizontal: bool = False) -> list[int]:
+    """:func:`intersect_area_box` for one pair, as an ``[l, r, t, b]`` list."""
+    al, ar, at, ab = a
+    if extend_vertical:
+        at = min(at, b[T])
+        ab = max(ab, b[B])
+    if extend_horizontal:
+        al = min(al, b[L])
+        ar = max(ar, b[R])
+    return [max(al, b[L]), min(ar, b[R]), max(at, b[T]), min(ab, b[B])]
+
+
+def pair_inter_area(a, b, extend_vertical: bool = False,
+                    extend_horizontal: bool = False) -> int:
+    """``area(intersect_area_box(a, b, ...))`` for one pair — negative or
+    zero for disjoint boxes, exactly the value callers test."""
+    l, r, t, bt = pair_intersect_area_box(a, b, extend_vertical, extend_horizontal)
+    return (r - l) * (bt - t)
+
+
+def pair_within_vertical(a, b, rng: float = 0.0, only_self: bool = False) -> bool:
+    """:func:`within_vertical` for one pair."""
+    ha = (a[B] - a[T]) * rng
+    if a[T] - ha <= b[T] and a[B] + ha >= b[B]:
+        return True
+    if only_self:
+        return False
+    hb = (b[B] - b[T]) * rng
+    return b[T] - hb <= a[T] and b[B] + hb >= a[B]
+
+
+def pair_within_horizontal(a, b, rng: float = 0.0, only_self: bool = False) -> bool:
+    """:func:`within_horizontal` for one pair."""
+    wa = (a[R] - a[L]) * rng
+    if a[L] - wa <= b[L] and a[R] + wa >= b[R]:
+        return True
+    if only_self:
+        return False
+    wb = (b[R] - b[L]) * rng
+    return b[L] - wb <= a[L] and b[R] + wb >= a[R]
+
+
+def pair_distance_to(a, b, border: str | None = None) -> float:
+    """:func:`distance_to` for one pair.  ``math.hypot`` here and
+    ``np.hypot`` there may differ in the last ulp, so a caller keeps to one
+    form for any value it compares or scores."""
+    if border == "left":
+        xa, ya, xb, yb = a[L], (a[T] + a[B]) / 2.0, b[R], (b[T] + b[B]) / 2.0
+    elif border == "right":
+        xa, ya, xb, yb = a[R], (a[T] + a[B]) / 2.0, b[L], (b[T] + b[B]) / 2.0
+    elif border == "top":
+        xa, ya, xb, yb = (a[L] + a[R]) / 2.0, a[T], (b[L] + b[R]) / 2.0, b[B]
+    elif border == "bottom":
+        xa, ya, xb, yb = (a[L] + a[R]) / 2.0, a[B], (b[L] + b[R]) / 2.0, b[T]
+    else:
+        xa, ya = (a[L] + a[R]) / 2.0, (a[T] + a[B]) / 2.0
+        xb, yb = (b[L] + b[R]) / 2.0, (b[T] + b[B]) / 2.0
+    return math.hypot(xa - xb, ya - yb)
+
+
+def remove_box_area(b, cut) -> list[int]:
     """Shrink ``b`` until disjoint from ``cut``, repeatedly trimming the side
     that loses the least area (``Box.remove_box_area``, ``box.py:248-297``).
-
-    Scalar loop (≤4 iterations) — used by the overlap-fix suite on single
-    boxes, not in hot vectorized paths.
-    """
-    out = np.asarray(b, dtype=np.int64).copy()
+    Pair form only (≤4 iterations): every caller shrinks one box."""
+    out = [int(v) for v in b]
     for _ in range(4):
-        ib = intersect_area_box(out, cut)
-        if min(width(ib), height(ib)) <= 0 or area(ib) <= 0:
+        il, ir, it, ib = pair_intersect_area_box(out, cut)
+        if ir - il <= 0 or ib - it <= 0:
             break
-        w = int(width(out))
-        h = int(height(out))
-        # candidate trims: (lost_area, new_box)
+        w = out[R] - out[L]
+        h = out[B] - out[T]
+        # candidate trims: (lost_area, (side, new_value))
         cands = []
         if cut[B] >= out[B] and cut[T] > out[T]:  # cut hugs bottom → trim bottom
             cands.append(((out[B] - cut[T]) * w, (B, int(cut[T]))))

@@ -48,10 +48,11 @@ def id_boxes(doc: Document, delimiters: bool = True,
         if len(existing):
             nxt = int(existing.max()) + 1
             occ = {k: 0 for k in range(nxt)}
+    in_area = None if area is None else g.is_inside(doc.b_box, np.asarray(area))
     for bi in range(doc.n_blocks()):
         if not delimiters and doc.block_is_delimiter(bi):
             continue
-        if area is not None and not bool(g.is_inside(doc.b_box[bi], area)):
+        if in_area is not None and not in_area[bi]:
             continue
         cur = int(doc.b_id[bi])
         if cur == NO_ID or override:

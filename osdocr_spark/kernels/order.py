@@ -40,37 +40,31 @@ class DGraph:
     """Weighted digraph over block indices; insertion order preserved
     (replaces ``Graph``/``Node``/``Edge``, ``graph.py:5-416``).
 
-    ``cw[(s,t)]`` is the child-edge weight, ``pw[(s,t)]`` the parent-edge
-    weight (the reference stores the same connection twice with separately
-    computed attractions, ``ocr_tree_analyser.py:1480-1488``).
+    ``cw[(s,t)]`` is the edge weight.  The reference stores each connection
+    twice, as a child and a parent edge (``ocr_tree_analyser.py:1480-1488``),
+    but both get the same attraction (see :func:`topologic_order_context`),
+    so one weight per edge is kept.
     """
 
     def __init__(self):
         self.order: list[int] = []
         self.children: dict[int, list[int]] = {}
-        self.parents: dict[int, list[int]] = {}
         self.cw: dict[tuple[int, int], float] = {}
-        self.pw: dict[tuple[int, int], float] = {}
 
     def add_node(self, i: int):
         if i not in self.children:
             self.order.append(i)
             self.children[i] = []
-            self.parents[i] = []
 
     def add_edge(self, s: int, t: int, w: float = 0.0):
         if t not in self.children[s]:
             self.children[s].append(t)
-            self.parents[t].append(s)
             self.cw[(s, t)] = w
-            self.pw[(s, t)] = w
 
     def remove_edge(self, s: int, t: int):
         if t in self.children[s]:
             self.children[s].remove(t)
-            self.parents[t].remove(s)
             self.cw.pop((s, t), None)
-            self.pw.pop((s, t), None)
 
     def reaches(self, src: int, tgt: int) -> bool:
         """True if ``tgt`` is reachable from ``src`` via child edges."""
@@ -88,23 +82,25 @@ class DGraph:
 
     def transitive_reduction(self, visit_order: list[int] | None = None):
         """Remove edges implied by longer child paths (``Graph.clean_graph``,
-        ``graph.py:91-109``, implemented as a standard reduction)."""
+        ``graph.py:91-109``, implemented as a standard reduction).  A kept
+        edge keeps its weight."""
         for s in (visit_order or list(self.order)):
             for t in list(self.children[s]):
                 # reachable without the direct edge?
+                w = self.cw[(s, t)]
                 self.remove_edge(s, t)
                 if not self.reaches(s, t):
-                    self.add_edge(s, t)
+                    self.add_edge(s, t, w)
 
     def narrow_parents(self):
         """Keep each node's strongest parent connection; drop parents whose
         total (child+parent) weight ratio vs the strongest is < 0.5
-        (``Graph.narrow_parents``, ``graph.py:111-146``)."""
+        (``Graph.narrow_parents``, ``graph.py:111-146``).  The child and
+        parent weights are equal, so the total is ``2 * cw``."""
         connections: list[tuple[float, int, int]] = []
         for s in self.order:
             for t in self.children[s]:
-                total = self.cw[(s, t)] + self.pw.get((s, t), 0.0)
-                connections.append((total, s, t))
+                connections.append((2 * self.cw[(s, t)], s, t))
         connections.sort(key=lambda c: c[0], reverse=True)
         visited: set[int] = set()
         alive = {(s, t) for _, s, t in connections}
@@ -122,74 +118,6 @@ class DGraph:
                 elif o_weight > weight and (o_weight <= 0 or weight / o_weight < 0.5):
                     self.remove_edge(s, t)
                     alive.discard((s, t))
-
-
-# ---------------------------------------------------------------------------
-# Scalar geometry over plain-int (L, R, T, B) tuples — semantically identical
-# to the kernels in geometry.py but without per-call numpy scalar overhead;
-# the ordering path runs tens of thousands of these on ≤15-block documents,
-# where tuple arithmetic is ~10× cheaper than numpy row indexing.
-# A/B-verified value-identical against the numpy path on the full corpus.
-
-def _sc_inside(a, b) -> bool:
-    return a[0] >= b[0] and a[1] <= b[1] and a[2] >= b[2] and a[3] <= b[3]
-
-
-def _sc_intersects(a, b, ev: bool = False, eh: bool = False) -> bool:
-    siv = ev or ((a[2] <= b[2] and a[3] >= b[2]) or (b[2] <= a[2] and b[3] >= a[2]))
-    sih = eh or (a[0] <= b[1] and a[1] >= b[0])
-    return siv and sih
-
-
-def _sc_within_v(a, b, rng: float = 0.0, only_self: bool = False) -> bool:
-    ha = (a[3] - a[2]) * rng
-    if a[2] - ha <= b[2] and a[3] + ha >= b[3]:
-        return True
-    if only_self:
-        return False
-    hb = (b[3] - b[2]) * rng
-    return b[2] - hb <= a[2] and b[3] + hb >= a[3]
-
-
-def _sc_within_h(a, b, rng: float = 0.0, only_self: bool = False) -> bool:
-    wa = (a[1] - a[0]) * rng
-    if a[0] - wa <= b[0] and a[1] + wa >= b[1]:
-        return True
-    if only_self:
-        return False
-    wb = (b[1] - b[0]) * rng
-    return b[0] - wb <= a[0] and b[1] + wb >= a[1]
-
-
-def _sc_inter_area(a, b, ev: bool = False, eh: bool = False) -> int:
-    """``int(area(intersect_area_box(a, b, ...)))`` — may be negative for
-    disjoint boxes, exactly like the numpy-path callers test."""
-    al, ar, at, ab = a
-    if ev:
-        at = min(at, b[2])
-        ab = max(ab, b[3])
-    if eh:
-        al = min(al, b[0])
-        ar = max(ar, b[1])
-    return (min(ar, b[1]) - max(al, b[0])) * (min(ab, b[3]) - max(at, b[2]))
-
-
-def _sc_distance(a, b, border: str) -> float:
-    """Border-midpoint distance (a's ``border`` ↔ b's opposite border),
-    mirroring ``geometry.distance_to``'s scalar path."""
-    if border == "left":
-        xa, ya = a[0], (a[2] + a[3]) / 2.0
-        xb, yb = b[1], (b[2] + b[3]) / 2.0
-    elif border == "right":
-        xa, ya = a[1], (a[2] + a[3]) / 2.0
-        xb, yb = b[0], (b[2] + b[3]) / 2.0
-    elif border == "top":
-        xa, ya = (a[0] + a[1]) / 2.0, a[2]
-        xb, yb = (b[0] + b[1]) / 2.0, b[3]
-    else:
-        xa, ya = (a[0] + a[1]) / 2.0, a[3]
-        xb, yb = (b[0] + b[1]) / 2.0, b[2]
-    return math.hypot(xa - xb, ya - yb)
 
 
 def _first_min(items: list[int], key) -> int:
@@ -211,23 +139,14 @@ def next_top_block(doc: Document, cand: list[int], origin: tuple[float, float] =
     """Choose the visually-first block (``next_top_block``,
     ``ocr_tree_analyser.py:649-726``): top-band → leftmost-band → top, vs
     left-band → top; tie-break by euclidean distance to ``origin``
-    (left-candidate wins only when strictly closer).  Scalar loops over
-    tuple boxes; candidate order (top_blocks first, then ``cand`` order)
-    preserved so first-minimum tie-breaks match the reference's stable
-    sorts."""
+    (left-candidate wins only when strictly closer).  One scalar walk over
+    tuple boxes at every candidate-set size: calls see a few candidates
+    (2–3 on average, at most 15 main blocks on a generated page), where a
+    whole-array route costs several times the walk.  Candidate order
+    (top_blocks first, then ``cand`` order) is preserved so first-minimum
+    tie-breaks match the reference's stable sorts."""
     if not cand:
         return None
-    if len(cand) >= 32:
-        # block-heavy candidate sets evaluate the same routes as whole-array
-        # masks (np.argmin keeps the scalar path's first-minimum tie-breaks);
-        # the scalar walk is the parity baseline (A/B test in
-        # tests/test_kernels.py)
-        return _next_top_block_vec(doc, cand, origin)
-    return _next_top_block_loop(doc, cand, origin)
-
-
-def _next_top_block_loop(doc: Document, cand: list[int],
-                         origin: tuple[float, float]) -> int | None:
     tb = _tuple_boxes(doc.b_box, cand)
     cand = [int(c) for c in cand]
 
@@ -235,17 +154,17 @@ def _next_top_block_loop(doc: Document, cand: list[int],
     min_top = min(tb[c][2] for c in cand)
     top_blocks = [c for c in cand if tb[c][2] == min_top]
     band = [c for c in cand
-            if any(_sc_within_v(tb[c], tb[t], rng=0.05) for t in top_blocks)]
+            if any(g.pair_within_vertical(tb[c], tb[t], rng=0.05) for t in top_blocks)]
     pot = top_blocks + band
     leftmost = _first_min(pot, key=lambda c: tb[c][0])
-    band2 = [c for c in cand if _sc_within_h(tb[c], tb[leftmost], rng=0.05)]
+    band2 = [c for c in cand if g.pair_within_horizontal(tb[c], tb[leftmost], rng=0.05)]
     potential_top = _first_min(band2, key=lambda c: tb[c][2]) if band2 else None
 
     # --- left route
     min_left = min(tb[c][0] for c in cand)
     leftmost_blocks = [c for c in cand if tb[c][0] == min_left]
     band3 = [c for c in cand
-             if any(_sc_within_h(tb[c], tb[t], rng=0.05) for t in leftmost_blocks)]
+             if any(g.pair_within_horizontal(tb[c], tb[t], rng=0.05) for t in leftmost_blocks)]
     potential_left = _first_min(band3, key=lambda c: tb[c][2]) if band3 else None
 
     if potential_left is not None and potential_top is not None:
@@ -257,54 +176,6 @@ def _next_top_block_loop(doc: Document, cand: list[int],
     if potential_top is not None:
         return potential_top
     return _first_min(cand, key=lambda c: tb[c][2])
-
-
-def _next_top_block_vec(doc: Document, cand: list[int],
-                        origin: tuple[float, float]) -> int | None:
-    """Whole-array ``next_top_block``: the band memberships evaluate as
-    boolean masks over the candidate boxes (same ±0.05 within formulas,
-    both directions), and every first-minimum selection is ``np.argmin``
-    over indices kept in candidate order — the exact tie-breaks of the
-    scalar walk's stable scans, including the duplicate top-blocks at the
-    head of the leftmost pool."""
-    cidx = np.asarray([int(c) for c in cand], dtype=np.int64)
-    bx = doc.b_box[cidx]
-    Lc, Rc, Tc, Bc = bx[:, 0], bx[:, 1], bx[:, 2], bx[:, 3]
-
-    # --- top route
-    ti = np.nonzero(Tc == Tc.min())[0]
-    ha = (Bc - Tc) * 0.05
-    Tt, Bt = Tc[ti][None, :], Bc[ti][None, :]
-    hb = (Bt - Tt) * 0.05
-    band = (((Tc[:, None] - ha[:, None] <= Tt) & (Bc[:, None] + ha[:, None] >= Bt))
-            | ((Tt - hb <= Tc[:, None]) & (Bt + hb >= Bc[:, None]))).any(axis=1)
-    pot = np.concatenate([ti, np.nonzero(band)[0]])
-    lm = int(pot[np.argmin(Lc[pot])])
-    wa = (Rc - Lc) * 0.05
-    wl = (Rc[lm] - Lc[lm]) * 0.05
-    b2 = (((Lc - wa <= Lc[lm]) & (Rc + wa >= Rc[lm]))
-          | ((Lc[lm] - wl <= Lc) & (Rc[lm] + wl >= Rc)))
-    b2i = np.nonzero(b2)[0]
-    p_top = int(b2i[np.argmin(Tc[b2i])]) if len(b2i) else None
-
-    # --- left route
-    li = np.nonzero(Lc == Lc.min())[0]
-    Lt, Rt = Lc[li][None, :], Rc[li][None, :]
-    wb = (Rt - Lt) * 0.05
-    b3 = (((Lc[:, None] - wa[:, None] <= Lt) & (Rc[:, None] + wa[:, None] >= Rt))
-          | ((Lt - wb <= Lc[:, None]) & (Rt + wb >= Rc[:, None]))).any(axis=1)
-    b3i = np.nonzero(b3)[0]
-    p_left = int(b3i[np.argmin(Tc[b3i])]) if len(b3i) else None
-
-    if p_left is not None and p_top is not None:
-        dl = math.hypot(origin[0] - Lc[p_left], origin[1] - Tc[p_left])
-        dt = math.hypot(origin[0] - Lc[p_top], origin[1] - Tc[p_top])
-        return int(cidx[p_left]) if dl < dt else int(cidx[p_top])
-    if p_left is not None:
-        return int(cidx[p_left])
-    if p_top is not None:
-        return int(cidx[p_top])
-    return int(cidx[int(np.argmin(Tc))])
 
 
 def topologic_graph(doc: Document, block_idx: list[int]) -> DGraph | None:
@@ -407,9 +278,9 @@ def calculate_block_attraction(doc: Document, block: int, target: int,
     no-below bonuses (+40/+20), encompassing below/above (+20, shared
     parent/child +20), and the type rules for title/image/text blocks.
 
-    Scalar tuple-box arithmetic throughout (see the ``_sc_*`` helpers) —
-    value-identical to the numpy formulation, A/B-verified edge-for-edge on
-    the full corpus."""
+    Pair-form geometry over tuple boxes throughout (``geometry.pair_*``):
+    one pair of boxes per test, the same arithmetic as the broadcast
+    form."""
     if cache is None:
         cache = _AttractionCache(doc, blocks)
     tblock = cache.tup(block)
@@ -419,13 +290,13 @@ def calculate_block_attraction(doc: Document, block: int, target: int,
     attraction = 0
 
     if direction is None:
-        if _sc_intersects(tblock, ttarget, ev=True):
+        if g.pair_intersects(tblock, ttarget, extend_vertical=True):
             direction = "above" if tblock[2] > ttarget[2] else "below"
-        elif _sc_intersects(tblock, ttarget, eh=True):
+        elif g.pair_intersects(tblock, ttarget, extend_horizontal=True):
             direction = "right" if tblock[0] < ttarget[0] else "left"
-        elif _sc_inside(ttarget, tblock):
+        elif g.pair_is_inside(ttarget, tblock):
             direction = "below"
-        elif _sc_inside(tblock, ttarget):
+        elif g.pair_is_inside(tblock, ttarget):
             direction = "above"
         elif ttarget[2] < tblock[2]:
             direction = "above"
@@ -441,7 +312,7 @@ def calculate_block_attraction(doc: Document, block: int, target: int,
     attraction += 20
 
     border = {"above": "top", "below": "bottom", "left": "left", "right": "right"}[direction]
-    distance = _sc_distance(tblock, ttarget, border)
+    distance = g.pair_distance_to(tblock, ttarget, border)
     rng = max_d - min_d
     distance = abs((distance - min_d) / rng) if rng > 0 else 0.0
 
@@ -454,7 +325,7 @@ def calculate_block_attraction(doc: Document, block: int, target: int,
         if below_delims and block_area > 0:
             widest = max(below_delims,
                          key=lambda b: cache.tup(b)[1] - cache.tup(b)[0])
-            inter_area = _sc_inter_area(cache.tup(widest), tblock, ev=True)
+            inter_area = g.pair_inter_area(cache.tup(widest), tblock, extend_vertical=True)
             if direction == "below" and inter_area > 0:
                 attraction -= (inter_area / block_area) * 30
             elif direction != "below" and inter_area > 0:
@@ -465,7 +336,7 @@ def calculate_block_attraction(doc: Document, block: int, target: int,
         if right_delims and block_area > 0:
             tallest = max(right_delims,
                           key=lambda b: cache.tup(b)[3] - cache.tup(b)[2])
-            inter_area = _sc_inter_area(cache.tup(tallest), tblock, eh=True)
+            inter_area = g.pair_inter_area(cache.tup(tallest), tblock, extend_horizontal=True)
             if direction == "right" and inter_area > 0:
                 attraction -= (inter_area / block_area) * 30
             elif direction != "right" and inter_area > 0:
@@ -475,9 +346,9 @@ def calculate_block_attraction(doc: Document, block: int, target: int,
         attraction += round(20 * (1 - distance))
 
     # strip overlap ratio (``:1634-1650``)
-    inter_area = _sc_inter_area(ttarget, tblock,
-                                ev=direction in ("above", "below"),
-                                eh=direction not in ("above", "below"))
+    inter_area = g.pair_inter_area(ttarget, tblock,
+                                extend_vertical=direction in ("above", "below"),
+                                extend_horizontal=direction not in ("above", "below"))
     target_area = (ttarget[1] - ttarget[0]) * (ttarget[3] - ttarget[2])
     if target_area > 0:
         ratio = 1.0 if inter_area >= target_area else inter_area / target_area
@@ -497,8 +368,8 @@ def calculate_block_attraction(doc: Document, block: int, target: int,
             for bbk in below_blocks:
                 tk = cache.tup(bbk)
                 if bbk != target and \
-                        _sc_within_h(tk, tblock, rng=0.3, only_self=True) and \
-                        _sc_within_h(tk, ttarget, rng=0.3, only_self=True):
+                        g.pair_within_horizontal(tk, tblock, rng=0.3, only_self=True) and \
+                        g.pair_within_horizontal(tk, ttarget, rng=0.3, only_self=True):
                     attraction += 20
                     above_enc = cache.neighbors("above", bbk)
                     if above_enc and len([b for b in above_enc if b in (block, target)]) == 2:
@@ -508,8 +379,8 @@ def calculate_block_attraction(doc: Document, block: int, target: int,
             for tbk in top_blocks:
                 tk = cache.tup(tbk)
                 if tbk != target and \
-                        _sc_within_h(tk, tblock, rng=0.3, only_self=True) and \
-                        _sc_within_h(tk, ttarget, rng=0.3, only_self=True):
+                        g.pair_within_horizontal(tk, tblock, rng=0.3, only_self=True) and \
+                        g.pair_within_horizontal(tk, ttarget, rng=0.3, only_self=True):
                     attraction += 20
                     below_enc = cache.neighbors("below", tbk)
                     if below_enc and len([b for b in below_enc if b in (block, target)]) == 2:
@@ -562,9 +433,7 @@ def topologic_order_context(doc: Document, block_idx: list[int],
             # the reference computes the edge twice (child=True/False), but
             # ``child`` only gates its debug print (``:1496-1503``) — the
             # score is child/parent-agnostic, so one evaluation serves both
-            a = calculate_block_attraction(doc, s, t, blocks, cache=cache)
-            graph.cw[(s, t)] = a
-            graph.pw[(s, t)] = a
+            graph.cw[(s, t)] = calculate_block_attraction(doc, s, t, blocks, cache=cache)
     return graph
 
 

@@ -16,8 +16,6 @@ reproduced (SURVEY.md §4.1 anti-patterns).
 
 from __future__ import annotations
 
-import numpy as np
-
 from . import geometry as g
 from .doc import Document
 from .order import next_top_block
@@ -53,7 +51,7 @@ def reading_order_naive(doc: Document, block_idx: list[int]) -> list[int]:
     ``:730-855``): vertically-aligned blocks order left→right, lower blocks
     come after; next block = the visually-first horizontally-aligned block
     below, else the global visually-first remaining block."""
-    bb = doc.b_box
+    bb = doc.b_box.tolist()
     blocks = [i for i in block_idx if not doc.block_is_delimiter(i)]
     if not blocks:
         return []
@@ -63,14 +61,14 @@ def reading_order_naive(doc: Document, block_idx: list[int]) -> list[int]:
     remaining.remove(current)
     while remaining and current is not None:
         for b in remaining:
-            if g.within_vertical(bb[b], bb[current], rng=0.2):
-                if bb[b, g.L] >= bb[current, g.L] and current not in order_map[b]:
+            if g.pair_within_vertical(bb[b], bb[current], rng=0.2):
+                if bb[b][g.L] >= bb[current][g.L] and current not in order_map[b]:
                     order_map[current].append(b)
-            elif bb[b, g.T] > bb[current, g.T] and current not in order_map[b]:
+            elif bb[b][g.T] > bb[current][g.T] and current not in order_map[b]:
                 order_map[current].append(b)
         potential = [b for b in remaining
-                     if bb[b, g.T] > bb[current, g.T]
-                     and g.within_horizontal(bb[b], bb[current], rng=0.2)]
+                     if bb[b][g.T] > bb[current][g.T]
+                     and g.pair_within_horizontal(bb[b], bb[current], rng=0.2)]
         nxt = next_top_block(doc, potential) if potential else None
         if nxt is None:
             nxt = next_top_block(doc, remaining)
@@ -90,7 +88,7 @@ def next_top_block_context(doc: Document, blocks: list[int],
     visually-first non-title below it; text → continuation-aware below/right
     search honoring delimiters and start/end-text flags; image → best caption
     below.  Falls back to :func:`next_top_block` over non-delimiters."""
-    bb = doc.b_box
+    bb = doc.b_box.tolist()
     non_delims = [b for b in blocks if doc.b_type[b] != "delimiter"]
     if not non_delims:
         return None
@@ -107,8 +105,8 @@ def next_top_block_context(doc: Document, blocks: list[int],
             nxt = next_top_block(doc, potential)
     elif cur_type == "title":
         below = [b for b in non_delims
-                 if bb[b, g.T] > bb[current, g.T]
-                 and g.within_horizontal(bb[current], bb[b], rng=0.3)]
+                 if bb[b][g.T] > bb[current][g.T]
+                 and g.pair_within_horizontal(bb[current], bb[b], rng=0.3)]
         if below:
             cand = next_top_block(doc, below)
             if cand is not None and doc.b_type[cand] != "title":
@@ -116,39 +114,39 @@ def next_top_block_context(doc: Document, blocks: list[int],
     elif cur_type == "text":
         text_blocks = [b for b in blocks if doc.b_type[b] == "text"]
         below_all = [b for b in blocks
-                     if bb[b, g.T] > bb[current, g.T]
-                     and g.within_horizontal(bb[current], bb[b], rng=0.1)]
-        below_block = min(below_all, key=lambda b: bb[b, g.T]) if below_all else None
+                     if bb[b][g.T] > bb[current][g.T]
+                     and g.pair_within_horizontal(bb[current], bb[b], rng=0.1)]
+        below_block = min(below_all, key=lambda b: bb[b][g.T]) if below_all else None
         if doc.b_end_text[current] is False:
             if below_block is not None and doc.b_type[below_block] == "delimiter" and \
-                    int(g.width(bb[below_block])) > int(g.height(bb[below_block])):
+                    int(g.width(doc.b_box[below_block])) > int(g.height(doc.b_box[below_block])):
                 potential = [b for b in text_blocks
-                             if bb[b, g.T] < bb[below_block, g.T]
-                             and g.within_horizontal(bb[b], bb[below_block], rng=0.3)]
+                             if bb[b][g.T] < bb[below_block][g.T]
+                             and g.pair_within_horizontal(bb[b], bb[below_block], rng=0.3)]
                 if potential:
                     nxt = next_top_block(doc, potential)
             elif below_block is not None:
                 below = [b for b in text_blocks
-                         if bb[b, g.T] > bb[current, g.T]
-                         and g.within_horizontal(bb[b], bb[current], rng=0.3)]
+                         if bb[b][g.T] > bb[current][g.T]
+                         and g.pair_within_horizontal(bb[b], bb[current], rng=0.3)]
                 if below:
                     cand = next_top_block(doc, below)
                     if doc.b_start_text[cand] is False:
                         nxt = cand
                     else:
                         potential = [b for b in text_blocks
-                                     if not g.within_horizontal(bb[b], bb[current], rng=0.3)]
+                                     if not g.pair_within_horizontal(bb[b], bb[current], rng=0.3)]
                         nxt = next_top_block(doc, potential)
                         if nxt is not None and doc.b_start_text[nxt] is True:
                             nxt = next_top_block(doc, below)
                 else:
                     potential = [b for b in text_blocks
-                                 if not g.within_horizontal(bb[b], bb[current], rng=0.3)
+                                 if not g.pair_within_horizontal(bb[b], bb[current], rng=0.3)
                                  and doc.b_start_text[b] is False]
                     nxt = next_top_block(doc, potential)
             else:
                 potential = [b for b in text_blocks
-                             if not g.within_horizontal(bb[b], bb[current], rng=0.3)
+                             if not g.pair_within_horizontal(bb[b], bb[current], rng=0.3)
                              and doc.b_start_text[b] is False]
                 nxt = next_top_block(doc, potential)
         else:
@@ -160,11 +158,11 @@ def next_top_block_context(doc: Document, blocks: list[int],
                     nxt = below_block
             else:
                 potential = [b for b in text_blocks
-                             if not g.within_horizontal(bb[b], bb[current], rng=0.3)]
+                             if not g.pair_within_horizontal(bb[b], bb[current], rng=0.3)]
                 nxt = next_top_block(doc, potential)
     elif cur_type == "image":
         captions = [b for b in blocks
-                    if doc.b_type[b] == "caption" and bb[b, g.T] > bb[current, g.T]]
+                    if doc.b_type[b] == "caption" and bb[b][g.T] > bb[current][g.T]]
         if captions:
             nxt = next_top_block(doc, captions)
 

@@ -27,7 +27,7 @@ from __future__ import annotations
 from .analyzer import analyze_text
 from .classify import boilerplate_mask, categorize_blocks
 from .doc import Document
-from .emit import article_to_txt, assemble_article, document_text
+from .emit import article_to_txt, assemble_article, normalize_text
 from .fix import clean_doc
 from .hocr import parse_hocr
 from .order import graph_isolate_articles, sort_topologic_order, topologic_order_context
@@ -56,7 +56,7 @@ def extract_document(doc: Document, conf: int = 10, clean: bool = False) -> dict
 
     assembled = [assemble_article(doc, art) for art in articles]
     raw = "".join(article_to_txt(a) for a in assembled)
-    norm = document_text(doc, articles, normalize=True)
+    norm = normalize_text(raw)
     article_rows = [
         (idx,
          (a["title"] or "").strip(),

@@ -80,32 +80,48 @@ def test_neighbor_tables_wide_page_no_overflow():
     assert tabs["above"][n - 1] == [n - 2]
 
 
-@settings(max_examples=300, deadline=None)
-@given(boxes, boxes)
-def test_scalar_order_helpers_match_geometry(a, b):
-    """order.py's tuple-box scalar helpers must agree with the numpy
-    geometry kernels (they carry the attraction path)."""
-    from osdocr_spark.kernels import order as o
+# boxes that may be zero-width or zero-height
+flat_boxes = st.tuples(st.integers(0, 50), st.integers(0, 50),
+                       st.integers(0, 50), st.integers(0, 50)).map(
+    lambda t: (min(t[0], t[1]), max(t[0], t[1]), min(t[2], t[3]), max(t[2], t[3])))
 
-    ta = tuple(int(v) for v in a)
-    tb = tuple(int(v) for v in b)
-    assert o._sc_inside(ta, tb) == bool(g.is_inside(a, b))
-    for ev, eh in ((False, False), (True, False), (False, True)):
-        assert o._sc_intersects(ta, tb, ev, eh) == bool(
-            g.intersects(a, b, extend_vertical=ev, extend_horizontal=eh))
-        got = o._sc_inter_area(ta, tb, ev, eh)
-        want = int(g.area(g.intersect_area_box(
-            a, b, extend_vertical=ev, extend_horizontal=eh)))
-        assert got == want, (ta, tb, ev, eh)
-    for rng in (0.0, 0.05, 0.3):
+
+@settings(max_examples=300, deadline=None)
+@given(flat_boxes, flat_boxes, st.booleans())
+def test_scalar_order_helpers_match_geometry(ta, tb, as_list):
+    """Every pair-form function of geometry.py agrees with its broadcast
+    form on plain-int tuples and lists, zero-width boxes included: booleans
+    and integers exactly, distances within one ulp (math.hypot vs
+    np.hypot).  ``remove_box_area`` has only the pair form; it is checked
+    against the numpy reference in ``fix_reference.py``."""
+    import math
+
+    import fix_reference
+
+    a, b = np.array(ta, np.int64), np.array(tb, np.int64)
+    if as_list:
+        ta, tb = list(ta), list(tb)
+    assert g.pair_is_inside(ta, tb) is bool(g.is_inside(a, b))
+    for ev, eh in ((False, False), (True, False), (False, True), (True, True)):
+        for inside in (False, True):
+            assert g.pair_intersects(ta, tb, ev, eh, inside) is bool(g.intersects(
+                a, b, extend_vertical=ev, extend_horizontal=eh, inside=inside))
+        want = g.intersect_area_box(a, b, extend_vertical=ev, extend_horizontal=eh)
+        assert g.pair_intersect_area_box(ta, tb, ev, eh) == want.tolist()
+        assert g.pair_inter_area(ta, tb, ev, eh) == int(g.area(want)), (ta, tb, ev, eh)
+    for rng in (0.0, 0.05, 0.1, 0.3):
         for only_self in (False, True):
-            assert o._sc_within_h(ta, tb, rng, only_self) == bool(
+            assert g.pair_within_horizontal(ta, tb, rng, only_self) is bool(
                 g.within_horizontal(a, b, rng=rng, only_self=only_self))
-            assert o._sc_within_v(ta, tb, rng, only_self) == bool(
+            assert g.pair_within_vertical(ta, tb, rng, only_self) is bool(
                 g.within_vertical(a, b, rng=rng, only_self=only_self))
-    for border in ("left", "right", "top", "bottom"):
-        assert o._sc_distance(ta, tb, border) == float(
-            g.distance_to(a, b, border=border))
+    for border in (None, "left", "right", "top", "bottom"):
+        got = g.pair_distance_to(ta, tb, border)
+        want = float(g.distance_to(a, b, border=border))
+        assert abs(got - want) <= math.ulp(want), (ta, tb, border)
+    cut = g.remove_box_area(ta, tb)
+    assert all(type(v) is int for v in cut)
+    assert cut == fix_reference.remove_box_area(a, b).tolist()
 
 
 @settings(max_examples=300, deadline=None)
@@ -130,7 +146,7 @@ def test_intersect_area_box_symmetry(a, b):
 def test_remove_box_area_disjoint_or_stable(a, b):
     out = g.remove_box_area(a, b)
     # result is contained in the original
-    assert bool(g.is_inside(out, a))
+    assert g.pair_is_inside(out, a)
 
 
 def test_whittaker_matches_dense_solve():
@@ -474,6 +490,63 @@ def test_small_operator_parity_helpers():
 
 
 
+def test_get_delimiters_search_area():
+    """get_delimiters(search_area=...) keeps exactly the delimiter blocks
+    fully inside the area (closed edges) — the per-block pair form over the
+    same blocks — alone, with the orientation filter, and for an area given
+    as a list."""
+    from osdocr_spark.kernels.corpus import generate_page
+    from osdocr_spark.kernels.hocr import parse_hocr
+
+    doc = parse_hocr(generate_page(1, "the fast key order sort table scan " * 12))
+    delims = doc.get_delimiters()
+    assert len(delims) == 2  # the two column rules of a 3-column page
+    first, second = (doc.b_box[d].tolist() for d in delims)
+    page = doc.b_box.max(axis=0)
+    areas = [
+        np.array([0, int(page[g.R]), 0, int(page[g.B])], np.int64),  # whole page
+        np.array([0, first[g.R], 0, int(page[g.B])], np.int64),      # left part
+        np.array(second, np.int64),                                   # exact box
+        np.array([second[g.L], second[g.R], second[g.T] + 1, second[g.B]], np.int64),
+    ]
+    got = [doc.get_delimiters(search_area=a) for a in areas]
+    assert got == [delims, delims[:1], delims[1:], []]
+    for a, want in zip(areas, got):
+        assert want == [d for d in delims
+                        if g.pair_is_inside(doc.b_box[d].tolist(), a.tolist())]
+        assert doc.get_delimiters(search_area=a.tolist()) == want
+        assert doc.get_delimiters(search_area=a, orientation="vertical") == want
+        assert doc.get_delimiters(search_area=a, orientation="horizontal") == []
+
+
+def test_dgraph_transitive_reduction():
+    """DGraph.transitive_reduction on a hand-built DAG: an edge implied by a
+    longer path is removed, an edge no other path replaces is kept with its
+    weight, and ``visit_order`` limits the reduction to the listed nodes."""
+    from osdocr_spark.kernels.order import DGraph
+
+    def build():
+        gr = DGraph()
+        for i in range(5):
+            gr.add_node(i)
+        for s, t, w in ((0, 1, 10), (1, 2, 20), (0, 2, 30),   # 0→2 implied
+                        (2, 3, 40), (1, 3, 50),               # 1→3 implied
+                        (0, 4, 60), (4, 3, 70)):              # both needed
+            gr.add_edge(s, t, w)
+        return gr
+
+    gr = build()
+    gr.transitive_reduction(visit_order=[1])
+    assert sorted(gr.children[1]) == [2] and (1, 3) not in gr.cw
+    assert sorted(gr.children[0]) == [1, 2, 4]  # node 0 not visited
+
+    gr = build()
+    gr.transitive_reduction()
+    assert {s: sorted(c) for s, c in gr.children.items()} == {
+        0: [1, 4], 1: [2], 2: [3], 3: [], 4: [3]}
+    assert gr.cw == {(0, 1): 10, (1, 2): 20, (2, 3): 40, (0, 4): 60, (4, 3): 70}
+
+
 def test_large_document_bounded_and_byte_identical():
     """Domain-skew robustness: a 50k-word (~1.2 MB) page — far above the
     corpus P99 — still extracts with byte parity and bounded wall (the
@@ -734,13 +807,16 @@ def test_block_properties_on_interleaved_word_table():
 
 
 def test_next_top_block_vec_matches_loop():
-    """Exact A/B parity of the whole-array next_top_block against the
-    scalar walk — full sets, reversed and random candidate subsets, two
-    origins, over adversarial/noisy/multi-article pages (tie-break
-    coverage: the duplicate top-blocks at the head of the leftmost pool)."""
+    """Exact A/B parity of the whole-array next_top_block in
+    ``order_reference.py`` against the package's scalar walk — full sets,
+    reversed and random candidate subsets (32+ candidates, more than any
+    generated page's main blocks), two origins, over
+    adversarial/noisy/multi-article pages (tie-break coverage: the
+    duplicate top-blocks at the head of the leftmost pool)."""
     import random
 
     import duckdb
+    from order_reference import _next_top_block_vec
 
     from osdocr_spark.kernels import order as O
     from osdocr_spark.kernels.corpus import generate_page_adversarial
@@ -759,8 +835,8 @@ def test_next_top_block_vec_matches_loop():
                 rng.sample(idx, k=min(n, max(32, n // 2))) for _ in range(2)]
             for cand in cands:
                 for origin in ((0.0, 0.0), (100.0, 50.0)):
-                    assert (O._next_top_block_vec(d, cand, origin)
-                            == O._next_top_block_loop(d, cand, origin)), \
+                    assert (_next_top_block_vec(d, cand, origin)
+                            == O.next_top_block(d, cand, origin)), \
                         (doc_id, kw, origin, len(cand))
                     checked += 1
     assert checked == 480
