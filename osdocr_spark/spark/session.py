@@ -4,6 +4,12 @@ Tuned for the 100 TB design point (SURVEY.md §4.2) while testing on
 ``local[N]``: AQE on (runtime re-planning + skew-join mitigation), Arrow
 transfer on for every pandas stage, and modest Arrow batch sizes so a single
 multi-MB page cannot stall a Python worker (domain-skew note, SURVEY.md §7.3).
+
+Python workers start from :mod:`osdocr_spark.spark.daemon`, so they import
+the driver's pyspark instead of Spark's zips, which every task would
+otherwise rescan before its UDF runs (0.15-0.25 s per task, Python 3.11 on a
+4-vCPU host). The package root goes on ``spark.executorEnv.PYTHONPATH`` so
+workers find that module even when the driver runs outside the checkout.
 """
 
 from __future__ import annotations
@@ -13,6 +19,8 @@ import os
 from pyspark.sql import SparkSession
 
 __all__ = ["get_spark", "stop_spark"]
+
+_ROOT = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def get_spark(app: str = "osdocr-spark", cpus: int | None = None,
@@ -26,6 +34,7 @@ def get_spark(app: str = "osdocr-spark", cpus: int | None = None,
     for var in ("OMP_NUM_THREADS", "OPENBLAS_NUM_THREADS", "MKL_NUM_THREADS",
                 "NUMEXPR_NUM_THREADS"):
         os.environ.setdefault(var, "1")
+    worker_path = os.pathsep.join(filter(None, [_ROOT, os.environ.get("PYTHONPATH")]))
     return (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app)
@@ -38,6 +47,8 @@ def get_spark(app: str = "osdocr-spark", cpus: int | None = None,
         .config("spark.executorEnv.OMP_NUM_THREADS", "1")
         .config("spark.executorEnv.OPENBLAS_NUM_THREADS", "1")
         .config("spark.executorEnv.MKL_NUM_THREADS", "1")
+        .config("spark.python.daemon.module", "osdocr_spark.spark.daemon")
+        .config("spark.executorEnv.PYTHONPATH", worker_path)
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .getOrCreate()
