@@ -61,9 +61,7 @@ def get_text_sizes(doc: Document, conf: int = 10,
     wsel = np.nonzero(conf_ok & eligible[doc.w_block])[0]
     if len(wsel) == 0:
         return out
-    key = (doc.w_block[wsel] * 1_000_000_000_000
-           + doc.w_par[wsel] * 1_000_000 + doc.w_line[wsel])
-    uniq, inv = np.unique(key, return_inverse=True)
+    uniq, inv = np.unique(doc.line_key()[wsel], return_inverse=True)
     h = g.height(doc.w_box[wsel]).astype(np.float64)
     hsum = np.bincount(inv, weights=h, minlength=len(uniq))
     cnt = np.bincount(inv, minlength=len(uniq))
@@ -150,8 +148,7 @@ def get_journal_areas(doc: Document) -> dict:
         wi = doc.words_of(bi)
         if len(wi) == 0:
             continue
-        key = doc.w_par[wi] * 1_000_000 + doc.w_line[wi]
-        uniq, inv = np.unique(key, return_inverse=True)
+        uniq, inv = np.unique(doc.line_key()[wi], return_inverse=True)
         tmin = np.full(len(uniq), np.iinfo(np.int64).max)
         np.minimum.at(tmin, inv, doc.w_box[wi, g.T])
         ok = (doc.w_conf[wi] >= 1) & np.fromiter(
@@ -207,8 +204,7 @@ def average_word_distance(doc: Document, conf: int = 10) -> float:
     sel = np.nonzero(doc.w_conf >= conf)[0]
     if len(sel) < 2:
         return 0.0
-    key = (doc.w_block[sel].astype(np.int64) * 1_000_000_000_000
-           + doc.w_par[sel] * 1_000_000 + doc.w_line[sel])
+    key = doc.line_key()[sel]
     same_line = key[1:] == key[:-1]
     gaps = (doc.w_box[sel[1:], g.L] - doc.w_box[sel[:-1], g.R])[same_line]
     return float(gaps.sum()) / len(gaps) if len(gaps) else 0.0

@@ -44,7 +44,7 @@ def _start_end_flags(text: str) -> tuple[bool, bool]:
     return start, end
 
 
-def categorize_blocks(doc: Document, conf: int = 10, override: bool = False,
+def categorize_blocks(doc: Document, conf: int = 10,
                       analysis: dict | None = None) -> dict:
     """Assign a type to every level-2 block in place; returns the analysis
     dict (``categorize_boxes``, ``ocr_tree_analyser.py:1202-1231``).
@@ -56,13 +56,12 @@ def categorize_blocks(doc: Document, conf: int = 10, override: bool = False,
     semantics is branch 4's "caption directly above" check (a caption
     assigned at j < bi is visible to bi, one at j > bi is not); that is
     replicated by a bookkeeping walk over just the caption-relevant blocks.
-    Exact parity with the sequential loop is pinned by
+    Exact parity with the sequential loop (``tests/classify_reference.py``)
+    is pinned by
     ``tests/test_kernels.py::test_categorize_vectorized_matches_loop`` over
     every corpus family, and end-to-end by the five byte-parity gauntlets.
-    ``override=True`` (no production call site) keeps the reference loop:
-    re-typing makes every ``b_type`` read order-dependent."""
-    if override:
-        return _categorize_blocks_loop(doc, conf, override, analysis)
+    Already-typed blocks keep their type; the reference's ``override``
+    re-typing has no caller and is not ported."""
     if analysis is None:
         analysis = analyze_text(doc, conf=conf)
     normal = analysis.get("normal_text_size", 0)
@@ -146,65 +145,6 @@ def categorize_blocks(doc: Document, conf: int = 10, override: bool = False,
         doc.b_start_text[bi] = start
         doc.b_end_text[bi] = end
     doc.b_type[todo] = btype[todo]
-    return analysis
-
-
-def _categorize_blocks_loop(doc: Document, conf: int = 10,
-                            override: bool = False,
-                            analysis: dict | None = None) -> dict:
-    """The sequential reference decision tree — kept verbatim as the parity
-    baseline for the vectorized path (and the ``override=True`` path)."""
-    if analysis is None:
-        analysis = analyze_text(doc, conf=conf)
-    normal = analysis.get("normal_text_size", 0)
-    avg_char_w = analysis.get("average_character_width", 0.0)
-    all_idx = np.arange(doc.n_blocks())
-    # one all-pairs pass instead of a per-block strip+prune semi-join call
-    above_tbl = nb.neighbor_tables(doc.b_box, all_idx, kinds=("above",))["above"]
-
-    for bi in range(doc.n_blocks()):
-        if doc.b_type[bi] is not None and not override:
-            continue
-        btype = None
-        if doc.block_is_empty(bi, conf=conf, only_text=True):
-            btype = "delimiter" if doc.block_is_delimiter(bi, conf=conf) else "other"
-        else:
-            mh = doc.block_mean_word_height(bi, conf=conf)
-            mw = doc.block_char_mean_width(bi, conf=conf)
-            is_text_size = doc.block_is_text_size(bi, normal, mean_height=mh, rng=0.1)
-            title_range = (
-                not doc.block_is_text_size(bi, normal, mean_height=mh, rng=1.0)
-                or not (avg_char_w * 0.5 <= mw <= avg_char_w * 1.5)
-            )
-            above = above_tbl[bi]
-
-            if is_text_size and not title_range:
-                if not any(doc.block_is_image(ai, conf=conf) for ai in above):
-                    btype = "text"
-                else:
-                    btype = "caption"
-            elif doc.block_is_vertical_text(bi, conf=conf):
-                btype = "text"
-            elif mh > normal and title_range:
-                wi = doc.words_of(bi)
-                nwords = sum(1 for i in wi
-                             if doc.w_conf[i] >= conf and doc.w_text[i].strip())
-                btype = "title" if nwords < 10 else "highlight"
-            elif mh < normal and any(
-                doc.block_is_image(ai, conf=conf) or doc.b_type[ai] == "caption"
-                for ai in above
-            ):
-                btype = "caption"
-
-            # continuation flags use a min conf of 50 (``:1167-1169``)
-            text = doc.block_to_text(bi, conf=max(50, conf)).strip()
-            start, end = _start_end_flags(text)
-            doc.b_start_text[bi] = start
-            doc.b_end_text[bi] = end
-
-        if btype is None:
-            btype = "text" if not doc.block_is_empty(bi, conf=conf) else "other"
-        doc.b_type[bi] = btype
     return analysis
 
 

@@ -23,6 +23,8 @@ import numpy as np
 from . import geometry as g
 
 _WORD_CHAR = re.compile(r"[\w\d]")
+#: place values of the packed (block, par, line) key, see ``Document.line_key``
+_KEY_BLOCK, _KEY_PAR = 1_000_000_000_000, 1_000_000
 
 def _overlap_vote(grp: np.ndarray, boxes: np.ndarray, size: np.ndarray,
                   within, n_of: np.ndarray) -> np.ndarray:
@@ -99,6 +101,7 @@ class Document:
         self._w_len = None
         self._w_nonblank_arr: np.ndarray | None = None
         self._word_order_memo = None
+        self._line_key_memo: np.ndarray | None = None
         self._line_cache: dict = {}
         self._nonempty_cache: dict = {}
         self._metric_arr_cache: dict = {}
@@ -129,6 +132,15 @@ class Document:
                                      np.arange(self.n_blocks() + 1))
             self._word_order_memo = (order, starts)
         return self._word_order_memo
+
+    def line_key(self) -> np.ndarray:
+        """Per-word packed line key ``w_block·10¹² + w_par·10⁶ + w_line``
+        (int64): equal keys are one line, and key order is (block, par,
+        line) order.  Computed on first use."""
+        if self._line_key_memo is None:
+            self._line_key_memo = (self.w_block.astype(np.int64) * _KEY_BLOCK
+                                   + self.w_par * _KEY_PAR + self.w_line)
+        return self._line_key_memo
 
     def words_of(self, bi: int) -> np.ndarray:
         """Word indices of block ``bi`` in pre-order."""
@@ -202,9 +214,7 @@ class Document:
         wi = np.arange(len(self.w_text))
         if conf >= 0:
             wi = wi[self.w_conf >= conf]
-        key = (self.w_block[wi] * 1_000_000_000_000
-               + self.w_par[wi] * 1_000_000 + self.w_line[wi])
-        uniq, inv = np.unique(key, return_inverse=True)
+        uniq, inv = np.unique(self.line_key()[wi], return_inverse=True)
         nl = len(uniq)
         boxes = np.empty((nl, 4), dtype=np.int64)
         for c, fn in ((g.L, np.minimum), (g.R, np.maximum),
@@ -214,9 +224,9 @@ class Document:
             fn.at(init, inv, self.w_box[wi, c])
             boxes[:, c] = init
         counts = np.bincount(inv, minlength=nl)
-        blk = uniq // 1_000_000_000_000
-        rem = uniq % 1_000_000_000_000
-        keys = np.stack([rem // 1_000_000, rem % 1_000_000], axis=1)
+        blk = uniq // _KEY_BLOCK
+        rem = uniq % _KEY_BLOCK
+        keys = np.stack([rem // _KEY_PAR, rem % _KEY_PAR], axis=1)
         bounds = np.searchsorted(blk, np.arange(self.n_blocks() + 1)).tolist()
         tables = [(keys[s:e], boxes[s:e], counts[s:e])
                   for s, e in zip(bounds[:-1], bounds[1:])]

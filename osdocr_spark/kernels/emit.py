@@ -24,7 +24,8 @@ import re
 from .doc import Document
 
 __all__ = ["fix_hifenization", "assemble_article", "make_article",
-           "article_to_txt", "article_pretty_print", "document_text", "normalize_text"]
+           "article_to_txt", "article_pretty_print", "document_text", "normalize_text",
+           "text_spans"]
 
 _HYPHen_NL = r"(\w)[\r\t\f\v ]*-(\s*\n\s*-*)([a-z0-9_])"
 _HYPHen_WS = r"(\w)[\r\t\f\v ]*-[\r\t\f\v ]*([a-z0-9_])"
@@ -47,11 +48,15 @@ def assemble_article(doc: Document, block_order: list[int], conf: int = 0) -> di
     """Build an article dict from ordered blocks
     (``Article.from_ocr_trees``, ``article.py:45-139``).
 
-    Returns ``{title, subtitle: [..], abstract, body: [(kind, text), ...]}``.
+    Returns ``{title, subtitle: [..], abstract, body: [(kind, text), ...],
+    text_words}``.
     Title = highest-mean-word-height block among the leading title-typed
     blocks (scan stops at the first 'text' block once a candidate exists);
     other leading non-text blocks become abstract candidates; everything but
     the title block becomes the body, consecutive text items joined by ' '.
+    ``text_words`` lists the blocks whose words :func:`article_to_txt`
+    writes, in its order (the title block, then the non-image body blocks),
+    each as ``(block, indices of its words confident at conf)``.
     """
     potential_titles: list[int] = []
     abstract_blocks: list[int] = []
@@ -98,8 +103,14 @@ def assemble_article(doc: Document, block_order: list[int], conf: int = 0) -> di
     # the field (``article.py:25``) but ``from_ocr_trees`` never derives it —
     # it is only populated via the explicit constructor (``:142-148``,
     # mirrored by :func:`make_article`) and consumed by pretty-print/str.
+    text_blocks = [title_block] if title else []
+    text_blocks += [b for b in body_blocks if doc.b_type[b] != "image"]
+    text_words = []
+    for bi in text_blocks:
+        wi = doc.words_of(bi)
+        text_words.append((bi, wi[doc.w_conf[wi] >= conf]))
     return {"title": title, "subtitle": subtitle, "authors": [],
-            "abstract": abstract, "body": body}
+            "abstract": abstract, "body": body, "text_words": text_words}
 
 
 def make_article(title: str | None, authors: list[str], abstract: str | None,
@@ -171,6 +182,54 @@ def normalize_text(raw: str) -> str:
     canonical form compared against the DuckDB oracle (the raw form is the
     byte-parity artifact asserted in the golden pytest suite)."""
     return _WS.sub(" ", raw).strip()
+
+
+def text_spans(doc: Document, articles: list[dict], text: str) -> list[tuple[int, int, int]]:
+    """Per-block character spans ``(block_id, start, end)`` over ``text``,
+    the :func:`normalize_text` form of the ``articles``.
+    ``text[start:end]`` holds the block's words; the next span starts at
+    ``end + 1`` and the last ends at ``len(text)``.
+
+    Reads the emitted text instead of re-deriving it.  The articles'
+    ``text_words`` (in emission order) are split into whitespace-free
+    pieces, as :func:`normalize_text` splits them, and walked along
+    ``text``: a piece character either matches the next text character or
+    was dropped by the emission, which only deletes hyphens and whitespace
+    (``fix_hifenization``'s joins, whitespace collapsing).  A text token
+    belongs to the block whose piece supplied its first character, so a
+    hyphen-joined word counts for the block of its first fragment.  The
+    literal ``None`` a title-less article writes belongs to no block and
+    lies outside every span."""
+    stream: list[tuple[int | None, str]] = []
+    for a in articles:
+        if a["title"] is None:
+            stream.append((None, "None"))
+        for bi, wi in a["text_words"]:
+            bid = int(doc.b_id[bi])
+            stream.extend((bid, piece) for w in doc.w_text[wi] for piece in w.split())
+    n = len(text)
+    starts: list[int] = []        # token start offsets, in text order
+    owners: list[int | None] = []  # the block id owning each token
+    pos = 0
+    for bid, piece in stream:
+        if pos < n and text[pos] == " ":
+            pos += 1
+        for c in piece:
+            if pos < n and text[pos] == c:
+                if pos == 0 or text[pos - 1] == " ":
+                    starts.append(pos)
+                    owners.append(bid)
+                pos += 1
+    spans: list[tuple[int, int, int]] = []
+    for k, bid in enumerate(owners):
+        if bid is None:
+            continue
+        end = starts[k + 1] - 1 if k + 1 < len(starts) else n
+        if k and owners[k - 1] == bid:
+            spans[-1] = (bid, spans[-1][1], end)
+        else:
+            spans.append((bid, starts[k], end))
+    return spans
 
 
 def document_text(doc: Document, articles: list[list[int]], conf: int = 0,

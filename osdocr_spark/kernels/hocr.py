@@ -48,7 +48,6 @@ _ELEM = re.compile(
     r"(?:(" + _TEXT_RUN + r"(?:<(?!/?span\b)[^>]*>" + _TEXT_RUN + r")*)</span>)?",
     re.DOTALL,
 )
-_BBOX = re.compile(r"bbox (-?\d+) (-?\d+) (-?\d+) (-?\d+)")
 _WCONF = re.compile(r"x_wconf (-?\d+)")
 # fast path: hOCR title attrs put x_wconf after bbox (Tesseract order); one
 # search replaces two.  Falls back to the separate searches when the

@@ -73,28 +73,6 @@ def left(bb: np.ndarray, i: int, cand: np.ndarray) -> np.ndarray:
     return cand[hit]
 
 
-def _dominance_prune(bb: np.ndarray, picked: np.ndarray, axis_top: int,
-                     later: str) -> np.ndarray:
-    """Drop b1 if some other picked b2 overlaps it on the extension axis and
-    b1 starts strictly *later* than b2 (``ocr_tree.py:879-894`` et al.)."""
-    k = len(picked)
-    if k <= 1:
-        return picked
-    boxes = bb[picked]
-    if later == "top_greater":       # directly_below: b1.top > b2.top invalid
-        pair = g.intersects(boxes[:, None, :], boxes[None, :, :], extend_vertical=True, inside=True)
-        worse = boxes[:, None, g.T] > boxes[None, :, g.T]
-    elif later == "left_greater":    # directly_right: b1.left > b2.left invalid
-        pair = g.intersects(boxes[:, None, :], boxes[None, :, :], extend_horizontal=True, inside=True)
-        worse = boxes[:, None, g.L] > boxes[None, :, g.L]
-    else:                             # directly_above: b1.bottom < b2.bottom invalid
-        pair = g.intersects(boxes[:, None, :], boxes[None, :, :], extend_vertical=True, inside=True)
-        worse = boxes[:, None, g.B] < boxes[None, :, g.B]
-    same = np.eye(k, dtype=bool)
-    invalid = ((pair & worse) & ~same).any(axis=1)
-    return picked[~invalid]
-
-
 def neighbor_tables(bb: np.ndarray, idxs: np.ndarray,
                     kinds: tuple = ("below", "right", "above")) -> dict:
     """All-pairs ``directly_below``/``directly_right``/``directly_above``
@@ -102,18 +80,9 @@ def neighbor_tables(bb: np.ndarray, idxs: np.ndarray,
     every block's neighbors, so n separate strip+prune calls redo the same
     pairwise overlap tests n times.
 
-    Exactness notes (A/B-verified against the per-call functions):
-
-    - the vertical strip's ``all_bottom`` bound is vacuous for candidates
-      drawn from the same set (every candidate's top ≤ its bottom ≤ the
-      max), so the strip test reduces to pairwise x-overlap;
-    - ``inside=True`` in the dominance pair test is redundant (containment
-      implies axis overlap for well-formed boxes).
-
     Returns ``{"below"|"right"|"above": {i: [j, ...]}}`` with neighbor lists
     in ``idxs`` order (matching the per-call candidate order
-    ``idxs[idxs != i]``); ``kinds`` restricts which directions are computed
-    (callers like the classifier only need one).
+    ``idxs[idxs != i]``); ``kinds`` restricts which directions are computed.
     """
     k = len(idxs)
     out: dict[str, dict[int, list[int]]] = {kd: {} for kd in kinds}
@@ -131,9 +100,22 @@ def neighbor_tables(bb: np.ndarray, idxs: np.ndarray,
 def neighbor_matrices(bb: np.ndarray, idxs: np.ndarray,
                       kinds: tuple = ("below", "right", "above")) -> dict:
     """The matrix form of :func:`neighbor_tables`: ``direct[a, b]`` = block
-    ``idxs[b]`` is a direct neighbor of ``idxs[a]`` in the given direction.
-    Same math; vectorized consumers (the classifier) index the rows
-    directly instead of paying the per-block Python list build."""
+    ``idxs[b]`` is a direct neighbor of ``idxs[a]`` in the given direction
+    (``boxes_directly_*``, ``ocr_tree.py:867-951``).  This is the only
+    implementation: :func:`directly_below` and its twins read one row of
+    it.  The reference's per-call strip+prune (kept as the parity twin in
+    ``tests/neighbors_reference.py``) reduces to these masks exactly for
+    well-formed boxes (left ≤ right, top ≤ bottom):
+
+    - the vertical strip runs from the page edge y = 0 down to the
+      candidates' max bottom, and every candidate's top ≤ its bottom ≤ that
+      max, so the strip test is x-overlap plus ``bottom ≥ 0``;
+    - ``inside=True`` in the dominance pair test is redundant (containment
+      implies axis overlap);
+    - the dominance anti-join "drop j if some other hit k overlaps it on
+      the strip axis and j starts later" is one boolean matrix product
+      over the hit matrix.
+    """
     k = len(idxs)
     if k == 0:
         return {kd: np.zeros((0, 0), dtype=bool) for kd in kinds}
@@ -146,16 +128,17 @@ def neighbor_matrices(bb: np.ndarray, idxs: np.ndarray,
     inside = (L_[:, None] >= L_[None, :]) & (R_[:, None] <= R_[None, :]) \
         & (T_[:, None] >= T_[None, :]) & (B_[:, None] <= B_[None, :])
     not_inside = ~inside.T  # [i, j]: j not inside i
+    edge = (B_ >= 0)[None, :]  # j reaches the strip's y = 0 page edge
     eye = np.eye(k, dtype=bool)
 
     # hit matrices + dominance anti-joins per direction:
     # invalid[i, j] = ∃k∈hit[i]: pair(j,k) & j later
     spec = {
-        "below": lambda: ((T_[None, :] > T_[:, None]) & not_inside & xov,
+        "below": lambda: ((T_[None, :] > T_[:, None]) & not_inside & xov & edge,
                           xov & (T_[:, None] > T_[None, :]) & ~eye),
         "right": lambda: ((R_[None, :] > R_[:, None]) & not_inside & yov & ~xov,
                           yov & (L_[:, None] > L_[None, :]) & ~eye),
-        "above": lambda: ((B_[None, :] < B_[:, None]) & not_inside & xov,
+        "above": lambda: ((B_[None, :] < B_[:, None]) & not_inside & xov & edge,
                           xov & (B_[:, None] < B_[None, :]) & ~eye),
     }
     out = {}
@@ -172,43 +155,25 @@ def neighbor_matrices(bb: np.ndarray, idxs: np.ndarray,
     return out
 
 
-def directly_below(bb: np.ndarray, i: int, cand: np.ndarray) -> np.ndarray:
-    """``boxes_directly_below`` (``ocr_tree.py:867-894``): strip semi-join +
-    not-inside filter + nearest-neighbor dominance anti-join."""
+def _direct_row(kind: str, bb: np.ndarray, i: int, cand: np.ndarray) -> np.ndarray:
+    """Row ``i`` of :func:`neighbor_matrices` over ``[i, *cand]``: the
+    candidates that are direct ``kind`` neighbors of block ``i``."""
     if len(cand) == 0:
         return cand
-    eb = _strip_extended_vertical(bb, i, int(bb[cand, g.B].max()))
-    hit = (
-        (bb[cand, g.T] > bb[i, g.T])
-        & ~g.is_inside(bb[cand], bb[i][None, :])
-        & g.intersects(bb[cand], eb[None, :])
-    )
-    return _dominance_prune(bb, cand[hit], g.T, "top_greater")
+    idxs = np.concatenate(([i], cand))
+    return cand[neighbor_matrices(bb, idxs, (kind,))[kind][0, 1:]]
+
+
+def directly_below(bb: np.ndarray, i: int, cand: np.ndarray) -> np.ndarray:
+    """``boxes_directly_below`` (``ocr_tree.py:867-894``)."""
+    return _direct_row("below", bb, i, cand)
 
 
 def directly_right(bb: np.ndarray, i: int, cand: np.ndarray) -> np.ndarray:
-    """``boxes_directly_right`` (``ocr_tree.py:897-925``): right of target's
-    right edge, horizontally-extended intersect, and *not* intersecting the
-    vertically-extended target (i.e. no x-overlap)."""
-    if len(cand) == 0:
-        return cand
-    hit = (
-        (bb[cand, g.R] > bb[i, g.R])
-        & ~g.is_inside(bb[cand], bb[i][None, :])
-        & g.intersects(bb[cand], bb[i][None, :], extend_horizontal=True)
-        & ~g.intersects(bb[cand], bb[i][None, :], extend_vertical=True)
-    )
-    return _dominance_prune(bb, cand[hit], g.L, "left_greater")
+    """``boxes_directly_right`` (``ocr_tree.py:897-925``)."""
+    return _direct_row("right", bb, i, cand)
 
 
 def directly_above(bb: np.ndarray, i: int, cand: np.ndarray) -> np.ndarray:
     """``boxes_directly_above`` (``ocr_tree.py:928-951``)."""
-    if len(cand) == 0:
-        return cand
-    eb = _strip_extended_vertical(bb, i, int(bb[cand, g.B].max()))
-    hit = (
-        (bb[cand, g.B] < bb[i, g.B])
-        & ~g.is_inside(bb[cand], bb[i][None, :])
-        & g.intersects(bb[cand], eb[None, :])
-    )
-    return _dominance_prune(bb, cand[hit], g.B, "bottom_less")
+    return _direct_row("above", bb, i, cand)

@@ -269,7 +269,6 @@ class _AttractionCache:
 
 def calculate_block_attraction(doc: Document, block: int, target: int,
                                blocks: list[int], direction: str | None = None,
-                               child: bool = True,
                                cache: "_AttractionCache | None" = None) -> int:
     """Attraction score between two blocks (``calculate_block_attraction``,
     ``ocr_tree_analyser.py:1496-1789``): direction bonus, delimiter

@@ -15,7 +15,8 @@ Mirrors the reference's target lifecycle (``O/pipeline.py:971-1093`` →
               (``extract_articles`` path, ``ocr_tree_analyser.py:1919-1944``)
 6. articles + emit — article isolation, assembly, ``to_txt`` with
               ``fix_hifenization``; raw bytes (parity artifact) + normalized
-              text + per-block character spans.
+              text + per-block character spans read off that text
+              (:func:`~osdocr_spark.kernels.emit.text_spans`).
 
 The function is pure and deterministic — one Python call per document, all
 inner loops numpy or O(blocks²) with tens of blocks.  The Spark layer feeds
@@ -27,7 +28,7 @@ from __future__ import annotations
 from .analyzer import analyze_text
 from .classify import boilerplate_mask, categorize_blocks
 from .doc import Document
-from .emit import article_to_txt, assemble_article, normalize_text
+from .emit import article_to_txt, assemble_article, normalize_text, text_spans
 from .fix import clean_doc
 from .hocr import parse_hocr
 from .order import graph_isolate_articles, sort_topologic_order, topologic_order_context
@@ -64,55 +65,6 @@ def extract_document(doc: Document, conf: int = 10, clean: bool = False) -> dict
         for idx, a in enumerate(assembled)
     ]
 
-    # per-block character spans over the normalized text: the normalized
-    # text is the ' '-joined confident word stream in emission order with
-    # hyphen-split words re-joined, so offsets are exact cumulative sums
-    # (hyphen merges replicate fix_hifenization's join, attributed to the
-    # block holding the first fragment)
-    emitted: list[int] = []
-    for art, a in zip(articles, assembled):  # reuse: assemble is pure
-        title_block = None
-        if a["title"] is not None:
-            cands = [b for b in art if doc.b_type[b] == "title"]
-            if cands:
-                title_block = max(cands, key=lambda b: doc.block_mean_word_height(b))
-                emitted.append(title_block)
-        emitted.extend(b for b in art if b != title_block and doc.b_type[b] != "image")
-    tokens: list[tuple[int, str]] = []
-    for bi in emitted:
-        tokens.extend(
-            (int(doc.b_id[bi]), doc.w_text[i])
-            for i in doc.words_of(bi) if doc.w_conf[i] >= 0 and doc.w_text[i]
-        )
-    merged: list[tuple[int, str]] = []
-    i = 0
-    n_merges = 0
-    while i < len(tokens):
-        bid, w = tokens[i]
-        nxt = tokens[i + 1][1] if i + 1 < len(tokens) else ""
-        joinable_next = nxt[:1].islower() or nxt[:1].isdigit() or nxt[:1] == "_"
-        if (n_merges < 8 and len(w) >= 2 and w.endswith("-")
-                and (w[-2].isalnum() or w[-2] == "_") and joinable_next):
-            merged.append((bid, w[:-1] + nxt))
-            i += 2
-            n_merges += 1
-        else:
-            merged.append((bid, w))
-            i += 1
-    spans: list[tuple[int, int, int]] = []
-    pos = 0
-    cur_bid = None
-    cur_start = 0
-    for bid, w in merged:
-        if bid != cur_bid:
-            if cur_bid is not None:
-                spans.append((cur_bid, cur_start, pos - 1))
-            cur_bid = bid
-            cur_start = pos
-        pos += len(w) + 1
-    if cur_bid is not None:
-        spans.append((cur_bid, cur_start, pos - 1))
-
     n_cols = len(analysis.get("columns", []))
     return {
         "url": doc.url,
@@ -125,7 +77,7 @@ def extract_document(doc: Document, conf: int = 10, clean: bool = False) -> dict
         "normal_text_size": int(analysis.get("normal_text_size", 0)),
         "detected_columns": n_cols,
         "reading_order": [int(doc.b_id[i]) for i in order],
-        "spans": spans,
+        "spans": text_spans(doc, assembled, norm),
         "block_types": [str(t) for t in doc.b_type],
         "article_rows": article_rows,
     }

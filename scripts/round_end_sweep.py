@@ -13,7 +13,8 @@ truth kernel-side (no Spark) over the full sf0.1 corpus:
                                        whenever the layout plants 2)
   4. byte parity, adversarial layouts (ragged/caption/vertical/>127-block)
   5. detected_columns == generated n_cols; normal_text_size == generated
-  6. span tiling (spans exactly tile [0, len(text)-1], gap 1 between)
+  6. span tiling, every variant (spans exactly tile [0, len(text)-1],
+     gap 1 between)
   7. 3-way reading-order agreement (graph == naive == naive-context)
 
 Usage::
@@ -92,20 +93,20 @@ def check_doc(args: tuple[int, str]) -> list[str]:
         fails.append(f"{doc_id}:multi n_articles "
                      f"{results['multi']['n_articles']}!={want_arts}")
 
-    # span tiling over the normalized text (plain layout): each span's end
+    # span tiling over the normalized text, every variant: each span's end
     # covers the separator after its last word, so starts are adjacent
     # (next start == prev end + 1) and the final end == len(text) (virtual
     # trailing separator) — the exact contract the green extract_spans
     # oracle pins at sf0.01
-    spans = plain["spans"]
-    pos = 0
-    for bid, s, e in spans:
-        if s != pos or e < s:
-            fails.append(f"{doc_id}:span-tiling at block {bid} ({s},{e},pos={pos})")
-            break
-        pos = e + 1
-    if spans and spans[-1][2] != len(plain["text"]):
-        fails.append(f"{doc_id}:span-tail {spans[-1][2]}!={len(plain['text'])}")
+    for name, r in results.items():
+        pos = 0
+        for bid, s, e in r["spans"]:
+            if s != pos or e < s:
+                fails.append(f"{doc_id}:{name}:span-tiling at block {bid} ({s},{e},pos={pos})")
+                break
+            pos = e + 1
+        if r["spans"] and r["spans"][-1][2] != len(r["text"]):
+            fails.append(f"{doc_id}:{name}:span-tail {r['spans'][-1][2]}!={len(r['text'])}")
 
     # 3-way reading-order agreement (plain layout)
     doc = parse_hocr(variants["plain"], url=url)
@@ -144,7 +145,7 @@ def main() -> int:
             print(" ", f)
         return 1
     print(f"all checks green: byte parity x{len(VARIANTS)} variants, columns/size exact, "
-          "multi-article isolation, span tiling, 3-way order agreement")
+          f"multi-article isolation, span tiling x{len(VARIANTS)}, 3-way order agreement")
     return 0
 
 

@@ -16,6 +16,7 @@ from osdocr_spark.kernels.smoothing import find_peaks, whittaker_smooth
 
 sys.path.insert(0, os.path.dirname(__file__))
 import doc_reference as ref  # noqa: E402
+import neighbors_reference as nref  # noqa: E402
 
 boxes = st.tuples(st.integers(0, 50), st.integers(0, 50),
                   st.integers(0, 50), st.integers(0, 50)).map(
@@ -36,25 +37,42 @@ def test_intersects_matches_scalar(a, b):
     assert bool(g.intersects(a, b)) == _scalar_intersects(a, b)
 
 
-box_sets = st.lists(boxes, min_size=1, max_size=10)
+# well-formed boxes (left <= right, top <= bottom) that may cross the page
+# edges x = 0 and y = 0, where the reference's strips start
+edge_boxes = st.tuples(st.integers(-30, 50), st.integers(-30, 50),
+                       st.integers(-30, 50), st.integers(-30, 50)).map(
+    lambda t: np.array([min(t[0], t[1]), max(t[0], t[1]) + 1,
+                        min(t[2], t[3]), max(t[2], t[3]) + 1], dtype=np.int64))
+box_sets = st.lists(edge_boxes, min_size=1, max_size=10)
+
+
+def _assert_neighbors_match_reference(bb, rows):
+    """``neighbor_tables`` and the package ``directly_*`` both equal the
+    per-call strip+prune twins in ``tests/neighbors_reference.py``."""
+    from osdocr_spark.kernels import neighbors as nb
+
+    idxs = np.arange(len(bb), dtype=np.int64)
+    tabs = nb.neighbor_tables(bb, idxs)
+    for kind in ("below", "right", "above"):
+        ref_fn = getattr(nref, f"directly_{kind}")
+        fn = getattr(nb, f"directly_{kind}")
+        for i in rows:
+            cand = idxs[idxs != i]
+            want = [int(x) for x in ref_fn(bb, int(i), cand)]
+            assert tabs[kind][int(i)] == want, (kind, int(i), bb.tolist())
+            assert [int(x) for x in fn(bb, int(i), cand)] == want, (kind, int(i), bb.tolist())
+    return tabs
 
 
 @settings(max_examples=150, deadline=None)
 @given(box_sets)
 def test_neighbor_tables_match_per_call(bxs):
-    """The batched all-pairs neighbor tables must agree with the per-call
-    strip+prune semi-joins on arbitrary box sets (they are A/B-identical on
-    the corpus; this guards the general case)."""
-    from osdocr_spark.kernels import neighbors as nb
-
+    """The matrix neighbors (all-pairs tables and the per-block row reads)
+    must agree with the reference's per-call strip+prune semi-joins on
+    arbitrary well-formed box sets, including boxes above or left of the
+    page edge."""
     bb = np.stack(bxs)
-    idxs = np.arange(len(bxs), dtype=np.int64)
-    tabs = nb.neighbor_tables(bb, idxs)
-    for kind, fn in (("below", nb.directly_below), ("right", nb.directly_right),
-                     ("above", nb.directly_above)):
-        for i in idxs:
-            ref = [int(x) for x in fn(bb, int(i), idxs[idxs != i])]
-            assert tabs[kind][int(i)] == ref, (kind, int(i), bb.tolist())
+    _assert_neighbors_match_reference(bb, range(len(bxs)))
 
 
 def test_neighbor_tables_wide_page_no_overflow():
@@ -63,18 +81,10 @@ def test_neighbor_tables_wide_page_no_overflow():
     wrap (128 matching (hit, pair) entries → negative → prune skipped).
     A 200-block single-column stack makes every lower block a below-hit of
     block 0 with ~199 pair entries; only the adjacent block may survive."""
-    from osdocr_spark.kernels import neighbors as nb
-
     n = 200
     # one column: block i spans y ∈ [10·i, 10·i+8], same x extent
     bb = np.array([[0, 100, 10 * i, 10 * i + 8] for i in range(n)], dtype=np.int64)
-    idxs = np.arange(n, dtype=np.int64)
-    tabs = nb.neighbor_tables(bb, idxs)
-    for kind, fn in (("below", nb.directly_below), ("right", nb.directly_right),
-                     ("above", nb.directly_above)):
-        for i in (0, 1, n // 2, n - 2, n - 1):
-            ref = [int(x) for x in fn(bb, int(i), idxs[idxs != i])]
-            assert tabs[kind][int(i)] == ref, (kind, int(i))
+    tabs = _assert_neighbors_match_reference(bb, (0, 1, n // 2, n - 2, n - 1))
     # the stack's semantics: exactly the adjacent block is directly below
     assert tabs["below"][0] == [1]
     assert tabs["above"][n - 1] == [n - 2]
@@ -608,13 +618,13 @@ def test_adversarial_generator_survives_over_long_words():
 
 def test_categorize_vectorized_matches_loop():
     """Exact A/B parity of the vectorized classifier against the sequential
-    reference loop (kept as _categorize_blocks_loop) — b_type and both
+    reference loop (tests/classify_reference.py) — b_type and both
     continuation flags, over every generator family incl. all five
     adversarial layouts (the caption/vertical/dense branches live there)."""
     import duckdb
 
-    from osdocr_spark.kernels.classify import (_categorize_blocks_loop,
-                                               categorize_blocks)
+    from classify_reference import _categorize_blocks_loop
+    from osdocr_spark.kernels.classify import categorize_blocks
     from osdocr_spark.kernels.corpus import (generate_page,
                                              generate_page_adversarial)
     from osdocr_spark.kernels.hocr import parse_hocr
