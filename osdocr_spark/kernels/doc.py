@@ -25,6 +25,34 @@ from . import geometry as g
 _WORD_CHAR = re.compile(r"[\w\d]")
 #: place values of the packed (block, par, line) key, see ``Document.line_key``
 _KEY_BLOCK, _KEY_PAR = 1_000_000_000_000, 1_000_000
+_I64 = np.iinfo(np.int64)
+
+
+def delimiter_aspect(w, h):
+    """The ≥4:1 aspect, either way, that makes an empty block a delimiter
+    (``is_delimiter``, ``ocr_tree.py:588-600``); ints or arrays."""
+    return (w >= h * 4) | (h >= w * 4)
+
+
+def box_orientation(b) -> str:
+    """One box's orientation: ``horizontal`` (wider than tall),
+    ``vertical`` (taller than wide) or ``square``."""
+    w, h = b[g.R] - b[g.L], b[g.B] - b[g.T]
+    return "horizontal" if w > h else ("vertical" if w < h else "square")
+
+
+def group_hulls(grp: np.ndarray, boxes: np.ndarray, n: int) -> tuple[np.ndarray, np.ndarray]:
+    """The hull of every group's boxes, ``(n, 4)`` int64, and each group's
+    box count; box ``i`` is in group ``grp[i]``.  A group without boxes
+    gets left/top at the int64 maximum and right/bottom at the minimum."""
+    hull = np.empty((n, 4), dtype=np.int64)
+    for c, fn in ((g.L, np.minimum), (g.R, np.maximum),
+                  (g.T, np.minimum), (g.B, np.maximum)):
+        col = np.full(n, _I64.max if fn is np.minimum else _I64.min)
+        fn.at(col, grp, boxes[:, c])
+        hull[:, c] = col
+    return hull, np.bincount(grp, minlength=n)
+
 
 def _overlap_vote(grp: np.ndarray, boxes: np.ndarray, size: np.ndarray,
                   within, n_of: np.ndarray) -> np.ndarray:
@@ -53,13 +81,16 @@ class Document:
 
     Contract: the arrays are never reassigned after construction, and the
     word columns and ``b_box`` are never written in place — a mutation
-    builds a new ``Document`` (``fix.clean_doc``, ``translate_doc``,
-    ``scale_doc``).  Every per-block property (``words_of``, ``line_table``,
-    the word metrics, the vertical verdict, ``block_to_text``) is one
-    whole-document pass computed on first use and memoized per ``conf``
-    (and delimiters), so the per-block accessors are index reads.  Only
-    the label columns ``b_id``/``b_type``/``b_start_text``/``b_end_text``
-    are written in place (categorize, id assignment); no memo reads them."""
+    builds a new ``Document``: ``translate_doc`` and ``scale_doc`` replace
+    columns, and ``fix.clean_doc`` edits block rows over its own copies of
+    the written word columns (a ``fix.Page``) and gathers them into a new
+    ``Document`` at the end.  Every per-block property (``words_of``,
+    ``line_table``, the word metrics, the vertical verdict,
+    ``block_to_text``) is one whole-document pass computed on first use
+    and memoized per ``conf`` (and delimiters), so the per-block accessors
+    are index reads.  Only the label columns
+    ``b_id``/``b_type``/``b_start_text``/``b_end_text`` are written in
+    place (categorize, id assignment); no memo reads them."""
 
     url: str
     #: (Nw, 4) int64 [left, right, top, bottom]
@@ -147,6 +178,16 @@ class Document:
         order, starts = self._word_order()
         return order[starts[bi]:starts[bi + 1]]
 
+    def block_words(self, words: np.ndarray | None = None) -> list[list[int]]:
+        """Every block's word indices in pre-order as Python lists, keeping
+        only the words in the ``words`` mask when one is given."""
+        order, starts = self._word_order()
+        if words is not None:
+            order = order[words[order]]
+            starts = np.searchsorted(self.w_block[order], np.arange(self.n_blocks() + 1))
+        flat, bounds = order.tolist(), starts.tolist()
+        return [flat[s:e] for s, e in zip(bounds[:-1], bounds[1:])]
+
     # ---------------------------------------------------------- block preds
     def block_is_empty(self, bi: int, conf: int = 0, only_text: bool = False) -> bool:
         """``OCR_Tree.is_empty`` (``ocr_tree.py:570-577``): no ``[\\w\\d]``
@@ -155,31 +196,42 @@ class Document:
             return False
         return not bool(self.nonempty_mask(conf)[bi])
 
+    def text_word_mask(self, conf: int = 0) -> np.ndarray:
+        """Per-word bool mask: the word has ``[\\w\\d]`` text at
+        confidence ≥ ``conf`` — a block is empty when none of its words
+        has it."""
+        return (self.w_conf >= conf) & self._w_has_char
+
     def nonempty_mask(self, conf: int = 0) -> np.ndarray:
         """Whole-document bool mask: block has ``[\\w\\d]`` text above
         ``conf`` — the vectorized complement of ``is_empty(only_text=True)``
         (one bincount serves every block; memoized per conf)."""
         nonempty = self._nonempty_cache.get(conf)
         if nonempty is None:
-            mask = (self.w_conf >= conf) & self._w_has_char
-            nonempty = np.bincount(self.w_block[mask],
+            nonempty = np.bincount(self.w_block[self.text_word_mask(conf)],
                                    minlength=self.n_blocks()) > 0
             self._nonempty_cache[conf] = nonempty
         return nonempty
 
     def block_is_delimiter(self, bi: int, conf: int = 0, only_type: bool = False) -> bool:
         """``is_delimiter`` (``ocr_tree.py:588-600``): typed, or empty with
-        ≥4:1 aspect ratio either way."""
+        the delimiter aspect."""
         if self.b_type[bi] == "delimiter":
             return True
         if only_type:
             return False
-        if self.block_is_empty(bi, conf):
-            b = self.b_box[bi]
-            w = int(g.width(b))
-            h = int(g.height(b))
-            return w >= h * 4 or h >= w * 4
-        return False
+        b = self.b_box[bi]
+        return self.block_is_empty(bi, conf) and delimiter_aspect(
+            int(g.width(b)), int(g.height(b)))
+
+    def delimiter_mask(self, conf: int = 0) -> np.ndarray:
+        """Whole-document ``block_is_delimiter``: typed delimiter, or a
+        non-image block empty at ``conf`` with the delimiter aspect.  Not
+        memoized, since it reads ``b_type``."""
+        t = self.b_type
+        empty = ~self.nonempty_mask(conf) & (t != "image")
+        return (t == "delimiter") | (empty & delimiter_aspect(
+            g.width(self.b_box), g.height(self.b_box)))
 
     def block_is_image(self, bi: int, conf: int = 0, text_size: int = 0,
                        only_type: bool = False) -> bool:
@@ -215,15 +267,7 @@ class Document:
         if conf >= 0:
             wi = wi[self.w_conf >= conf]
         uniq, inv = np.unique(self.line_key()[wi], return_inverse=True)
-        nl = len(uniq)
-        boxes = np.empty((nl, 4), dtype=np.int64)
-        for c, fn in ((g.L, np.minimum), (g.R, np.maximum),
-                      (g.T, np.minimum), (g.B, np.maximum)):
-            init = np.full(nl, np.iinfo(np.int64).max if fn is np.minimum
-                           else np.iinfo(np.int64).min)
-            fn.at(init, inv, self.w_box[wi, c])
-            boxes[:, c] = init
-        counts = np.bincount(inv, minlength=nl)
+        boxes, counts = group_hulls(inv, self.w_box[wi], len(uniq))
         blk = uniq // _KEY_BLOCK
         rem = uniq % _KEY_BLOCK
         keys = np.stack([rem // _KEY_PAR, rem % _KEY_PAR], axis=1)
@@ -401,22 +445,11 @@ class Document:
                        orientation: str | None = None, conf: int = 0) -> list[int]:
         """Delimiter blocks, optionally restricted to an area / orientation
         (``get_delimiters``, ``ocr_tree.py:671-686``)."""
-        in_area = (None if search_area is None
-                   else g.is_inside(self.b_box, np.asarray(search_area)))
-        out = []
-        for bi in range(self.n_blocks()):
-            if not self.block_is_delimiter(bi, conf=conf):
-                continue
-            if in_area is not None and not in_area[bi]:
-                continue
-            if orientation:
-                w = int(g.width(self.b_box[bi]))
-                h = int(g.height(self.b_box[bi]))
-                o = "horizontal" if w > h else ("vertical" if w < h else "square")
-                if o != orientation:
-                    continue
-            out.append(bi)
-        return out
+        mask = self.delimiter_mask(conf)
+        if search_area is not None:
+            mask &= g.is_inside(self.b_box, np.asarray(search_area))
+        return [bi for bi in np.flatnonzero(mask).tolist()
+                if not orientation or box_orientation(self.b_box[bi]) == orientation]
 
     def blocks_intersect_area(self, area: np.ndarray, area_ratio: float = 0.0,
                               ignore_type: tuple = ()) -> np.ndarray:

@@ -225,34 +225,18 @@ def topologic_graph(doc: Document, block_idx: list[int]) -> DGraph | None:
 
 
 class _AttractionCache:
-    """Per-(document, block-set) memo for the directional semi-joins and the
-    distance normalization reused across every edge weighting call."""
+    """Per-(document, block-set) tables read by every edge weighting call:
+    each block's tuple box (``tup``), its directional neighbors
+    (``neighbors[kind][i]``) and its distance normalization.  The graph's
+    nodes and every neighbor asked about come from the block set, so each
+    read is a lookup."""
 
     def __init__(self, doc: Document, blocks: list[int]):
         self.doc = doc
         self.barr = np.array(blocks, dtype=np.int64)
-        self.tb = _tuple_boxes(doc.b_box, blocks)
-        self._tables: dict | None = None
+        self.tup = _tuple_boxes(doc.b_box, blocks)
+        self.neighbors = nb.neighbor_tables(doc.b_box, self.barr)
         self._dist: dict[int, tuple[float, float]] = {}
-
-    def tup(self, i: int) -> tuple[int, int, int, int]:
-        hit = self.tb.get(i)
-        if hit is None:
-            bb = self.doc.b_box
-            hit = (int(bb[i, 0]), int(bb[i, 1]), int(bb[i, 2]), int(bb[i, 3]))
-            self.tb[i] = hit
-        return hit
-
-    def neighbors(self, kind: str, i: int) -> list[int]:
-        if self._tables is None:
-            self._tables = nb.neighbor_tables(self.doc.b_box, self.barr)
-        hit = self._tables[kind].get(i)
-        if hit is None:  # i outside the block set: per-call fallback
-            fn = {"below": nb.directly_below, "right": nb.directly_right,
-                  "above": nb.directly_above}[kind]
-            hit = [int(x) for x in fn(self.doc.b_box, i, self.barr[self.barr != i])]
-            self._tables[kind][i] = hit
-        return hit
 
     def dist_range(self, i: int) -> tuple[float, float]:
         hit = self._dist.get(i)
@@ -268,8 +252,7 @@ class _AttractionCache:
 
 
 def calculate_block_attraction(doc: Document, block: int, target: int,
-                               blocks: list[int], direction: str | None = None,
-                               cache: "_AttractionCache | None" = None) -> int:
+                               cache: _AttractionCache) -> int:
     """Attraction score between two blocks (``calculate_block_attraction``,
     ``ocr_tree_analyser.py:1496-1789``): direction bonus, delimiter
     crossing penalty/bonus (±30·overlap ratio), normalized proximity
@@ -280,31 +263,29 @@ def calculate_block_attraction(doc: Document, block: int, target: int,
     Pair-form geometry over tuple boxes throughout (``geometry.pair_*``):
     one pair of boxes per test, the same arithmetic as the broadcast
     form."""
-    if cache is None:
-        cache = _AttractionCache(doc, blocks)
-    tblock = cache.tup(block)
-    ttarget = cache.tup(target)
+    tup, neighbors = cache.tup, cache.neighbors
+    tblock = tup[block]
+    ttarget = tup[target]
     max_d, min_d = cache.dist_range(block)
 
     attraction = 0
 
-    if direction is None:
-        if g.pair_intersects(tblock, ttarget, extend_vertical=True):
-            direction = "above" if tblock[2] > ttarget[2] else "below"
-        elif g.pair_intersects(tblock, ttarget, extend_horizontal=True):
-            direction = "right" if tblock[0] < ttarget[0] else "left"
-        elif g.pair_is_inside(ttarget, tblock):
-            direction = "below"
-        elif g.pair_is_inside(tblock, ttarget):
-            direction = "above"
-        elif ttarget[2] < tblock[2]:
-            direction = "above"
-        else:
-            direction = "below"
+    if g.pair_intersects(tblock, ttarget, extend_vertical=True):
+        direction = "above" if tblock[2] > ttarget[2] else "below"
+    elif g.pair_intersects(tblock, ttarget, extend_horizontal=True):
+        direction = "right" if tblock[0] < ttarget[0] else "left"
+    elif g.pair_is_inside(ttarget, tblock):
+        direction = "below"
+    elif g.pair_is_inside(tblock, ttarget):
+        direction = "above"
+    elif ttarget[2] < tblock[2]:
+        direction = "above"
+    else:
+        direction = "below"
 
-    below_blocks = cache.neighbors("below", block)
-    right_blocks = cache.neighbors("right", block)
-    top_blocks = cache.neighbors("above", block)
+    below_blocks = neighbors["below"][block]
+    right_blocks = neighbors["right"][block]
+    top_blocks = neighbors["above"][block]
 
     # unconditional direction bonus (the reference's disjunction covers all
     # four directions, ``:1558-1562``)
@@ -317,14 +298,14 @@ def calculate_block_attraction(doc: Document, block: int, target: int,
 
     block_area = (tblock[1] - tblock[0]) * (tblock[3] - tblock[2])
     if below_blocks:
-        leftmost = _first_min(below_blocks, key=lambda b: cache.tup(b)[0])
+        leftmost = _first_min(below_blocks, key=lambda b: tup[b][0])
         if leftmost == target:
             attraction += 10
         below_delims = [b for b in below_blocks if doc.b_type[b] == "delimiter"]
         if below_delims and block_area > 0:
             widest = max(below_delims,
-                         key=lambda b: cache.tup(b)[1] - cache.tup(b)[0])
-            inter_area = g.pair_inter_area(cache.tup(widest), tblock, extend_vertical=True)
+                         key=lambda b: tup[b][1] - tup[b][0])
+            inter_area = g.pair_inter_area(tup[widest], tblock, extend_vertical=True)
             if direction == "below" and inter_area > 0:
                 attraction -= (inter_area / block_area) * 30
             elif direction != "below" and inter_area > 0:
@@ -334,8 +315,8 @@ def calculate_block_attraction(doc: Document, block: int, target: int,
         right_delims = [b for b in right_blocks if doc.b_type[b] == "delimiter"]
         if right_delims and block_area > 0:
             tallest = max(right_delims,
-                          key=lambda b: cache.tup(b)[3] - cache.tup(b)[2])
-            inter_area = g.pair_inter_area(cache.tup(tallest), tblock, extend_horizontal=True)
+                          key=lambda b: tup[b][3] - tup[b][2])
+            inter_area = g.pair_inter_area(tup[tallest], tblock, extend_horizontal=True)
             if direction == "right" and inter_area > 0:
                 attraction -= (inter_area / block_area) * 30
             elif direction != "right" and inter_area > 0:
@@ -359,29 +340,29 @@ def calculate_block_attraction(doc: Document, block: int, target: int,
     else:
         if direction in ("right", "above"):
             attraction += 40
-            if len(cache.neighbors("above", target)) == 0:
+            if len(neighbors["above"][target]) == 0:
                 attraction += 20
 
     if direction in ("below", "right"):
         if below_blocks:
             for bbk in below_blocks:
-                tk = cache.tup(bbk)
+                tk = tup[bbk]
                 if bbk != target and \
                         g.pair_within_horizontal(tk, tblock, rng=0.3, only_self=True) and \
                         g.pair_within_horizontal(tk, ttarget, rng=0.3, only_self=True):
                     attraction += 20
-                    above_enc = cache.neighbors("above", bbk)
+                    above_enc = neighbors["above"][bbk]
                     if above_enc and len([b for b in above_enc if b in (block, target)]) == 2:
                         attraction += 20
                     break
         if top_blocks:
             for tbk in top_blocks:
-                tk = cache.tup(tbk)
+                tk = tup[tbk]
                 if tbk != target and \
                         g.pair_within_horizontal(tk, tblock, rng=0.3, only_self=True) and \
                         g.pair_within_horizontal(tk, ttarget, rng=0.3, only_self=True):
                     attraction += 20
-                    below_enc = cache.neighbors("below", tbk)
+                    below_enc = neighbors["below"][tbk]
                     if below_enc and len([b for b in below_enc if b in (block, target)]) == 2:
                         attraction += 20
                     break
@@ -417,22 +398,19 @@ def calculate_block_attraction(doc: Document, block: int, target: int,
     return attraction
 
 
-def topologic_order_context(doc: Document, block_idx: list[int],
-                            ignore_delimiters: bool = False) -> DGraph | None:
+def topologic_order_context(doc: Document, block_idx: list[int]) -> DGraph | None:
     """Graph + attraction weights on every child and parent edge
     (``topologic_order_context``, ``ocr_tree_analyser.py:1458-1492``)."""
-    blocks = [i for i in block_idx
-              if not (ignore_delimiters and doc.b_type[i] == "delimiter")]
     graph = topologic_graph(doc, block_idx)
     if graph is None:
         return None
-    cache = _AttractionCache(doc, blocks)
+    cache = _AttractionCache(doc, block_idx)
     for s in graph.order:
         for t in graph.children[s]:
             # the reference computes the edge twice (child=True/False), but
             # ``child`` only gates its debug print (``:1496-1503``) — the
             # score is child/parent-agnostic, so one evaluation serves both
-            graph.cw[(s, t)] = calculate_block_attraction(doc, s, t, blocks, cache=cache)
+            graph.cw[(s, t)] = calculate_block_attraction(doc, s, t, cache)
     return graph
 
 
