@@ -81,10 +81,8 @@ def categorize_blocks(doc: Document, conf: int = 10,
     # these masks already apply to empty untyped blocks)
     img_typed = np.fromiter((t == "image" for t in typed0), bool, n)
     empty_g = ~nonT & ~img_typed  # is_empty(conf, only_text=False)
-    bw = g.width(doc.b_box).astype(np.int64)
     bh = g.height(doc.b_box).astype(np.int64)
-    is_delim = (np.fromiter((t == "delimiter" for t in typed0), bool, n)
-                | (empty_g & ((bw >= bh * 4) | (bh >= bw * 4))))
+    is_delim = doc.delimiter_mask(conf)
     img_like = (img_typed | (empty_g & ~is_delim)) & (bh > 0)
     above_img = (above & img_like[None, :]).any(axis=1)
 

@@ -568,11 +568,13 @@ def unite_blocks(page: Page, conf: int = 10) -> None:
 
     out = list(page.rows)
     i = 0
+    below_of = None  # directly_below over the whole block set, row per block
     while i < len(out):
         target = out[i]
-        bb = np.array([b.box for b in out], np.int64).reshape(-1, 4)
-        others = np.array([k for k in range(len(out)) if k != i], np.int64)
-        below = [out[k] for k in nb.directly_below(bb, i, others)]
+        if below_of is None:
+            bb = np.array([b.box for b in out], np.int64).reshape(-1, 4)
+            below_of = nb.neighbor_matrices(bb, np.arange(len(out)), ("below",))["below"]
+        below = [out[k] for k in np.nonzero(below_of[i])[0]]
         same = [b for b in below if b.type == target.type]
         if not page.is_empty(target, conf, only_text=True):
             vertical = page.document([target] + same).vertical_mask(conf).tolist()
@@ -604,7 +606,9 @@ def unite_blocks(page: Page, conf: int = 10) -> None:
             join_blocks(page, target, head)
             out.remove(head)
             united = True
-        if not united:
+        if united:
+            below_of = None  # boxes and block set changed
+        else:
             i += 1
     page.rows = out
 

@@ -16,8 +16,11 @@ SURVEY.md §4.1 "anti-patterns"):
   where an id is expected (``ocr_tree_analyser.py:1415``), making it vacuous.
   We implement the *intended* reachability (fresh visited set per call,
   id-keyed), which yields the documented newspaper order deterministically.
-- list-mutation-during-iteration in ``topologic_graph``'s ancestor cleaning
-  (``:1297-1301``) is replaced by a filter with identical intended semantics.
+- ``topologic_graph``'s ancestor cleaning (``:1295-1301``, which mutates
+  the list it iterates) is left out: a node is visited once and has no
+  child edges before its visit, so "the current node already reaches the
+  target" never holds there.  The "not-already-ancestor" reading of it
+  (drop a target that reaches the current node) is not implemented either.
 """
 
 from __future__ import annotations
@@ -120,16 +123,6 @@ class DGraph:
                     alive.discard((s, t))
 
 
-def _first_min(items: list[int], key) -> int:
-    best = items[0]
-    bk = key(best)
-    for it in items[1:]:
-        k = key(it)
-        if k < bk:
-            best, bk = it, k
-    return best
-
-
 def _tuple_boxes(bb: np.ndarray, idxs) -> dict[int, tuple[int, int, int, int]]:
     return {int(c): (int(bb[c, 0]), int(bb[c, 1]), int(bb[c, 2]), int(bb[c, 3]))
             for c in idxs}
@@ -156,16 +149,16 @@ def next_top_block(doc: Document, cand: list[int], origin: tuple[float, float] =
     band = [c for c in cand
             if any(g.pair_within_vertical(tb[c], tb[t], rng=0.05) for t in top_blocks)]
     pot = top_blocks + band
-    leftmost = _first_min(pot, key=lambda c: tb[c][0])
+    leftmost = min(pot, key=lambda c: tb[c][0])
     band2 = [c for c in cand if g.pair_within_horizontal(tb[c], tb[leftmost], rng=0.05)]
-    potential_top = _first_min(band2, key=lambda c: tb[c][2]) if band2 else None
+    potential_top = min(band2, key=lambda c: tb[c][2]) if band2 else None
 
     # --- left route
     min_left = min(tb[c][0] for c in cand)
     leftmost_blocks = [c for c in cand if tb[c][0] == min_left]
     band3 = [c for c in cand
              if any(g.pair_within_horizontal(tb[c], tb[t], rng=0.05) for t in leftmost_blocks)]
-    potential_left = _first_min(band3, key=lambda c: tb[c][2]) if band3 else None
+    potential_left = min(band3, key=lambda c: tb[c][2]) if band3 else None
 
     if potential_left is not None and potential_top is not None:
         dl = math.hypot(origin[0] - tb[potential_left][0], origin[1] - tb[potential_left][2])
@@ -175,16 +168,16 @@ def next_top_block(doc: Document, cand: list[int], origin: tuple[float, float] =
         return potential_left
     if potential_top is not None:
         return potential_top
-    return _first_min(cand, key=lambda c: tb[c][2])
+    return min(cand, key=lambda c: tb[c][2])
 
 
 def topologic_graph(doc: Document, block_idx: list[int]) -> DGraph | None:
     """Build the reading-order digraph over non-delimiter blocks
     (``topologic_graph``, ``ocr_tree_analyser.py:1235-1344``): traverse from
     the visually-first block; each visited block gets child edges to its
-    directly-right and directly-below neighbors (skipping targets already
-    reachable); next node is the visually-first unvisited below-neighbor,
-    else the global visually-first unvisited (linked if no below-neighbors).
+    directly-right and directly-below neighbors; next node is the
+    visually-first unvisited below-neighbor, else the global visually-first
+    unvisited (linked if no below-neighbors).
     """
     non_delims = [i for i in block_idx if doc.b_type[i] != "delimiter"]
     if not non_delims:
@@ -206,11 +199,7 @@ def topologic_graph(doc: Document, block_idx: list[int]) -> DGraph | None:
         visited.append(current)
         right_blocks = tables["right"][current]
         below_blocks = tables["below"][current]
-        potential = right_blocks + below_blocks
-        # skip targets the current node already reaches (ancestor check,
-        # ``:1295-1301`` — implemented as a filter, see module docstring)
-        potential = [p for p in potential if not graph.reaches(current, p)]
-        for p in potential:
+        for p in right_blocks + below_blocks:
             graph.add_edge(current, p)
 
         nxt = next_top_block(doc, [b for b in below_blocks if b not in visited],
@@ -298,7 +287,7 @@ def calculate_block_attraction(doc: Document, block: int, target: int,
 
     block_area = (tblock[1] - tblock[0]) * (tblock[3] - tblock[2])
     if below_blocks:
-        leftmost = _first_min(below_blocks, key=lambda b: tup[b][0])
+        leftmost = min(below_blocks, key=lambda b: tup[b][0])
         if leftmost == target:
             attraction += 10
         below_delims = [b for b in below_blocks if doc.b_type[b] == "delimiter"]

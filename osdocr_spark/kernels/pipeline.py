@@ -78,7 +78,6 @@ def extract_document(doc: Document, conf: int = 10, clean: bool = False) -> dict
         "detected_columns": n_cols,
         "reading_order": [int(doc.b_id[i]) for i in order],
         "spans": text_spans(doc, assembled, norm),
-        "block_types": [str(t) for t in doc.b_type],
         "article_rows": article_rows,
     }
 

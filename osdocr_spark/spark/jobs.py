@@ -9,7 +9,8 @@ local parquet and mapped 1:1 onto Iceberg for a real cluster:
   embarrassingly parallel per url.
 - **lineage + metrics** — the extraction stage stamps each output row with
   its task partition id; :func:`run_extract_job` aggregates a per-partition
-  ``metrics`` table (url count, word count, byte count) in the same pass.
+  ``metrics`` table (:func:`partition_metrics`: url, word, character and
+  article counts) in the same pass.
   On Iceberg this table is appended per snapshot commit.
 - **checkpoint / resume** — the output table is the checkpoint: on restart
   the job anti-joins already-committed urls and processes only the
@@ -27,8 +28,8 @@ from pyspark.sql import functions as F
 
 from .stages import extract_pages, pages_from_documents, salted_repartition
 
-__all__ = ["run_extract_job", "load_pages", "load_pages_from_hocr_dir",
-           "load_parsed_from_json_dir"]
+__all__ = ["run_extract_job", "partition_metrics", "load_pages",
+           "load_pages_from_hocr_dir", "load_parsed_from_json_dir"]
 
 
 def load_pages_from_hocr_dir(spark: SparkSession, hocr_dir: str,
@@ -85,6 +86,19 @@ def load_pages(spark: SparkSession, sf_dir: str, num_partitions: int | None = No
     docs = salted_repartition(docs, num_partitions, salt=salt, key="doc_id")
     return pages_from_documents(docs, noisy=noisy, multi_article=multi_article,
                                 adversarial=adversarial)
+
+
+def partition_metrics(extracted: DataFrame) -> DataFrame:
+    """The lineage metrics row: per extraction task partition, its url,
+    word, character and article counts.  Written by
+    :func:`run_extract_job` and, per micro-batch, by
+    :func:`~osdocr_spark.spark.streaming.stream_extract`."""
+    return extracted.groupBy("partition_id").agg(
+        F.count("*").alias("url_count"),
+        F.sum("n_words").alias("word_count"),
+        F.sum(F.length("text")).alias("char_count"),
+        F.sum("n_articles").alias("article_count"),
+    )
 
 
 def _resume_done(spark: SparkSession, path: str, resume: bool) -> DataFrame | None:
@@ -147,16 +161,7 @@ def run_extract_job(spark: SparkSession, sf_dir: str, out_dir: str,
     extracted.write.mode(mode).parquet(extracted_path)
 
     result = spark.read.parquet(extracted_path)
-    metrics = (
-        result.groupBy("partition_id")
-        .agg(
-            F.count("*").alias("url_count"),
-            F.sum("n_words").alias("word_count"),
-            F.sum(F.length("text")).alias("char_count"),
-            F.sum("n_articles").alias("article_count"),
-        )
-    )
-    metrics.write.mode("overwrite").parquet(metrics_path)
+    partition_metrics(result).write.mode("overwrite").parquet(metrics_path)
     summary = result.agg(
         F.count("*").alias("urls"),
         F.sum("n_words").alias("words"),

@@ -2,35 +2,68 @@
 
 The reference is strictly batch (SURVEY.md §2.11 — one document at a time,
 ``O/pipeline.py:971-1093``); since every kernel here is per-document pure,
-a streaming deployment is just ``readStream`` → the same ``mapInPandas``
-stage → ``writeStream``:
+a streaming deployment is just ``readStream`` → the same batch plans →
+``writeStream``, and this module adds only what is streaming-specific:
 
-- **source**: file-arrival stream over a parquet directory of pages (on a
-  real cluster: an Iceberg/Kafka stream of WARC records).
-- **transform**: :func:`~osdocr_spark.spark.stages.extract_pages` — narrow,
-  stateless, Arrow-batched; no watermark needed (no aggregation state).
-  Stateful companions: :func:`stream_domain_stats` (watermarked windowed
-  aggregation, append mode) and :func:`stream_first_seen`
-  (``applyInPandasWithState`` crawl dedup).
-- **sink**: parquet append with checkpointing — exactly-once per file via
-  the streaming file-source log, which *is* the resume story for the
-  streaming deployment (batch resume lives in
+- **source**: one file-arrival stream over a parquet directory of pages
+  (:func:`_pages`; on a real cluster: an Iceberg/Kafka stream of WARC
+  records).
+- **transform**: the batch builders, unchanged —
+  :func:`~osdocr_spark.spark.stages.extract_pages` (narrow, stateless,
+  Arrow-batched; no watermark needed) and the per-row signature
+  projections :func:`~osdocr_spark.ops.dedup.minhash_signatures` and
+  :func:`~osdocr_spark.ops.dedup.simhash_signatures`, so a streamed page
+  hashes to the bytes ``d_minhash``/``d_simhash`` give it.  Stateful
+  companions: :func:`stream_domain_stats` (watermarked windowed
+  aggregation) and three ``applyInPandasWithState`` operators —
+  :func:`stream_first_seen` (crawl dedup), :func:`stream_minhash_candidates`
+  and :func:`stream_simhash_dups` (near-dup pairing by LSH bucket).
+- **sink**: parquet append with checkpointing (:func:`_append`) —
+  exactly-once per file via the streaming file-source log, which *is* the
+  resume story for the streaming deployment (batch resume lives in
   :func:`~osdocr_spark.spark.jobs.run_extract_job`).
-- **metrics**: per micro-batch counts via ``foreachBatch`` appended to the
-  lineage table.
+- **metrics**: per micro-batch, the batch job's
+  :func:`~osdocr_spark.spark.jobs.partition_metrics` row plus ``batch_id``
+  via ``foreachBatch``.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..ops.dedup import minhash_bands, minhash_signatures, simhash_signatures
+from .jobs import partition_metrics
 from .stages import PAGES_SCHEMA, extract_pages
 
 __all__ = ["stream_extract", "stream_domain_stats", "stream_first_seen",
            "stream_minhash_candidates", "stream_simhash_dups"]
+
+
+def _pages(spark: SparkSession, pages_dir: str, max_files_per_trigger: int) -> DataFrame:
+    """The page source: new parquet files under ``pages_dir``, at most
+    ``max_files_per_trigger`` per micro-batch."""
+    return (spark.readStream.schema(PAGES_SCHEMA)
+            .option("maxFilesPerTrigger", str(max_files_per_trigger))
+            .parquet(pages_dir))
+
+
+def _domain() -> Column:
+    return F.regexp_extract("url", r"https://([^/]+)/", 1)
+
+
+def _append(df: DataFrame, out_dir: str, name: str, checkpoint: str):
+    """Start a drain of ``df`` appending to parquet ``out_dir/name``,
+    checkpointed at ``out_dir/checkpoint``."""
+    return (df.writeStream
+            .outputMode("append")
+            .format("parquet")
+            .option("path", os.path.join(out_dir, name))
+            .option("checkpointLocation", os.path.join(out_dir, checkpoint))
+            .trigger(availableNow=True)
+            .start())
 
 
 def stream_extract(spark: SparkSession, pages_dir: str, out_dir: str,
@@ -39,21 +72,14 @@ def stream_extract(spark: SparkSession, pages_dir: str, out_dir: str,
     files; call ``.processAllAvailable()`` / ``.stop()`` on the handle, or
     run with ``trigger(availableNow=True)`` semantics by letting it drain.
     """
-    pages = (
-        spark.readStream.schema(PAGES_SCHEMA)
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
-        .parquet(pages_dir)
-    )
-    extracted = extract_pages(pages, clean=clean)
+    extracted = extract_pages(_pages(spark, pages_dir, max_files_per_trigger),
+                              clean=clean)
     metrics_path = os.path.join(out_dir, "stream_metrics")
 
     def sink(batch_df, batch_id: int):
         batch_df.persist()
         batch_df.write.mode("append").parquet(os.path.join(out_dir, "extracted"))
-        (batch_df.groupBy("partition_id")
-         .agg(F.count("*").alias("url_count"),
-              F.sum("n_words").alias("word_count"))
-         .withColumn("batch_id", F.lit(batch_id))
+        (partition_metrics(batch_df).withColumn("batch_id", F.lit(batch_id))
          .write.mode("append").parquet(metrics_path))
         batch_df.unpersist()
 
@@ -76,29 +102,16 @@ def stream_domain_stats(spark: SparkSession, pages_dir: str, out_dir: str,
     arriving ≤ ``watermark`` late still land in their window, older state is
     finalized and evicted — bounded state at 10^12-doc scale.  Append mode:
     a window emits exactly once, when the watermark passes it."""
-    pages = (
-        spark.readStream.schema(PAGES_SCHEMA)
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
-        .parquet(pages_dir)
-    )
     agg = (
-        pages.withWatermark("warc_ts", watermark)
-        .groupBy(F.window("warc_ts", window).alias("win"),
-                 F.regexp_extract("url", r"https://([^/]+)/", 1).alias("domain"))
+        _pages(spark, pages_dir, max_files_per_trigger)
+        .withWatermark("warc_ts", watermark)
+        .groupBy(F.window("warc_ts", window).alias("win"), _domain().alias("domain"))
         .agg(F.count("*").alias("n_pages"),
              F.sum(F.octet_length("html")).alias("html_bytes"))
         .select(F.col("win.start").alias("win_start"), "domain",
                 "n_pages", "html_bytes")
     )
-    return (
-        agg.writeStream
-        .outputMode("append")
-        .format("parquet")
-        .option("path", os.path.join(out_dir, "domain_stats"))
-        .option("checkpointLocation", os.path.join(out_dir, "_stats_checkpoint"))
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _append(agg, out_dir, "domain_stats", "_stats_checkpoint")
 
 
 def stream_first_seen(spark: SparkSession, pages_dir: str, out_dir: str,
@@ -116,13 +129,8 @@ def stream_first_seen(spark: SparkSession, pages_dir: str, out_dir: str,
     from pyspark.sql import types as T
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    pages = (
-        spark.readStream.schema(PAGES_SCHEMA)
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
-        .parquet(pages_dir)
-        .withColumn("domain", F.regexp_extract("url", r"https://([^/]+)/", 1))
-        .select("domain", "url")
-    )
+    pages = (_pages(spark, pages_dir, max_files_per_trigger)
+             .select(_domain().alias("domain"), "url"))
 
     out_schema = T.StructType([
         T.StructField("domain", T.StringType()),
@@ -145,15 +153,7 @@ def stream_first_seen(spark: SparkSession, pages_dir: str, out_dir: str,
 
     firsts = pages.groupBy("domain").applyInPandasWithState(
         dedup, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout)
-    return (
-        firsts.writeStream
-        .outputMode("append")
-        .format("parquet")
-        .option("path", os.path.join(out_dir, "first_seen"))
-        .option("checkpointLocation", os.path.join(out_dir, "_dedup_checkpoint"))
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _append(firsts, out_dir, "first_seen", "_dedup_checkpoint")
 
 
 def stream_minhash_candidates(spark: SparkSession, pages_dir: str, out_dir: str,
@@ -164,55 +164,24 @@ def stream_minhash_candidates(spark: SparkSession, pages_dir: str, out_dir: str,
     (``osdocr_spark.ops.dedup``), for a crawl feed where duplicates must be
     flagged as they arrive rather than in a nightly batch.
 
-    Shape: a narrow ``mapInPandas`` computes each page's 4-band minhash
-    signature (byte-identical hashing to the batch path: lexicographic min
-    of ``md5(f"{band}:{shingle}")`` over distinct word-3-gram shingles),
-    explodes it to (band, sig) keys, and ``applyInPandasWithState`` keyed by
-    the LSH bucket holds the bucket's seen urls: the first url becomes the
+    Shape: the batch builders
+    :func:`~osdocr_spark.ops.dedup.minhash_signatures` and
+    :func:`~osdocr_spark.ops.dedup.minhash_bands` give each page its 4-band
+    signature as (band, sig) keys — the projection ``d_minhash`` runs, so
+    the hashes are the batch bytes — and ``applyInPandasWithState`` keyed
+    by the LSH bucket holds the bucket's seen urls: the first url becomes the
     bucket anchor, every later arrival emits an (url, anchor, band)
     candidate.  State per bucket is capped at ``bucket_cap`` urls (the same
     degenerate-shingle-flood guard as the batch cap — beyond it the bucket
     stops emitting, a documented coverage bound).  At scale the state store
     shards by bucket key, so a bucket's set never leaves its executor.
     """
-    import hashlib
-
     import pandas as pd
     from pyspark.sql import types as T
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    N_BANDS = 4
-
-    pages = (
-        spark.readStream.schema(PAGES_SCHEMA)
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
-        .parquet(pages_dir)
-        .select("url", "text")
-    )
-
-    sig_schema = T.StructType([
-        T.StructField("band", T.IntegerType()),
-        T.StructField("sig", T.StringType()),
-        T.StructField("url", T.StringType()),
-    ])
-
-    def signatures(batches):
-        for pdf in batches:
-            bands, sigs, urls = [], [], []
-            for url, text in zip(pdf["url"], pdf["text"]):
-                toks = text.split(" ")
-                if len(toks) < 3:
-                    continue
-                shingles = {" ".join(toks[i:i + 3]) for i in range(len(toks) - 2)}
-                for k in range(N_BANDS):
-                    sig = min(hashlib.md5(f"{k}:{s}".encode()).hexdigest()
-                              for s in shingles)
-                    bands.append(k)
-                    sigs.append(sig)
-                    urls.append(url)
-            yield pd.DataFrame({"band": bands, "sig": sigs, "url": urls})
-
-    keyed = pages.mapInPandas(signatures, sig_schema)
+    pages = _pages(spark, pages_dir, max_files_per_trigger).select("url", "text")
+    keyed = minhash_bands(minhash_signatures(pages, "url"), "url")
 
     out_schema = T.StructType([
         T.StructField("url", T.StringType()),
@@ -243,15 +212,7 @@ def stream_minhash_candidates(spark: SparkSession, pages_dir: str, out_dir: str,
 
     cands = keyed.groupBy("band", "sig").applyInPandasWithState(
         pair_up, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout)
-    return (
-        cands.writeStream
-        .outputMode("append")
-        .format("parquet")
-        .option("path", os.path.join(out_dir, "minhash_candidates"))
-        .option("checkpointLocation", os.path.join(out_dir, "_minhash_checkpoint"))
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _append(cands, out_dir, "minhash_candidates", "_minhash_checkpoint")
 
 
 def stream_simhash_dups(spark: SparkSession, pages_dir: str, out_dir: str,
@@ -260,20 +221,21 @@ def stream_simhash_dups(spark: SparkSession, pages_dir: str, out_dir: str,
     """Streaming SimHash near-dup PAIRS: the online companion to the batch
     ``d_simhash`` signatures — emits (url, other, hamming) as pages arrive.
 
-    Hashing is byte-identical to the batch operator: per token, bit b votes
-    ±1 by the parity of the b-th md5 hex digit; signature bit = sign of the
-    vote sum.  Candidate routing is the pigeonhole banding of the 16-bit
-    signature into 4×4-bit chunks: Hamming distance ≤ 3 forces at least one
-    identical chunk, so keying the state store by (band, chunk) finds every
-    qualifying pair while each bucket holds only ~1/16 of the corpus.  Every
-    arrival compares against all stored bucket members (exact Hamming
-    check), so below the cap the emitted pair set is arrival-order
-    independent.  A pair whose signatures agree on SEVERAL chunks would
-    match in several band buckets; each bucket emits only if no LOWER band's
-    chunks also agree — BELOW the cap both full signatures are in that
-    lower bucket's state, so every qualifying pair is emitted EXACTLY once,
-    from its lowest matching band (ADVICE r3 item 1: the old per-band
-    multiplicity made a pair-counting consumer over-count).
+    The signature is the batch operator's own projection,
+    :func:`~osdocr_spark.ops.dedup.simhash_signatures` (per token, bit b
+    votes ±1 by the parity of the b-th md5 hex digit; signature bit = sign
+    of the vote sum).  Candidate routing is the pigeonhole banding of the
+    16-bit signature into 4×4-bit chunks: Hamming distance ≤ 3 forces at
+    least one identical chunk, so keying the state store by (band, chunk)
+    finds every qualifying pair while each bucket holds only ~1/16 of the
+    corpus.  Every arrival compares against all stored bucket members
+    (exact Hamming check), so below the cap the emitted pair set is
+    arrival-order independent.  A pair whose signatures agree on SEVERAL
+    chunks would match in several band buckets; each bucket emits only if
+    no LOWER band's chunks also agree — BELOW the cap both full signatures
+    are in that lower bucket's state, so every qualifying pair is emitted
+    EXACTLY once, from its lowest matching band (ADVICE r3 item 1: the old
+    per-band multiplicity made a pair-counting consumer over-count).
 
     Flood-cap semantics (ADVICE r4): state per bucket is capped at
     ``bucket_cap`` members; a full bucket stops ADMITTING but keeps
@@ -293,45 +255,16 @@ def stream_simhash_dups(spark: SparkSession, pages_dir: str, out_dir: str,
     re-emits its whole output anyway.  The stream therefore assumes urls
     are unique across input files.  At scale the state store shards by
     bucket key."""
-    import hashlib
-
     import pandas as pd
     from pyspark.sql import types as T
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    pages = (
-        spark.readStream.schema(PAGES_SCHEMA)
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
-        .parquet(pages_dir)
-        .select("url", "text")
-    )
-
-    key_schema = T.StructType([
-        T.StructField("band", T.IntegerType()),
-        T.StructField("chunk", T.IntegerType()),
-        T.StructField("url", T.StringType()),
-        T.StructField("sig", T.IntegerType()),
-    ])
-
-    def signatures(batches):
-        for pdf in batches:
-            bands, chunks, urls, sigs = [], [], [], []
-            for url, text in zip(pdf["url"], pdf["text"]):
-                votes = [0] * 16
-                for t in text.split(" "):
-                    h = hashlib.md5(t.encode("utf-8")).hexdigest()
-                    for b in range(16):
-                        votes[b] += (int(h[b], 16) % 2) * 2 - 1
-                sig = sum(1 << b for b in range(16) if votes[b] > 0)
-                for band in range(4):
-                    bands.append(band)
-                    chunks.append((sig >> (4 * band)) & 0xF)
-                    urls.append(url)
-                    sigs.append(sig)
-            yield pd.DataFrame({"band": bands, "chunk": chunks,
-                                "url": urls, "sig": sigs})
-
-    keyed = pages.mapInPandas(signatures, key_schema)
+    pages = _pages(spark, pages_dir, max_files_per_trigger).select("url", "text")
+    keyed = (simhash_signatures(pages, "url")
+             .select("url", F.col("simhash").cast("int").alias("sig"),
+                     F.explode(F.sequence(F.lit(0), F.lit(3))).alias("band"))
+             .select("band", F.expr("shiftright(sig, 4 * band) & 15").alias("chunk"),
+                     "url", "sig"))
 
     out_schema = T.StructType([
         T.StructField("url", T.StringType()),
@@ -384,12 +317,4 @@ def stream_simhash_dups(spark: SparkSession, pages_dir: str, out_dir: str,
 
     dups = keyed.groupBy("band", "chunk").applyInPandasWithState(
         pair_up, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout)
-    return (
-        dups.writeStream
-        .outputMode("append")
-        .format("parquet")
-        .option("path", os.path.join(out_dir, "simhash_dups"))
-        .option("checkpointLocation", os.path.join(out_dir, "_simhash_checkpoint"))
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _append(dups, out_dir, "simhash_dups", "_simhash_checkpoint")

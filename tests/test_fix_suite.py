@@ -450,13 +450,12 @@ def random_blocks(rng, n):
     return blocks
 
 
-def random_pages(seed, count, big=True):
-    """``count`` seeded random pages of 1–39 blocks; with ``big`` the last
-    one has 320 blocks instead."""
+def random_pages(seed, count):
+    """``count`` seeded random pages of 1–39 blocks, except the last one,
+    which has 320 blocks."""
     rng = np.random.default_rng(seed)
     sizes = [int(rng.integers(1, 40)) for _ in range(count)]
-    if big:
-        sizes[-1] = 320
+    sizes[-1] = 320
     return [document(*random_blocks(rng, n), url=f"r{seed}-{i}") for i, n in enumerate(sizes)]
 
 
@@ -480,14 +479,15 @@ def test_clean_doc_matches_object_reference(docs):
 
 def test_row_rules_match_object_reference():
     """The row rules outside ``clean_doc`` against the object-model
-    reference on 150 random block sets: every ``Document`` column equal
-    after ``unite_blocks``, ``remove_solo_words``, ``find_text_titles``,
-    ``remove_blocks_inside`` and ``split_whitespaces`` (whose lines here,
-    unlike in ``clean_doc``, may hold no confident word)."""
+    reference on 150 random block sets, the last of 320 blocks: every
+    ``Document`` column equal after ``unite_blocks``,
+    ``remove_solo_words``, ``find_text_titles``, ``remove_blocks_inside``
+    and ``split_whitespaces`` (whose lines here, unlike in ``clean_doc``,
+    may hold no confident word)."""
     rules = {"unite_blocks": (), "remove_solo_words": (), "find_text_titles": (15, 5),
              "split_whitespaces": (10.0,)}
     changed = dict.fromkeys([*rules, "remove_blocks_inside"], 0)
-    for doc in random_pages(11, 150, big=False):
+    for doc in random_pages(11, 150):
         rules["remove_blocks_inside"] = (int(doc.b_id[len(doc.b_id) // 2]),)
         for name, args in rules.items():
             p = FX.Page(doc)

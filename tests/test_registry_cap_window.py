@@ -26,9 +26,13 @@ def _touched_since_round_tag() -> set[str]:
     """Repo-relative paths changed (committed or working tree) since the
     most recent commit whose subject starts with ``round N:`` — the driver's
     end-of-round snapshot, i.e. the baseline the current round builds on."""
-    base = subprocess.run(
+    log = subprocess.run(
         ["git", "log", "--grep", "^round [0-9]*:", "-n", "1", "--format=%H"],
-        cwd=REPO, capture_output=True, text=True, check=True).stdout.strip()
+        cwd=REPO, capture_output=True, text=True)
+    if "not a git repository" in log.stderr:
+        pytest.skip("not a git checkout (e.g. a `git archive` export)")
+    log.check_returncode()
+    base = log.stdout.strip()
     if not base:
         pytest.skip("no round tag commit found (fresh repo)")
     diff = subprocess.run(
