@@ -419,21 +419,6 @@ class Document:
         bounds = starts.tolist()
         return ["".join(plist[s:e]) for s, e in zip(bounds[:-1], bounds[1:])]
 
-    def block_is_text_width(self, bi: int, text_width: float, mean_width: float | None = None,
-                            rng: float = 0.3, conf: int = -1) -> bool:
-        """``is_text_width`` (``ocr_tree.py:561-568``)."""
-        mw = mean_width if mean_width else self.block_char_mean_width(bi, conf)
-        return text_width * (1 - rng) <= mw <= text_width * (1 + rng)
-
-    def block_text_is_title(self, bi: int, normal_text_size: float,
-                            conf: int = 0, rng: float = 0.1) -> bool:
-        """``text_is_title`` (``ocr_tree.py:579-585``): not vertical, not
-        normal-sized, and at least normal height."""
-        mh = self.block_mean_word_height(bi)
-        return (not self.block_is_vertical_text(bi, conf)
-                and not self.block_is_text_size(bi, normal_text_size, rng=rng)
-                and mh >= normal_text_size)
-
     def conf_sum(self, bi: int | None = None) -> tuple[int, int]:
         """(Σ conf, count) partial aggregate (``conf_sum``,
         ``ocr_tree.py:1109-1120`` — literally a hand-written partial+final

@@ -37,7 +37,7 @@ L, R, T, B = 0, 1, 2, 3
 __all__ = [
     "L", "R", "T", "B", "box", "width", "height", "area", "center",
     "is_inside", "intersects", "intersect_area_box", "within_vertical",
-    "within_horizontal", "same_level", "distance_to",
+    "within_horizontal", "distance_to",
     "pair_is_inside", "pair_intersects", "pair_intersect_area_box", "pair_inter_area",
     "pair_within_vertical", "pair_within_horizontal", "pair_distance_to",
     "remove_box_area",
@@ -153,11 +153,6 @@ def within_horizontal(a: np.ndarray, b: np.ndarray, rng: float = 0.0,
         wb = width(b) * rng
         hit = hit | ((b[..., L] - wb <= a[..., L]) & (b[..., R] + wb >= a[..., R]))
     return hit
-
-
-def same_level(a: np.ndarray, b: np.ndarray) -> np.ndarray:
-    """Either-axis alignment (``Box.same_level_box``, ``box.py:159-163``)."""
-    return within_horizontal(a, b) | within_vertical(a, b)
 
 
 _BORDER_POINTS = {"left", "right", "top", "bottom"}

@@ -10,6 +10,11 @@ the driver's pyspark instead of Spark's zips, which every task would
 otherwise rescan before its UDF runs (0.15-0.25 s per task, Python 3.11 on a
 4-vCPU host). The package root goes on ``spark.executorEnv.PYTHONPATH`` so
 workers find that module even when the driver runs outside the checkout.
+
+Under ``spark-submit`` the JVM is up before this process starts, and Python
+finds it through ``PYSPARK_GATEWAY_PORT``; the master that launch set
+(``--master``, or ``local[*]`` by default) stays, and ``local[cpus]`` is the
+master only of a session whose JVM this process starts itself.
 """
 
 from __future__ import annotations
@@ -35,9 +40,11 @@ def get_spark(app: str = "osdocr-spark", cpus: int | None = None,
                 "NUMEXPR_NUM_THREADS"):
         os.environ.setdefault(var, "1")
     worker_path = os.pathsep.join(filter(None, [_ROOT, os.environ.get("PYTHONPATH")]))
+    builder = SparkSession.builder
+    if "PYSPARK_GATEWAY_PORT" not in os.environ:   # no spark-submit launch
+        builder = builder.master(f"local[{cpus}]")
     return (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName(app)
+        builder.appName(app)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

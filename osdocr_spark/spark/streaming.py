@@ -15,9 +15,10 @@ a streaming deployment is just ``readStream`` → the same batch plans →
   :func:`~osdocr_spark.ops.dedup.simhash_signatures`, so a streamed page
   hashes to the bytes ``d_minhash``/``d_simhash`` give it.  Stateful
   companions: :func:`stream_domain_stats` (watermarked windowed
-  aggregation) and three ``applyInPandasWithState`` operators —
-  :func:`stream_first_seen` (crawl dedup), :func:`stream_minhash_candidates`
-  and :func:`stream_simhash_dups` (near-dup pairing by LSH bucket).
+  aggregation), :func:`stream_first_seen` (crawl dedup on the native
+  streaming ``dropDuplicates``) and two ``applyInPandasWithState``
+  operators, :func:`stream_minhash_candidates` and
+  :func:`stream_simhash_dups` (near-dup pairing by LSH bucket).
 - **sink**: parquet append with checkpointing (:func:`_append`) —
   exactly-once per file via the streaming file-source log, which *is* the
   resume story for the streaming deployment (batch resume lives in
@@ -116,43 +117,20 @@ def stream_domain_stats(spark: SparkSession, pages_dir: str, out_dir: str,
 
 def stream_first_seen(spark: SparkSession, pages_dir: str, out_dir: str,
                       max_files_per_trigger: int = 8):
-    """Custom stateful operator via ``applyInPandasWithState``: streaming
-    first-seen url dedup per domain (the online form of ``d_exact`` — a
-    crawl feed re-delivers urls; only the first sighting passes).
+    """Streaming first-seen url dedup (the online form of ``d_exact`` — a
+    crawl feed re-delivers urls; only the first sighting passes), on Spark's
+    native streaming ``dropDuplicates``.
 
-    State per domain = the set of url hashes seen so far; at scale the state
-    store shards by the group key, so a domain's set never leaves its
-    executor.  No event-time eviction here (NoTimeout): crawl dedup state is
-    permanent by design; a TTL would use GroupStateTimeout.EventTimeTimeout.
+    A url fixes its domain and duplicate rows are identical, so keying the
+    state by url emits the same ``(domain, url)`` rows a per-domain url set
+    would. The state store shards by url hash across the shuffle partitions,
+    so no domain grows one hot state row, and no Python worker runs.  No
+    event-time eviction: crawl dedup state is permanent by design (a TTL
+    would be ``dropDuplicatesWithinWatermark``).
     """
-    import pandas as pd
-    from pyspark.sql import types as T
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    pages = (_pages(spark, pages_dir, max_files_per_trigger)
-             .select(_domain().alias("domain"), "url"))
-
-    out_schema = T.StructType([
-        T.StructField("domain", T.StringType()),
-        T.StructField("url", T.StringType()),
-    ])
-    state_schema = T.StructType([
-        T.StructField("seen", T.ArrayType(T.StringType())),
-    ])
-
-    def dedup(key, pdfs, state: GroupState):
-        seen = set(state.get[0]) if state.exists else set()
-        fresh = []
-        for pdf in pdfs:
-            for url in pdf["url"]:
-                if url not in seen:
-                    seen.add(url)
-                    fresh.append(url)
-        state.update((sorted(seen),))
-        yield pd.DataFrame({"domain": [key[0]] * len(fresh), "url": fresh})
-
-    firsts = pages.groupBy("domain").applyInPandasWithState(
-        dedup, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout)
+    firsts = (_pages(spark, pages_dir, max_files_per_trigger)
+              .select(_domain().alias("domain"), "url")
+              .dropDuplicates(["url"]))
     return _append(firsts, out_dir, "first_seen", "_dedup_checkpoint")
 
 

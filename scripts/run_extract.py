@@ -35,11 +35,10 @@ def main() -> None:
                          "table; a restart never re-parses committed urls")
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
-
     from osdocr_spark.spark.jobs import run_extract_job
+    from osdocr_spark.spark.session import get_spark
 
-    spark = SparkSession.builder.appName("osdocr-extract").getOrCreate()
+    spark = get_spark(app="osdocr-extract")
     summary = run_extract_job(
         spark, args.input, args.output,
         num_partitions=args.partitions, resume=not args.no_resume,

@@ -46,6 +46,33 @@ def test_spark_submit_py_files_launch(tmp_path):
     assert os.path.isdir(os.path.join(out_dir, "metrics"))
 
 
+_SUBMIT_CONF_SCRIPT = """
+import json
+from osdocr_spark.spark.session import get_spark
+conf = get_spark().sparkContext.getConf()
+print(json.dumps({k: conf.get(k) for k in
+                  ("spark.master", "spark.python.daemon.module")}))
+"""
+
+
+@pytest.mark.skipif(shutil.which("spark-submit") is None,
+                    reason="spark-submit not on PATH")
+def test_spark_submit_keeps_master_and_session_defaults(tmp_path):
+    """Under spark-submit, ``get_spark`` keeps the launch's ``--master`` and
+    still applies the engine's session defaults (the worker daemon)."""
+    script = tmp_path / "submit_conf.py"
+    script.write_text(_SUBMIT_CONF_SCRIPT)
+    proc = subprocess.run(
+        ["spark-submit", "--master", "local[2]", str(script)],
+        capture_output=True, text=True, timeout=540, cwd=str(tmp_path),
+        env={**os.environ, "PYTHONPATH": REPO},
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    conf = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert conf["spark.master"] == "local[2]"
+    assert conf["spark.python.daemon.module"] == "osdocr_spark.spark.daemon"
+
+
 _BUCKET_SCRIPT = """
 import os, re, sys
 from pyspark.sql import SparkSession

@@ -148,8 +148,8 @@ def test_stream_minhash_candidates(spark, tmp_path):
 
 
 def test_stream_first_seen_stateful_dedup(spark, tmp_path):
-    """applyInPandasWithState: re-delivered urls are suppressed across
-    micro-batches (per-domain state survives between batches)."""
+    """Streaming dedup: re-delivered urls are suppressed across
+    micro-batches (the dedup state survives between batches)."""
     from osdocr_spark.spark.jobs import load_pages
     from osdocr_spark.spark.streaming import stream_first_seen
 
@@ -167,6 +167,41 @@ def test_stream_first_seen_stateful_dedup(spark, tmp_path):
     got = spark.read.parquet(os.path.join(out_dir, "first_seen"))
     assert got.count() == 500          # every url exactly once
     assert got.select("url").distinct().count() == 500
+
+
+def test_stream_first_seen_native_dedup(spark, tmp_path):
+    """Crawl dedup runs on Spark's streaming ``dropDuplicates``: the sink
+    holds exactly the first sighting of every url, across domains, across
+    micro-batches and within one file, and every stateful operator of every
+    micro-batch is the native ``dedupe`` (no Python state function)."""
+    import datetime
+
+    from osdocr_spark.spark.stages import PAGES_SCHEMA
+    from osdocr_spark.spark.streaming import stream_first_seen
+
+    pages_dir = str(tmp_path / "pages")
+    out_dir = str(tmp_path / "out")
+    ts = datetime.datetime(2024, 1, 1)
+    files = [
+        ["a.org/1", "a.org/2", "b.net/1", "a.org/1", "c.com/1"],  # in-file repeat
+        ["a.org/2", "b.net/2", "c.com/1", "c.com/2"],             # re-delivers 2
+        ["b.net/1", "b.net/2", "a.org/3", "c.com/3"],             # re-delivers 2
+    ]
+    for i, paths in enumerate(files):
+        rows = [(f"https://{p}", ts, b"", "t", "en") for p in paths]
+        _write_one_file(spark.createDataFrame(rows, PAGES_SCHEMA), pages_dir,
+                        1_700_000_000 + 100 * i)
+
+    q = stream_first_seen(spark, pages_dir, out_dir, max_files_per_trigger=1)
+    q.awaitTermination(300)
+
+    got = sorted((r["domain"], r["url"]) for r in
+                 spark.read.parquet(os.path.join(out_dir, "first_seen")).collect())
+    assert got == sorted({(p.split("/")[0], f"https://{p}")
+                          for paths in files for p in paths})
+    ops = [op.operatorName for p in q.recentProgress for op in p.stateOperators]
+    assert len(q.recentProgress) >= 3
+    assert ops and set(ops) == {"dedupe"}
 
 
 def test_stream_simhash_dups(spark, tmp_path):
