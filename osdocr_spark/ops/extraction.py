@@ -30,9 +30,9 @@ from ..kernels.info_extract import journal_template_sections
 from ..kernels.order import sort_topologic_order, topologic_order_context
 from ..kernels.order_naive import reading_order_naive, reading_order_naive_context
 from ..kernels.pipeline import extract_document
-from ..spark.jobs import load_pages
+from ..spark.jobs import load_pages, read_documents
 from ..spark.stages import (URL_DOMAINS, articles_from_pages, blocks_from_pages,
-                            extract_docs, extract_pages, map_docs)
+                            extract_docs, extract_documents_fused, extract_pages, map_docs)
 
 __all__ = ["QUERIES", "ORACLES"]
 
@@ -44,14 +44,7 @@ def extract_text(spark, sf_dir):
     production plan shape — scan-fused single Python stage (synthesis and
     extraction in one Arrow hop; ``extract_pages`` over a materialized pages
     table is exercised by the noisy/multi-article gauntlets below)."""
-    import os as _os
-    from ..spark.stages import extract_documents_fused, salted_repartition
-    docs = spark.read.parquet(_os.path.join(sf_dir, "documents.parquet"))
-    # 1× cores (re-measured round 2: kernel is ~2× faster, so the old 4×
-    # straggler overcommit now just pays task overhead — 3840 vs 3119 docs/s)
-    docs = salted_repartition(
-        docs, spark.sparkContext.defaultParallelism, key="doc_id")
-    return extract_documents_fused(docs).select("url", "text")
+    return extract_documents_fused(read_documents(spark, sf_dir)).select("url", "text")
 
 
 _O_TEXT = f"""

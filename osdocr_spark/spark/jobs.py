@@ -10,25 +10,30 @@ local parquet and mapped 1:1 onto Iceberg for a real cluster:
 - **lineage + metrics** — the extraction stage stamps each output row with
   its task partition id; :func:`run_extract_job` aggregates a per-partition
   ``metrics`` table (:func:`partition_metrics`: url, word, character and
-  article counts) in the same pass.
+  article counts) once per run over the committed ``extracted`` table, and
+  sums its returned counters from those rows.
   On Iceberg this table is appended per snapshot commit.
-- **checkpoint / resume** — the output table is the checkpoint: on restart
-  the job anti-joins already-committed urls and processes only the
+- **checkpoint / resume** — each stage's output table is its checkpoint: on
+  restart the stage anti-joins already-committed urls and processes only the
   remainder (`resume=True`).  With Iceberg this is "read the last committed
-  snapshot"; on plain parquet we read the directory if present.  The write
-  itself is atomic per task file; a torn job re-runs only missing urls.
+  snapshot"; on plain parquet we read the directory, if present, with the
+  schema the stage writes.  The write itself is atomic per task file; a torn
+  job re-runs only missing urls, and an unreadable table fails the job.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from .stages import extract_pages, pages_from_documents, salted_repartition
+from .stages import (EXTRACTED_SCHEMA, PARSED_SCHEMA, extract_pages, extract_parsed,
+                     pages_from_documents, parse_pages, salted_repartition)
 
-__all__ = ["run_extract_job", "partition_metrics", "load_pages",
+__all__ = ["run_extract_job", "partition_metrics", "read_documents", "load_pages",
            "load_pages_from_hocr_dir", "load_parsed_from_json_dir"]
 
 
@@ -68,23 +73,29 @@ def load_parsed_from_json_dir(spark: SparkSession, json_dir: str,
     )
 
 
+def read_documents(spark: SparkSession, sf_dir: str, num_partitions: int | None = None,
+                   salt: int = 0) -> DataFrame:
+    """The driver's ``documents`` table, scanned with its declared columns
+    (no schema-inference job) and salted-repartitioned for the
+    per-document kernels."""
+    docs = spark.read.schema("doc_id bigint, text string, lang string").parquet(
+        os.path.join(sf_dir, "documents.parquet"))
+    if num_partitions is None:
+        # a small single-file parquet scans as ONE partition; 1× cores beat
+        # the old 4× overcommit once task overhead dominated (3840 vs 3119
+        # docs/s at sf0.1/local[32]), and the salted hash keeps them uniform
+        num_partitions = spark.sparkContext.defaultParallelism
+    return salted_repartition(docs, num_partitions, salt=salt, key="doc_id")
+
+
 def load_pages(spark: SparkSession, sf_dir: str, num_partitions: int | None = None,
                salt: int = 0, noisy: bool = False, multi_article: bool = False,
                adversarial: bool = False) -> DataFrame:
     """Synthesize the Common-Crawl-shaped ``pages`` table from the driver's
     ``documents`` parquet (no external data), salted-repartitioned for the
     per-document kernels."""
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-    if num_partitions is None:
-        # a small single-file parquet scans as ONE partition — without this
-        # the Arrow kernels run on one core regardless of cluster size.
-        # 1× cores: the round-1 4× straggler overcommit was re-measured after
-        # the round-2 kernel vectorization — with per-doc cost halved, task
-        # overhead dominates and 1× wins (3840 vs 3119 docs/s at
-        # sf0.1/local[32]); the salted hash keeps partitions uniform
-        num_partitions = spark.sparkContext.defaultParallelism
-    docs = salted_repartition(docs, num_partitions, salt=salt, key="doc_id")
-    return pages_from_documents(docs, noisy=noisy, multi_article=multi_article,
+    return pages_from_documents(read_documents(spark, sf_dir, num_partitions, salt),
+                                noisy=noisy, multi_article=multi_article,
                                 adversarial=adversarial)
 
 
@@ -101,15 +112,21 @@ def partition_metrics(extracted: DataFrame) -> DataFrame:
     )
 
 
-def _resume_done(spark: SparkSession, path: str, resume: bool) -> DataFrame | None:
-    """urls already committed at ``path`` (the last snapshot on Iceberg),
-    or None when starting fresh."""
+def _commit(stage: Callable[[DataFrame], DataFrame], todo: DataFrame, path: str,
+            schema: T.StructType, resume: bool) -> DataFrame:
+    """One checkpointed stage: run ``stage`` over the rows of ``todo`` whose
+    url is not committed at ``path`` yet, append them (overwrite when
+    nothing is committed), and return the whole committed table.  Both reads
+    use the ``schema`` the stage writes, so a directory without part files
+    (a killed job's ``_temporary/``) reads as empty, and any other read
+    error fails the job instead of replacing committed output."""
+    spark = todo.sparkSession
     if resume and os.path.isdir(path):
-        try:
-            return spark.read.parquet(path).select("url").distinct()
-        except Exception:
-            return None
-    return None
+        done = spark.read.schema(schema).parquet(path).select("url")
+        stage(todo.join(done, on="url", how="left_anti")).write.mode("append").parquet(path)
+    else:
+        stage(todo).write.mode("overwrite").parquet(path)
+    return spark.read.schema(schema).parquet(path)
 
 
 def run_extract_job(spark: SparkSession, sf_dir: str, out_dir: str,
@@ -117,57 +134,37 @@ def run_extract_job(spark: SparkSession, sf_dir: str, out_dir: str,
                     noisy: bool = False, clean: bool = False,
                     per_stage: bool = False) -> dict:
     """Extract every page; write ``extracted`` + per-partition ``metrics``
-    parquet tables under ``out_dir``.  Returns summary counters.
+    parquet tables under ``out_dir``.  Returns summary counters: ``urls``
+    and ``words`` over the whole committed ``extracted`` table, summed from
+    its ``metrics`` rows.
 
     Resume semantics: if ``out_dir/extracted`` exists and ``resume``, urls
-    already present are skipped via a broadcast-friendly left-anti join on
-    the committed checkpoint (Iceberg: the last committed snapshot).
+    already present are skipped via a left-anti join on the committed
+    checkpoint (Iceberg: the last committed snapshot); a committed table
+    that cannot be read fails the job instead of being overwritten.
 
     ``per_stage=True`` additionally checkpoints the parse stage as a
     ``parsed`` table (the reference's per-stage result-JSON discipline,
     ``O/pipeline.py:803-817``, in table form): stage 1 parses only urls
     missing from ``out_dir/parsed``; stage 2 extracts — from the checkpoint,
-    never re-parsing — only urls missing from ``out_dir/extracted``.  A job
-    killed between the stages resumes with zero re-parses.  At 10^12 docs
-    this is the difference between re-running a failed categorize stage and
-    re-running the whole corpus parse."""
-    pages = load_pages(spark, sf_dir, num_partitions=num_partitions, noisy=noisy)
-    extracted_path = os.path.join(out_dir, "extracted")
-    metrics_path = os.path.join(out_dir, "metrics")
-
+    never re-parsing — only urls missing from ``out_dir/extracted``.  Both
+    stages commit by the same rule.  A job killed between the stages
+    resumes with zero re-parses.  At 10^12 docs this is the difference
+    between re-running a failed categorize stage and re-running the whole
+    corpus parse."""
+    source = load_pages(spark, sf_dir, num_partitions=num_partitions, noisy=noisy)
+    paths = {"extracted_path": os.path.join(out_dir, "extracted"),
+             "metrics_path": os.path.join(out_dir, "metrics")}
+    extract = extract_pages
     if per_stage:
-        from .stages import extract_parsed, parse_pages
-        parsed_path = os.path.join(out_dir, "parsed")
-        done_parsed = _resume_done(spark, parsed_path, resume)
-        todo = pages
-        if done_parsed is not None:
-            todo = todo.join(done_parsed, on="url", how="left_anti")
-        parse_pages(todo).write.mode(
-            "append" if done_parsed is not None else "overwrite"
-        ).parquet(parsed_path)
+        paths["parsed_path"] = os.path.join(out_dir, "parsed")
+        source = _commit(parse_pages, source, paths["parsed_path"], PARSED_SCHEMA, resume)
+        extract = extract_parsed
+    extracted = _commit(lambda df: extract(df, clean=clean), source,
+                        paths["extracted_path"], EXTRACTED_SCHEMA, resume)
 
-        parsed = spark.read.parquet(parsed_path)
-        done_urls = _resume_done(spark, extracted_path, resume)
-        if done_urls is not None:
-            parsed = parsed.join(done_urls, on="url", how="left_anti")
-        extracted = extract_parsed(parsed, clean=clean)
-    else:
-        done_urls = _resume_done(spark, extracted_path, resume)
-        if done_urls is not None:
-            pages = pages.join(done_urls, on="url", how="left_anti")
-        extracted = extract_pages(pages, clean=clean)
-
-    mode = "append" if done_urls is not None else "overwrite"
-    extracted.write.mode(mode).parquet(extracted_path)
-
-    result = spark.read.parquet(extracted_path)
-    partition_metrics(result).write.mode("overwrite").parquet(metrics_path)
-    summary = result.agg(
-        F.count("*").alias("urls"),
-        F.sum("n_words").alias("words"),
-    ).collect()[0]
-    out = {"urls": int(summary["urls"]), "words": int(summary["words"]),
-           "extracted_path": extracted_path, "metrics_path": metrics_path}
-    if per_stage:
-        out["parsed_path"] = os.path.join(out_dir, "parsed")
-    return out
+    metrics = partition_metrics(extracted)
+    metrics.write.mode("overwrite").parquet(paths["metrics_path"])
+    rows = spark.read.schema(metrics.schema).parquet(paths["metrics_path"]).collect()
+    return {"urls": sum(r["url_count"] for r in rows),
+            "words": sum(r["word_count"] for r in rows), **paths}

@@ -19,6 +19,7 @@ filters on ``url``/``lang`` push down into the parquet scan.
 from __future__ import annotations
 
 from collections.abc import Callable, Iterable, Iterator
+from datetime import datetime, timedelta
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -84,6 +85,7 @@ BLOCKS_SCHEMA = T.StructType([
 #: url scheme — pure arithmetic on doc_id so the DuckDB oracle can rebuild it
 URL_FMT = "https://news-{dom}.example.com/a/{doc_id}"
 URL_DOMAINS = 23  # Zipf-ish domain-key skew lever for salting demos
+_WARC_EPOCH = datetime(2024, 1, 1)
 
 
 def url_for_doc(doc_id: int) -> str:
@@ -100,19 +102,13 @@ def pages_from_documents(documents: DataFrame, noisy: bool = False,
     suite must repair; ``adversarial=True`` renders the irregular-layout
     gauntlet (see ``kernels.corpus.generate_page``)."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame({
-                "url": [url_for_doc(int(d)) for d in pdf["doc_id"]],
-                "warc_ts": pd.Timestamp("2024-01-01") + pd.to_timedelta(pdf["doc_id"], unit="s"),
-                "html": [generate_page(int(d), t, noisy=noisy, multi_article=multi_article,
-                                       adversarial=adversarial)
-                         for d, t in zip(pdf["doc_id"], pdf["text"])],
-                "text": pdf["text"],
-                "lang": pdf["lang"],
-            })
+    def per_doc(doc_id, text, lang, pid):
+        doc_id = int(doc_id)
+        html = generate_page(doc_id, text, noisy=noisy, multi_article=multi_article,
+                             adversarial=adversarial)
+        return [(url_for_doc(doc_id), _WARC_EPOCH + timedelta(seconds=doc_id), html, text, lang)]
 
-    return documents.select("doc_id", "text", "lang").mapInPandas(gen, PAGES_SCHEMA)
+    return map_docs(documents.select("doc_id", "text", "lang"), per_doc, PAGES_SCHEMA)
 
 
 def map_docs(df: DataFrame, per_doc: Callable[..., Iterable[tuple]],

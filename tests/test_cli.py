@@ -49,9 +49,12 @@ def test_spark_submit_py_files_launch(tmp_path):
 _SUBMIT_CONF_SCRIPT = """
 import json
 from osdocr_spark.spark.session import get_spark
-conf = get_spark().sparkContext.getConf()
-print(json.dumps({k: conf.get(k) for k in
-                  ("spark.master", "spark.python.daemon.module")}))
+spark = get_spark()
+conf = spark.sparkContext.getConf()
+out = {k: conf.get(k) for k in
+       ("spark.master", "spark.python.daemon.module", "spark.driver.memory")}
+out["shuffle_partitions"] = spark.conf.get("spark.sql.shuffle.partitions")
+print(json.dumps(out))
 """
 
 
@@ -59,18 +62,22 @@ print(json.dumps({k: conf.get(k) for k in
                     reason="spark-submit not on PATH")
 def test_spark_submit_keeps_master_and_session_defaults(tmp_path):
     """Under spark-submit, ``get_spark`` keeps the launch's ``--master`` and
-    still applies the engine's session defaults (the worker daemon)."""
+    ``--driver-memory``, sizes shuffle partitions by the launch's cores
+    rather than ``SPARK_GRAFT_CPUS``, and still applies the engine's session
+    defaults (the worker daemon)."""
     script = tmp_path / "submit_conf.py"
     script.write_text(_SUBMIT_CONF_SCRIPT)
     proc = subprocess.run(
-        ["spark-submit", "--master", "local[2]", str(script)],
+        ["spark-submit", "--master", "local[2]", "--driver-memory", "1g", str(script)],
         capture_output=True, text=True, timeout=540, cwd=str(tmp_path),
-        env={**os.environ, "PYTHONPATH": REPO},
+        env={**os.environ, "PYTHONPATH": REPO, "SPARK_GRAFT_CPUS": "32"},
     )
     assert proc.returncode == 0, proc.stderr[-2000:]
     conf = json.loads(proc.stdout.strip().splitlines()[-1])
     assert conf["spark.master"] == "local[2]"
     assert conf["spark.python.daemon.module"] == "osdocr_spark.spark.daemon"
+    assert conf["spark.driver.memory"] == "1g"
+    assert conf["shuffle_partitions"] == "8"   # max(2 cores, 8), not 32
 
 
 _BUCKET_SCRIPT = """

@@ -215,6 +215,61 @@ def test_job_resume_per_stage_no_reparse(spark, tmp_path):
     assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
 
 
+def test_job_per_stage_spark_job_count(spark, tmp_path):
+    """A fresh per-stage run costs the salted shuffle, the two stage writes
+    and one metrics aggregation: no schema-inference read of a table whose
+    schema the package declares, and no second scan for the summary."""
+    from osdocr_spark.spark.jobs import run_extract_job
+
+    sc = spark.sparkContext
+    tag = "test_job_per_stage_spark_job_count"
+    sc.setJobGroup(tag, tag)
+    try:
+        r = run_extract_job(spark, SF, str(tmp_path / "out"), num_partitions=8,
+                            per_stage=True)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert r["urls"] == 500
+    jobs = sc.statusTracker().getJobIdsForGroup(tag)
+    assert len(jobs) <= 6, sorted(jobs)
+
+
+def test_job_resume_fails_on_unreadable_checkpoint(spark, tmp_path):
+    """Committed output that cannot be read fails the resume; it is never
+    silently overwritten."""
+    from py4j.protocol import Py4JJavaError
+    from osdocr_spark.spark.jobs import run_extract_job
+
+    out = str(tmp_path / "out")
+    extracted = run_extract_job(spark, SF, out, num_partitions=8)["extracted_path"]
+    parts = sorted(f for f in os.listdir(extracted) if f.endswith(".parquet"))
+    assert parts
+    for f in parts:
+        with open(os.path.join(extracted, f), "wb") as fh:
+            fh.write(b"not parquet")
+    with pytest.raises(Py4JJavaError):
+        run_extract_job(spark, SF, out, num_partitions=8)
+    assert sorted(f for f in os.listdir(extracted) if f.endswith(".parquet")) == parts
+    for f in parts:
+        with open(os.path.join(extracted, f), "rb") as fh:
+            assert fh.read() == b"not parquet"
+
+
+def test_job_resume_over_torn_checkpoint(spark, tmp_path):
+    """A checkpoint directory a killed job left with only ``_temporary/``
+    holds no committed url: the resume commits every page."""
+    from osdocr_spark.spark.jobs import run_extract_job
+
+    out = tmp_path / "out"
+    torn = out / "extracted" / "_temporary" / "0" / "_temporary" / "attempt_0"
+    torn.mkdir(parents=True)
+    (torn / "part-00000.snappy.parquet").write_bytes(b"torn write")
+    r = run_extract_job(spark, SF, str(out), num_partitions=8)
+    assert r["urls"] == 500
+    got = spark.read.parquet(r["extracted_path"])
+    assert got.count() == 500 and got.select("url").distinct().count() == 500
+
+
 @pytest.mark.parametrize("clean", [False, True])
 def test_document_sources_agree_on_every_column(spark, clean):
     """The document sources feeding the one extraction driver — html bytes
