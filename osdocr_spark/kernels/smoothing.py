@@ -13,9 +13,12 @@ their published definitions:
   bandwidth ``d``.  Histogram lengths follow page geometry, which differs
   from scan to scan, so nothing is built per length: one banded Cholesky
   factor per (λ, d) serves every n (the length-n factor is its leading n
-  rows with the trailing d×d block redone), and its rows settle to a fixed
-  row after a few hundred, so the factor and the solve data it caches stay
-  bounded however long a signal is.  The solve applies the factor block by
+  rows with the trailing d×d block redone).  For the analyzer's (λ, d) its
+  rows settle to a fixed row after a few hundred, so the factor and the
+  solve data it caches stay bounded however long a signal is; for a (λ, d)
+  whose rows do not settle within 8192 rows, the factor's rows grow with
+  the longest signal (d+1 floats a row) while the cached solve data stays
+  bounded (see :class:`_BandFactor`).  The solve applies the factor block by
   block through dense block inverses, in the spirit of the SPIKE banded
   solver (Polizzi & Sameh, 2006): O(n·b) work in a fixed number of numpy
   calls per 2048 samples.
@@ -179,7 +182,11 @@ class _BandFactor:
     λ and d), not by the longest signal seen.  The settle point is decided
     once, when the factor is built, so a smooth never depends on which
     lengths came before it.  Should the rows not settle within
-    ``_MAX_HEAD_ROWS``, later rows are computed exactly on demand."""
+    ``_MAX_HEAD_ROWS`` (λ = 1e5 at d = 3, λ = 1e8 at d = 2), later rows are
+    computed exactly on demand and kept, so the rows grow with the longest
+    signal seen, d+1 floats a row; solve data is cached only for chunks
+    inside the first ``_MAX_HEAD_ROWS`` rows and rebuilt per call past
+    them."""
 
     def __init__(self, lmbda: float, order: int):
         self.lmbda, self.d = lmbda, order
@@ -247,6 +254,8 @@ class _BandFactor:
         lo = c * _CHUNK
         if self.settled is not None and lo - self.d >= len(self.rows):
             c = -1                               # every settled chunk is alike
+        elif lo + _CHUNK + self.d > _MAX_HEAD_ROWS:
+            return _Chunk(self.band(lo, lo + _CHUNK + self.d))   # not kept
         ch = self.chunks.get(c)
         if ch is None:
             ch = self.chunks[c] = _Chunk(self.band(lo, lo + _CHUNK + self.d))
@@ -258,8 +267,9 @@ class _BandFactor:
         size = -(-m // _BLOCK) * _BLOCK
         w = np.zeros(size + d)
         w[:m] = y[:m]
-        for lo in range(0, size, _CHUNK):       # forward: L w = y
-            ch = self.chunk(lo // _CHUNK)
+        chunks = [self.chunk(c) for c in range(-(-size // _CHUNK))]
+        for c, ch in enumerate(chunks):          # forward: L w = y
+            lo = c * _CHUNK
             part = w[lo:min(lo + _CHUNK, size)]
             if lo:
                 part[:d] -= ch.edge @ w[lo - d:lo]
@@ -273,13 +283,12 @@ class _BandFactor:
         zt = k @ (y[m:] - x[:, d - (m - lo):] @ w[lo:m])
         w[lo:m] -= x[:, d - (m - lo):].T @ zt
         w[m:] = 0.0
-        chunks = range((size - 1) // _CHUNK, -1, -1) if size else ()
-        for c in chunks:                       # backward: Lᵀ z = w
+        for c in range(len(chunks) - 1, -1, -1):  # backward: Lᵀ z = w
             lo = c * _CHUNK
             part = w[lo:min(lo + _CHUNK, size)]
             if lo + _CHUNK < size:
-                part[-d:] -= self.chunk(c + 1).edge.T @ w[lo + _CHUNK:lo + _CHUNK + d]
-            part[:] = self.chunk(c).backward(part)
+                part[-d:] -= chunks[c + 1].edge.T @ w[lo + _CHUNK:lo + _CHUNK + d]
+            part[:] = chunks[c].backward(part)
         w[m:m + d] = zt
         return w[:n]
 

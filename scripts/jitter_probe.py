@@ -5,15 +5,15 @@ Every generator page puts its rightmost block at the same x, so every
 fixture page smooths a column histogram of the same length; a kernel whose
 cost depends on histogram lengths repeating looks fine on the fixtures and
 not on real scans.  This probe makes that visible without touching the
-generator, a fixture or an oracle input: it parses N sf plain pages once,
-then times ``extract_document`` (``clean=False``) over them three ways,
+generator, a fixture or an oracle input: it parses ``DOCS`` sf plain pages
+once, then times ``extract_document`` (``clean=False``) over them three ways,
 
   - as generated;
   - each parsed page shifted right by ``fix.translate_doc`` by a per-page
     offset drawn from [0, 400);
   - the same with offsets from [800, 1200);
 
-and prints ms/doc (``time.process_time``; the best of ``--rounds`` rounds,
+and prints ms/doc (``time.process_time``; the best of ``ROUNDS`` rounds,
 the three ways alternating within a round and each pass on its own freshly
 parsed pages, so host drift hits all three alike) and the Whittaker factor
 builds (misses of the smoothing factor cache) during each way's passes.
@@ -22,8 +22,7 @@ extracted once, cold, and its time and peak RSS growth printed.
 
 Usage::
 
-    python scripts/jitter_probe.py sf_dir [--docs N] [--cpu K] [--seed S]
-                                   [--rounds R]
+    python scripts/jitter_probe.py sf_dir [--cpu K]
 
 ``--cpu K`` pins this process to core K (the figures are single-core).
 """
@@ -37,6 +36,10 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+DOCS = 400      # sf plain pages timed, doc_id < DOCS
+SEED = 0        # seeds the per-page offsets
+ROUNDS = 3      # alternating rounds; each way reports its best
+
 
 def _vm_kb(key: str) -> int:
     """``VmRSS`` / ``VmHWM`` of this process, in kB."""
@@ -47,10 +50,7 @@ def _vm_kb(key: str) -> int:
 def main(argv: list[str] | None = None) -> None:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("sf_dir", help="a generated scale-factor directory (sf0.1)")
-    ap.add_argument("--docs", type=int, default=400)
     ap.add_argument("--cpu", type=int, default=None)
-    ap.add_argument("--seed", type=int, default=0)
-    ap.add_argument("--rounds", type=int, default=3)
     args = ap.parse_args(argv)
     if args.cpu is not None:
         os.sched_setaffinity(0, {args.cpu})
@@ -81,15 +81,15 @@ def main(argv: list[str] | None = None) -> None:
 
     rows = duckdb.sql(
         f"select doc_id, text from '{args.sf_dir}/documents.parquet'"
-        f" where doc_id < {args.docs} order by doc_id").fetchall()
+        f" where doc_id < {DOCS} order by doc_id").fetchall()
     html = [(str(d), generate_page(d, t)) for d, t in rows]
-    rng = np.random.default_rng(args.seed)
+    rng = np.random.default_rng(SEED)
     offsets = {"as generated": None,
                "offset [0, 400)": rng.integers(0, 400, len(html)),
                "offset [800, 1200)": rng.integers(800, 1200, len(html))}
     best = dict.fromkeys(offsets, float("inf"))
     builds = dict.fromkeys(offsets, 0)
-    for _ in range(args.rounds):              # modes alternate within a round
+    for _ in range(ROUNDS):              # modes alternate within a round
         for label, dxs in offsets.items():
             docs = [parse_hocr(h, url=u) for u, h in html]
             if dxs is not None:

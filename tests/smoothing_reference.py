@@ -11,7 +11,8 @@ they replaced, as independent checks (``tests/test_smoothing.py``):
   entries; above that a banded Cholesky factor built per length and applied
   by scalar forward and back substitution;
 - ``find_peaks``: prominences measured for every local maximum, then
-  filtered.
+  filtered.  This reuses the package's ``find_peaks`` with no bar, which
+  never runs the prefilter.
 """
 
 from __future__ import annotations
@@ -20,6 +21,8 @@ from functools import lru_cache
 from math import comb
 
 import numpy as np
+
+from osdocr_spark.kernels import smoothing
 
 
 def _difference_stencil(order: int) -> np.ndarray:
@@ -133,117 +136,14 @@ def whittaker_smooth(y, lmbda: float, order: int) -> np.ndarray:
     return z
 
 
-def _local_maxima(x: np.ndarray) -> np.ndarray:
-    """Indices of local maxima; plateaus resolve to their midpoint (scipy
-    rule).  Strict peaks are found vectorized; only plateau candidates
-    (rare in smoothed signals) are walked in Python."""
-    n = x.shape[0]
-    if n < 3:
-        return np.empty(0, dtype=np.int64)
-    d = np.diff(x)
-    strict = np.nonzero((d[:-1] > 0) & (d[1:] < 0))[0] + 1
-    plateau_starts = np.nonzero((d[:-1] > 0) & (d[1:] == 0))[0] + 1
-    peaks = list(strict)
-    for i in plateau_starts:
-        j = i
-        while j < n - 1 and x[j + 1] == x[i]:
-            j += 1
-        if j < n - 1 and x[j + 1] < x[i]:
-            peaks.append((i + j) // 2)
-    peaks.sort()
-    return np.asarray(peaks, dtype=np.int64)
-
-
-def _prominences(x: np.ndarray, peaks: np.ndarray):
-    """Peak prominences + base indices per the scipy definition
-    (vectorized: window = up to the nearest strictly-higher sample; base =
-    the window minimum, ties resolved to the first occurrence)."""
-    n = x.shape[0]
-    prom = np.empty(len(peaks), dtype=np.float64)
-    left_bases = np.empty(len(peaks), dtype=np.int64)
-    right_bases = np.empty(len(peaks), dtype=np.int64)
-    for pi, p in enumerate(peaks):
-        h = x[p]
-        higher = np.nonzero(x[:p] > h)[0]
-        start = int(higher[-1]) + 1 if len(higher) else 0
-        seg = x[start:p]
-        if len(seg):
-            li = int(np.argmin(seg))
-            left_min = float(seg[li])
-            left_bases[pi] = start + li
-        else:
-            left_min = h
-            left_bases[pi] = p
-        higher = np.nonzero(x[p + 1:] > h)[0]
-        stop = p + 1 + int(higher[0]) if len(higher) else n
-        seg = x[p + 1:stop]
-        if len(seg):
-            ri = int(np.argmin(seg))
-            right_min = float(seg[ri])
-            right_bases[pi] = p + 1 + ri
-        else:
-            right_min = h
-            right_bases[pi] = p
-        prom[pi] = h - max(left_min, right_min)
-    return prom, left_bases, right_bases
-
-
 def find_peaks(x, prominence: float | None = None, width: float | None = None):
-    """scipy-compatible subset of ``scipy.signal.find_peaks``.
-
-    Supports the ``prominence`` and ``width`` filters the reference uses
-    (``ocr_tree_analyser.py:68,180,199,294,307``).  Returns
-    ``(peaks, properties)`` where properties contains ``prominences``,
-    ``left_bases``, ``right_bases`` and — when ``width`` is requested —
-    ``widths``, ``width_heights``, ``left_ips``, ``right_ips``
-    (measured at rel_height=0.5, the scipy default).
-    """
-    x = np.asarray(x, dtype=np.float64)
-    peaks = _local_maxima(x)
-    props: dict[str, np.ndarray] = {}
-    if len(peaks) == 0:
-        props["prominences"] = np.array([])
-        if width is not None:
-            for k in ("widths", "width_heights", "left_ips", "right_ips"):
-                props[k] = np.array([])
+    """``smoothing.find_peaks`` without the prominence prefilter: the
+    package's own call with no bar measures every local maximum's
+    prominence (and width), and the bar is applied afterwards.  Every
+    property is per peak, so filtering last selects what the package's
+    filter-first order selects."""
+    peaks, props = smoothing.find_peaks(x, width=width)
+    if prominence is None:
         return peaks, props
-
-    prom, lb, rb = _prominences(x, peaks)
-    if prominence is not None:
-        keep = prom >= prominence
-        peaks, prom, lb, rb = peaks[keep], prom[keep], lb[keep], rb[keep]
-    props["prominences"] = prom
-    props["left_bases"] = lb
-    props["right_bases"] = rb
-
-    if width is not None:
-        widths = np.empty(len(peaks))
-        wh = np.empty(len(peaks))
-        lips = np.empty(len(peaks))
-        rips = np.empty(len(peaks))
-        for pi, p in enumerate(peaks):
-            height = x[p] - prom[pi] * 0.5
-            wh[pi] = height
-            i = p
-            while i > lb[pi] and x[i] > height:
-                i -= 1
-            if x[i] > height:
-                lip = float(i)
-            else:
-                lip = i + (height - x[i]) / (x[i + 1] - x[i]) if x[i + 1] != x[i] else float(i)
-            i = p
-            while i < rb[pi] and x[i] > height:
-                i += 1
-            if x[i] > height:
-                rip = float(i)
-            else:
-                rip = i - (height - x[i]) / (x[i - 1] - x[i]) if x[i - 1] != x[i] else float(i)
-            lips[pi], rips[pi] = lip, rip
-            widths[pi] = rip - lip
-        keep = widths >= width
-        peaks = peaks[keep]
-        for k, v in (("prominences", prom), ("left_bases", lb), ("right_bases", rb),
-                     ("widths", widths), ("width_heights", wh),
-                     ("left_ips", lips), ("right_ips", rips)):
-            props[k] = v[keep]
-    return peaks, props
+    keep = props["prominences"] >= prominence
+    return peaks[keep], {k: v[keep] for k, v in props.items()}

@@ -101,14 +101,6 @@ def _plateau_signals(rng: np.random.Generator, count: int):
         yield rng.integers(0, 5, n).repeat(rng.integers(1, 4, n)).astype(np.float64)
 
 
-def test_find_peaks_matches_reference_without_prominence():
-    rng = np.random.default_rng(7)
-    for x in _plateau_signals(rng, 300):
-        for width in (None, 1):
-            _same_peaks(find_peaks(x, width=width), ref.find_peaks(x, width=width),
-                        exact=True)
-
-
 def test_find_peaks_prefilter_keeps_peaks_at_the_bar():
     """A peak whose bases reach the signal's minimum has prominence
     exactly ``x[p] − min(x)``; at ``prominence`` equal to that it must be
@@ -125,6 +117,27 @@ def test_find_peaks_prefilter_keeps_peaks_at_the_bar():
     assert hits > 0
     p, props = find_peaks(np.array([0.0, 1.0, 0.0]), prominence=1.0)
     assert list(p) == [1] and list(props["prominences"]) == [1.0]
+
+
+def test_unsettled_factor_matches_reference():
+    """A (λ, d) whose factor rows do not settle within ``_MAX_HEAD_ROWS``
+    (λ = 1e5 at d = 3) computes later rows on demand: it matches the twin
+    at lengths around the end of its head and tail table and past them,
+    and it caches solve data only for chunks inside the head."""
+    lmbda, d = 1e5, 3
+    f = smoothing._factor(lmbda, d)
+    assert f.settled is None
+    top, c, tails = smoothing._MAX_HEAD_ROWS, smoothing._CHUNK, len(f.tails)
+    rng = np.random.default_rng(9)
+    for n in (1211, top + d - 1, top + d, top + d + 1, tails - 1, tails,
+              top + c + d + 1):
+        for y in _signals(n, rng)[:2]:
+            assert _close(whittaker_smooth(y, lmbda, d),
+                          ref.whittaker_smooth(y, lmbda, d)), n
+    cached = set(f.chunks)
+    assert cached and all((k + 1) * c + d <= top for k in cached)
+    whittaker_smooth(rng.random(top + 3 * c), lmbda, d)
+    assert set(f.chunks) == cached
 
 
 def test_whittaker_same_bits_whatever_came_before():
